@@ -74,6 +74,22 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, ByteType, DataType, Da
   * (no atomic rename OR link) this needs a coordination layer, exactly
   * as Delta-on-S3 needs LogStore — documented, not hidden.
   *
+  * REWRITES: every face that replaces data files — the copy-on-write
+  * DML faces (`delete`, `update`, `merge`, `mergeClauses`,
+  * `replaceWhere`), the maintenance faces (`optimize`, `optimizeWhere`,
+  * `compactSmall`, `reorgPurge`) and the merge-on-read faces' post-images
+  * and folds — runs ONE skeleton. The head snapshot is opened once per
+  * operation ([[Head]]: the resolved manifest and its schema, never
+  * re-resolved mid-operation); the rewrite frame is written as one new
+  * data dir by [[Head.rewrite]] (physical column names, the partition
+  * layout, footer stats, row counts, bloom sidecars). A face supplies
+  * only what differs: its stats candidate filter, its touched-file
+  * discovery scan ([[Head.touched]]), its rewrite frame, and its commit —
+  * [[Head.commitDml]] with the face's [[publishDml]] conflict predicate,
+  * or [[Head.commitRewrite]] for maintenance. The two merge-on-read faces
+  * also share the deletion-vector write / fold / commit
+  * ([[commitVectors]]).
+  *
   * Scale notes: every operation here is DRIVER-SIDE METADATA except the
   * data write itself — `history` folds manifest headers (never data),
   * `readVersion` hands Spark an explicit file list (footer-pruned,
@@ -986,10 +1002,7 @@ object VersionedTable {
       validate: Boolean = true): Long = {
     require(name.nonEmpty && !name.contains('|') && !name.contains('='),
       s"bad constraint name: $name")
-    val (hfs, root) = fs(spark, path)
-    val prev = versions(hfs, root).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"addConstraint on empty table at $path"))
-    val m = readManifest(hfs, root, prev)
+    val Head(_, hfs, root, prev, m) = openHead(spark, path, "addConstraint on")
     if (validate && m.files.nonEmpty)
       enforceConstraints(
         alignTo(readVersion(spark, path, prev), snapshotSchema(spark, root, m)),
@@ -1072,10 +1085,7 @@ object VersionedTable {
     require(step != 0L, "identity step must be nonzero")
     require(name.nonEmpty && !name.contains('|') && !name.contains('='),
       s"bad identity column name: $name")
-    val (hfs, root) = fs(spark, path)
-    val prev = versions(hfs, root).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"addIdentityColumn on empty table at $path"))
-    val m = readManifest(hfs, root, prev)
+    val Head(_, hfs, root, prev, m) = openHead(spark, path, "addIdentityColumn on")
     // "creation time" = zero live rows: an empty-batch bootstrap commit
     // may have written a rowless part file, which is still creation
     // (manifest row counts are authoritative and present on every file
@@ -1218,10 +1228,7 @@ object VersionedTable {
       validate: Boolean = true): Long = {
     require(name.nonEmpty && !name.contains('|') && !name.contains('=') &&
       !name.contains('\n'), s"bad generated column name: $name")
-    val (hfs, root) = fs(spark, path)
-    val prev = versions(hfs, root).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"addGeneratedColumn on empty table at $path"))
-    val m = readManifest(hfs, root, prev)
+    val Head(_, hfs, root, prev, m) = openHead(spark, path, "addGeneratedColumn on")
     val schema = snapshotSchema(spark, root, m)
     require(schema.fieldNames.contains(name),
       s"no column $name at $path — generated columns are declared over existing columns")
@@ -1245,10 +1252,7 @@ object VersionedTable {
     * the schema and the data; batches must carry it explicitly again. */
   def dropGeneratedColumn(spark: SparkSession, path: String, name: String,
       ts: String = "1970-01-01T00:00:00Z"): Long = {
-    val (hfs, root) = fs(spark, path)
-    val prev = versions(hfs, root).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"dropGeneratedColumn on empty table at $path"))
-    val m = readManifest(hfs, root, prev)
+    val Head(_, hfs, root, prev, m) = openHead(spark, path, "dropGeneratedColumn on")
     require(m.gens.contains(name), s"no generated column $name at $path")
     val next = prev + 1
     publish(hfs, root, RawManifest(next, ts, s"drop_generated($name)",
@@ -1262,10 +1266,7 @@ object VersionedTable {
     * it still sees (and CDF replay re-derives) the constrained epochs. */
   def dropConstraint(spark: SparkSession, path: String, name: String,
       ts: String = "1970-01-01T00:00:00Z"): Long = {
-    val (hfs, root) = fs(spark, path)
-    val prev = versions(hfs, root).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"dropConstraint on empty table at $path"))
-    val m = readManifest(hfs, root, prev)
+    val Head(_, hfs, root, prev, m) = openHead(spark, path, "dropConstraint on")
     require(m.constraints.contains(name), s"no constraint $name at $path")
     val next = prev + 1
     publish(hfs, root, RawManifest(next, ts, s"drop_constraint($name)",
@@ -1385,13 +1386,6 @@ object VersionedTable {
     validatePcols(pcols, toPhysical(df, cmap).schema, path)
     requireIdentityNotPartition(idSpecs, pcols, cmap, path)
     val next = prev.map(_ + 1).getOrElse(0L)
-    // Data first: a crash after this leaves an orphaned directory that
-    // vacuum reclaims; the table is unchanged until the manifest claims.
-    val dataDir = newDataDir(next)
-    // narrow batch columns upcast to the snapshot types so every NEW
-    // file carries the table's current (possibly widened) types
-    writeDataFiles(alignTypes(df, snapSchema), cmap, pcols, root, dataDir)
-    val (newFiles, newStats, newRows) = listWithStats(hfs, root, dataDir)
     // bloom index config is TABLE metadata: an explicit `bloomIndex` arg
     // sets/updates it; otherwise the persisted config applies, so a
     // plain append to an indexed table keeps its sidecars without the
@@ -1402,8 +1396,12 @@ object VersionedTable {
       else if (mode == "append") prevM.flatMap(_.bloomCfg)
       else None // overwrite without an explicit index drops the config
                 // with the data it described — re-state to keep it
-    cfg.foreach { case (cs, m) =>
-      writeBlooms(spark, hfs, root, dataDir, cs.map(physOf(cmap, _)), m) }
+    // Data first: a crash after this leaves an orphaned directory that
+    // vacuum reclaims; the table is unchanged until the manifest claims.
+    // Narrow batch columns upcast to the snapshot types so every NEW
+    // file carries the table's current (possibly widened) types.
+    val w = writeBatch(spark, hfs, root, next, alignTypes(df, snapSchema),
+      cmap, pcols, cfg)
     // append = DELTA manifest against prev (O(batch) log write — the
     // previous file list is never re-serialized); overwrite/first = full
     // manifest, which must CARRY the constraints and bloom config (delta
@@ -1413,14 +1411,14 @@ object VersionedTable {
     val cfgLine = if (base.isEmpty) cfg
       else if (bloomIndex.nonEmpty && cfg != prevM.flatMap(_.bloomCfg)) cfg
       else None
-    publish(hfs, root, RawManifest(next, ts, mode, base, newFiles,
-      Seq.empty, txn, Some(snapSchema.json), newStats,
+    publish(hfs, root, RawManifest(next, ts, mode, base, w.files,
+      Seq.empty, txn, Some(snapSchema.json), w.stats,
       Map.empty, if (base.isEmpty) prevCks else Map.empty, Set.empty,
       cfgLine, None,
       if (base.isEmpty) prevM.map(_.gens).getOrElse(Map.empty) else Map.empty,
       Set.empty,
       if (base.isEmpty && pcols.nonEmpty) Some(pcols) else None,
-      addRows = newRows,
+      addRows = w.rows,
       // table PROPERTIES survive an overwrite (policy, not data — like
       // constraints); a full manifest must carry them explicitly. A
       // commit that assigned identity values carries the ADVANCED
@@ -1429,7 +1427,7 @@ object VersionedTable {
         val baseProps = prevM.map(_.props).getOrElse(Map.empty)
         if (idSpecs.nonEmpty)
           Some(advanceIdentity(baseProps, idSpecs, idSpecs.keySet, cmap,
-            newStats, path))
+            w.stats, path))
         else if (base.isEmpty) Some(baseProps).filter(_.nonEmpty)
         else None
       }))
@@ -1485,10 +1483,7 @@ object VersionedTable {
     require(cols.nonEmpty && cols.forall(c =>
       !c.contains(",") && !c.contains("|") && !c.contains("=") && !c.contains("\n")),
       s"bad bloom index columns: $cols")
-    val (hfs, root) = fs(spark, path)
-    val prev = versions(hfs, root).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"setBloomIndex on empty table at $path"))
-    val m = readManifest(hfs, root, prev)
+    val Head(_, hfs, root, prev, m) = openHead(spark, path, "setBloomIndex on")
     if (backfill) {
       val local = m.files.filter(f => relLayoutName(f) == f)
       // the backfill batch is a RAW (physical-name) read — map the
@@ -1611,17 +1606,43 @@ object VersionedTable {
     walk(new Path(root, dataDir), dataDir).sorted
   }
 
-  private def listWithStats(hfs: FileSystem, root: Path, dataDir: String)
-      : (Seq[String], Map[String, Map[String, (String, String)]], Map[String, Long]) = {
+  private def listWithStats(hfs: FileSystem, root: Path, dataDir: String): Written = {
     val files = listDataFiles(hfs, root, dataDir)
-    if (files.isEmpty) return (files, Map.empty, Map.empty)
+    if (files.isEmpty) return NothingWritten
     import scala.concurrent.{Await, Future}
     implicit val ec: scala.concurrent.ExecutionContext = ioPool
     val opened = Await.result(
       Future.sequence(files.map(f => Future(f -> footerStats(hfs, root, f)))),
       ioWait).toMap
-    (files, opened.map { case (f, (st, _)) => f -> st }.filter(_._2.nonEmpty),
+    Written(files, opened.map { case (f, (st, _)) => f -> st }.filter(_._2.nonEmpty),
       opened.map { case (f, (_, n)) => f -> n })
+  }
+
+  /** The files of one freshly written data dir with their footer stats
+    * and row counts — what a commit's `adds`/`fstat=`/`fr=` lines carry. */
+  private case class Written(files: Seq[String],
+      stats: Map[String, Map[String, (String, String)]], rows: Map[String, Long]) {
+    def ++(o: Written): Written = Written(files ++ o.files, stats ++ o.stats, rows ++ o.rows)
+  }
+  private val NothingWritten = Written(Seq.empty, Map.empty, Map.empty)
+
+  /** The write step every data-writing path shares: `df` (logical names)
+    * lands as version `next`'s new data dir in PHYSICAL names and the
+    * table's partition layout, is listed with footer stats, and gets
+    * bloom sidecars for `bloomCfg`'s columns under their PHYSICAL names
+    * (the names the files store — a logical name would find no column
+    * after a rename and silently index nothing). The append faces call
+    * it with their own mapping/layout/config, every rewrite face through
+    * [[Head.rewrite]]. */
+  private def writeBatch(spark: SparkSession, hfs: FileSystem, root: Path,
+      next: Long, df: DataFrame, cmap: Map[String, String], pcols: Seq[String],
+      bloomCfg: Option[(Seq[String], Int)]): Written = {
+    val dataDir = newDataDir(next)
+    writeDataFiles(df, cmap, pcols, root, dataDir)
+    val written = listWithStats(hfs, root, dataDir)
+    bloomCfg.foreach { case (cs, b) =>
+      writeBlooms(spark, hfs, root, dataDir, cs.map(physOf(cmap, _)), b) }
+    written
   }
 
   // ------------------------------------------------- bloom file index
@@ -1839,6 +1860,104 @@ object VersionedTable {
     files.zip(flags).collect { case (f, true) => f }
   }
 
+  // ------------------------------------------------ the rewrite primitive
+  //
+  // The skeleton every rewrite face shares (see the header's REWRITES
+  // note): one [[Head]] per operation, and each step a method on it.
+
+  /** One operation's handle on the table head — the version `prev` it
+    * builds on and its resolved manifest `m`, opened ONCE: discovery,
+    * the rewrite read and the commit all work from this manifest, never
+    * from a second listing and chain walk of the log. */
+  private case class Head(spark: SparkSession, hfs: FileSystem, root: Path,
+      prev: Long, m: Manifest) {
+    def next: Long = prev + 1
+
+    /** The snapshot's logical schema, resolved where a face first needs
+      * it (a schema-less legacy manifest pays a footer pass). */
+    lazy val schema: StructType = snapshotSchema(spark, root, m)
+
+    /** Files whose manifest stats may hold a row matching `cond`. */
+    def candidates(cond: org.apache.spark.sql.catalyst.expressions.Expression)
+        : Seq[String] =
+      m.files.filter(f => mayMatch(logicalStatsOf(m, f), cond))
+
+    /** Live rows of `files` with `__file`/`__pos` — the discovery read. */
+    def live(files: Seq[String]): DataFrame =
+      scanLive(spark, root, files, m.dvs, m.colMap, m.retired, physReadSchema(m))
+
+    /** Discovery: the manifest entries of the candidate files holding a
+      * row of `hits(live rows)`; no scan at all when nothing is a
+      * candidate. Only the touched file NAMES reach the driver. */
+    def touched(candidates: Seq[String])(hits: DataFrame => DataFrame): Set[String] =
+      if (candidates.isEmpty) Set.empty
+      else resolveTouched(m.files, hits(live(candidates))
+        .select("__file").distinct().collect().map(_.getString(0)).toSet)
+
+    /** The rewrite-phase read: ONLY `files`, as their own parquet scan
+      * (touched-set-sized by plan), through their deletion vectors — a
+      * rewrite of a vectored file must not resurrect deleted rows, since
+      * the commit drops the file AND its entry. mergeSchema, like
+      * readVersion: post-evolution rewrites keep evolved columns. */
+    def scan(files: Seq[String], dvs: Map[String, String] = m.dvs): DataFrame =
+      scanFiles(spark, root, files, dvs, mergeSchema = true, m.colMap, m.retired,
+        physReadSchema(m))
+
+    def bytes(files: Seq[String]): Long =
+      files.map(f => hfs.getFileStatus(new Path(root, f)).getLen).sum
+
+    /** The maintenance layout of `files` (`bytes` in total):
+      * ⌈bytes / targetFileBytes⌉ output files, Z-ordered on `zorderCols`
+      * (2 or 3 dims; the helper `zval` column dropped — maintenance is
+      * content-identical) or plainly repartitioned. Deletion vectors
+      * apply in the read, so every maintenance rewrite materializes
+      * them. */
+    def compacted(files: Seq[String], bytes: Long, targetFileBytes: Long,
+        zorderCols: Seq[String]): DataFrame = {
+      val target = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
+      val cur = scan(files)
+      if (zorderCols.nonEmpty)
+        graft.analytics.ZOrder.zOrderLayoutN(cur, zorderCols, target).drop("zval")
+      else cur.repartition(target)
+    }
+
+    /** The rewrite step: `df` as version `next`'s one new data dir, in
+      * the table's column mapping, partition layout and bloom config. */
+    def rewrite(df: DataFrame): Written =
+      writeBatch(spark, hfs, root, next, df, m.colMap, m.pcols, m.bloomCfg)
+
+    /** Commit a DML: a delta manifest adding `adds` and removing
+      * `removes` (plus deletion-vector entries), published through
+      * [[publishDml]] with the face's read set and conflict predicate. */
+    def commitDml(ts: String, op: String, adds: Written, removes: Set[String],
+        readSet: Seq[String], conflict: Map[String, (String, String)] => Boolean,
+        dvs: Map[String, String] = Map.empty,
+        dvCounts: Map[String, Long] = Map.empty): Long =
+      publishDml(hfs, root, RawManifest(next, ts, op, Some(prev), adds.files,
+        removes.toSeq.sorted, None, Some(schema.json), adds.stats, dvs,
+        addRows = adds.rows, addDvCounts = dvCounts), readSet.toSet, conflict,
+        m.colMap)
+
+    /** Commit a content-identical maintenance rewrite: a delta manifest
+      * replacing `removes` by `adds`; their vector entries drop with the
+      * removed files. */
+    def commitRewrite(ts: String, op: String, adds: Written,
+        removes: Seq[String]): Long = {
+      publish(hfs, root, RawManifest(next, ts, op, Some(prev), adds.files,
+        removes, None, m.schemaJson, adds.stats, addRows = adds.rows))
+      next
+    }
+  }
+
+  /** Open the head of the table at `path`; an empty table fails with
+    * `"<op> empty table at <path>"` (e.g. `op = "merge into"`). */
+  private def openHead(spark: SparkSession, path: String, op: String): Head = {
+    val (hfs, root) = fs(spark, path)
+    val prev = versions(hfs, root).lastOption.getOrElse(
+      throw new IllegalArgumentException(s"$op empty table at $path"))
+    Head(spark, hfs, root, prev, readManifest(hfs, root, prev))
+  }
+
   /** Delta OPTIMIZE for a snapshot: rewrite the latest version's content
     * as ⌈bytes / targetFileBytes⌉ files — optionally Z-ORDERed on two
     * columns for 2-D row-group skipping ([[graft.analytics.ZOrder]]) —
@@ -1854,47 +1973,30 @@ object VersionedTable {
       zorderBy: Option[(String, String)] = None,
       ts: String = "1970-01-01T00:00:00Z",
       zorderCols: Seq[String] = Seq.empty): Long = {
-    val (hfs, root) = fs(spark, path)
-    val prev = versions(hfs, root).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"optimize of empty table at $path"))
-    val m = readManifest(hfs, root, prev)
-    val bytes = m.files.map(f => hfs.getFileStatus(new Path(root, f)).getLen).sum
-    val target = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
+    val h = openHead(spark, path, "optimize of")
+    val m = h.m
     // mergeSchema, like readVersion: a plain read takes ONE footer, so a
     // post-evolution optimize would silently ERASE the evolved column
     // from the whole table — breaking the identical-content contract.
     // Deletion vectors apply here too, which makes optimize the DV
     // MATERIALIZATION path: the rewritten snapshot carries no entries.
-    val cur = scanFiles(spark, root, m.files, m.dvs, mergeSchema = true,
-      m.colMap, m.retired, physReadSchema(m))
-    // zorderCols (2 or 3 dims) takes precedence over the legacy pair;
-    // drop the helper zval column: optimize must be content-identical
-    val laid =
-      if (zorderCols.nonEmpty)
-        graft.analytics.ZOrder.zOrderLayoutN(cur, zorderCols, target).drop("zval")
-      else zorderBy match {
-        case Some((a, b)) =>
-          graft.analytics.ZOrder.zOrderLayout(cur, a, b, target).drop("zval")
-        case None => cur.repartition(target)
-      }
-    val next = prev + 1
-    val dataDir = newDataDir(next)
-    writeDataFiles(laid, m.colMap, m.pcols, root, dataDir)
-    val (newFiles, newStats, newRows) = listWithStats(hfs, root, dataDir)
+    // zorderCols (2 or 3 dims) takes precedence over the legacy pair.
+    val laid = h.compacted(m.files, h.bytes(m.files), targetFileBytes,
+      if (zorderCols.nonEmpty) zorderCols
+      else zorderBy.toSeq.flatMap { case (a, b) => Seq(a, b) })
     // the persisted index config survives maintenance: the compacted
     // head is re-indexed, so optimize never silently degrades the point
     // lookups the user paid an indexing pass for
-    m.bloomCfg.foreach { case (cs, b) =>
-      writeBlooms(spark, hfs, root, dataDir, cs.map(physOf(m.colMap, _)), b) }
-    publish(hfs, root, RawManifest(next, ts, "optimize", None, newFiles,
-      Seq.empty, None, Some(cur.schema.json), newStats,
+    val w = h.rewrite(laid)
+    publish(h.hfs, h.root, RawManifest(h.next, ts, "optimize", None, w.files,
+      Seq.empty, None, Some(laid.schema.json), w.stats,
       Map.empty, m.constraints, Set.empty, m.bloomCfg,
       if (m.colMap.isEmpty && m.retired.isEmpty) None
       else Some((m.colMap, m.retired)), m.gens,
       pcolsLine = if (m.pcols.nonEmpty) Some(m.pcols) else None,
-      addRows = newRows,
+      addRows = w.rows,
       propsState = Some(m.props).filter(_.nonEmpty)))
-    next
+    h.next
   }
 
   /** Predicate-scoped OPTIMIZE (Delta's `OPTIMIZE ... WHERE`): rewrite
@@ -1914,30 +2016,11 @@ object VersionedTable {
       targetFileBytes: Long = 128L * 1024 * 1024,
       ts: String = "1970-01-01T00:00:00Z",
       zorderCols: Seq[String] = Seq.empty): Long = {
-    val (hfs, root) = fs(spark, path)
-    val prev = versions(hfs, root).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"optimize of empty table at $path"))
-    val m = readManifest(hfs, root, prev)
-    val cond = spark.sessionState.sqlParser.parseExpression(condition)
-    val scoped = m.files.filter(f => mayMatch(logicalStatsOf(m, f), cond))
-    if (scoped.size < 2) return prev
-    val bytes = scoped.map(f => hfs.getFileStatus(new Path(root, f)).getLen).sum
-    val target = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    val cur = scanFiles(spark, root, scoped, m.dvs, mergeSchema = true,
-      m.colMap, m.retired, physReadSchema(m))
-    val laid =
-      if (zorderCols.nonEmpty)
-        graft.analytics.ZOrder.zOrderLayoutN(cur, zorderCols, target).drop("zval")
-      else cur.repartition(target)
-    val next = prev + 1
-    val dataDir = newDataDir(next)
-    writeDataFiles(laid, m.colMap, m.pcols, root, dataDir)
-    val (newFiles, newStats, newRows) = listWithStats(hfs, root, dataDir)
-    m.bloomCfg.foreach { case (cs, b) =>
-      writeBlooms(spark, hfs, root, dataDir, cs.map(physOf(m.colMap, _)), b) }
-    publish(hfs, root, RawManifest(next, ts, "optimize_where", Some(prev),
-      newFiles, scoped, None, m.schemaJson, newStats, addRows = newRows))
-    next
+    val h = openHead(spark, path, "optimize of")
+    val scoped = h.candidates(spark.sessionState.sqlParser.parseExpression(condition))
+    if (scoped.size < 2) return h.prev
+    h.commitRewrite(ts, "optimize_where", h.rewrite(
+      h.compacted(scoped, h.bytes(scoped), targetFileBytes, zorderCols)), scoped)
   }
 
   /** Delta's `REORG TABLE ... APPLY (PURGE)`: materialize deletion
@@ -1967,31 +2050,17 @@ object VersionedTable {
       condition: Option[String] = None,
       targetFileBytes: Long = 128L * 1024 * 1024,
       ts: String = "1970-01-01T00:00:00Z"): (Long, Int) = {
-    val (hfs, root) = fs(spark, path)
-    val prev = versions(hfs, root).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"reorg of empty table at $path"))
-    val m = readManifest(hfs, root, prev)
+    val h = openHead(spark, path, "reorg of")
+    val m = h.m
     val vectored0 = m.dvs.keySet.toSeq.sorted
     val vectored = condition.fold(vectored0) { c =>
       val e = spark.sessionState.sqlParser.parseExpression(c)
       vectored0.filter(f => mayMatch(logicalStatsOf(m, f), e))
     }
-    if (vectored.isEmpty) return (prev, 0)
-    val bytes = vectored.map(f => hfs.getFileStatus(new Path(root, f)).getLen).sum
-    val target = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    val cur = scanFiles(spark, root, vectored, m.dvs, mergeSchema = true,
-      m.colMap, m.retired, physReadSchema(m))
-    val next = prev + 1
-    val dataDir = newDataDir(next)
-    writeDataFiles(cur.repartition(target), m.colMap, m.pcols, root, dataDir)
-    val (newFiles, newStats, newRows) = listWithStats(hfs, root, dataDir)
-    m.bloomCfg.foreach { case (cs, b) =>
-      writeBlooms(spark, hfs, root, dataDir, cs.map(physOf(m.colMap, _)), b) }
-    // rm drops the rewritten files AND their dv entries (base application
-    // subtracts removed files from the inherited vector map)
-    publish(hfs, root, RawManifest(next, ts, "reorg_purge", Some(prev),
-      newFiles, vectored, None, m.schemaJson, newStats, addRows = newRows))
-    (next, vectored.size)
+    if (vectored.isEmpty) return (h.prev, 0)
+    (h.commitRewrite(ts, "reorg_purge", h.rewrite(
+      h.compacted(vectored, h.bytes(vectored), targetFileBytes, Seq.empty)), vectored),
+      vectored.size)
   }
 
   /** Delta's `FSCK REPAIR TABLE`: drop snapshot references to data
@@ -2010,10 +2079,7 @@ object VersionedTable {
     * rather than failing mid-scan or silently under-reporting. */
   def fsck(spark: SparkSession, path: String, dryRun: Boolean = false,
       ts: String = "1970-01-01T00:00:00Z"): Seq[String] = {
-    val (hfs, root) = fs(spark, path)
-    val prev = versions(hfs, root).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"fsck of empty table at $path"))
-    val m = readManifest(hfs, root, prev)
+    val Head(_, hfs, root, prev, m) = openHead(spark, path, "fsck of")
     implicit val ec: scala.concurrent.ExecutionContext = ioPool
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
@@ -2046,39 +2112,23 @@ object VersionedTable {
       targetFileBytes: Long = 128L * 1024 * 1024,
       ts: String = "1970-01-01T00:00:00Z",
       zorderCols: Seq[String] = Seq.empty): Long = {
-    val (hfs, root) = fs(spark, path)
-    val prev = versions(hfs, root).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"compact of empty table at $path"))
-    val m = readManifest(hfs, root, prev)
-    val sized = m.files.map(f =>
-      f -> hfs.getFileStatus(new Path(root, f)).getLen)
+    val h = openHead(spark, path, "compact of")
+    val sized = h.m.files.map(f =>
+      f -> h.hfs.getFileStatus(new Path(h.root, f)).getLen)
     val small = sized.filter(_._2 < smallBytes).map(_._1).sorted
-    if (small.size < 2) return prev
+    if (small.size < 2) return h.prev
     // set lookup: the small-file backlog this operator exists for is 10⁴+
     // files, where a Seq.contains inside the fold is O(n²) driver work
     val smallSet = small.toSet
     val bytes = sized.collect { case (f, n) if smallSet(f) => n }.sum
-    val target = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    val cur = readTouched(spark, path, small) // DV-aware, mergeSchema
-    val next = prev + 1
-    val dataDir = newDataDir(next)
     // optional Z-ORDER layout on the folded output (liquid-clustering
     // flavored maintenance): a streaming sink's micro-batches arrive in
     // time order, so without this the nightly fold preserves no key
     // locality and range queries on the folded head prune nothing —
     // clustering the SMALL-FILE fold costs O(small bytes), same as the
     // fold itself, and each night's output lands query-prunable
-    val laid =
-      if (zorderCols.nonEmpty)
-        graft.analytics.ZOrder.zOrderLayoutN(cur, zorderCols, target).drop("zval")
-      else cur.repartition(target)
-    writeDataFiles(laid, m.colMap, m.pcols, root, dataDir)
-    val (newFiles, newStats, newRows) = listWithStats(hfs, root, dataDir)
-    m.bloomCfg.foreach { case (cs, b) =>
-      writeBlooms(spark, hfs, root, dataDir, cs.map(physOf(m.colMap, _)), b) }
-    publish(hfs, root, RawManifest(next, ts, "compact", Some(prev), newFiles,
-      small, None, m.schemaJson, newStats, addRows = newRows))
-    next
+    h.commitRewrite(ts, "compact", h.rewrite(
+      h.compacted(small, bytes, targetFileBytes, zorderCols)), small)
   }
 
   /** The nightly maintenance window in one call — what a production
@@ -2249,16 +2299,11 @@ object VersionedTable {
       .map(j => unionSchema(
         DataType.fromJson(j).asInstanceOf[StructType], df.schema))
       .getOrElse(df.schema)
-    val firstNext = first.map(_ + 1).getOrElse(0L)
-    val dataDir = newDataDir(firstNext)
-    writeDataFiles(alignTypes(df, firstSnap), firstCmap, firstP, root, dataDir)
-    val (newFiles, newStats, newRows) = listWithStats(hfs, root, dataDir)
     // persisted index config as of the first head read — sidecars are
     // written once with the data (a racing config change lands on the
     // NEXT batch; a missing section only degrades to stats pruning)
-    firstM.flatMap(_.bloomCfg)
-      .foreach { case (cs, b) =>
-        writeBlooms(spark, hfs, root, dataDir, cs.map(physOf(firstCmap, _)), b) }
+    val w = writeBatch(spark, hfs, root, first.map(_ + 1).getOrElse(0L),
+      alignTypes(df, firstSnap), firstCmap, firstP, firstM.flatMap(_.bloomCfg))
     var attempt = 0
     while (true) {
       val prev = versions(hfs, root).lastOption
@@ -2322,17 +2367,17 @@ object VersionedTable {
       val next = prev.map(_ + 1).getOrElse(0L)
       try {
         beforeClaim(next)
-        publish(hfs, root, RawManifest(next, ts, "append", prev, newFiles,
-          Seq.empty, None, Some(snapSchema.json), newStats,
+        publish(hfs, root, RawManifest(next, ts, "append", prev, w.files,
+          Seq.empty, None, Some(snapSchema.json), w.stats,
           pcolsLine = if (prev.isEmpty && firstP.nonEmpty) Some(firstP) else None,
-          addRows = newRows,
+          addRows = w.rows,
           // the assigned batch's advanced high-water mark rides the same
           // manifest as the data (the transactional-counter contract)
           propsState =
             if (idSpecs.isEmpty) None
             else Some(advanceIdentity(
               headM.map(_.props).getOrElse(Map.empty), idSpecs,
-              idSpecs.keySet, firstCmap, newStats, path))))
+              idSpecs.keySet, firstCmap, w.stats, path))))
         return next
       } catch {
         case e: ConcurrentCommitException =>
@@ -2436,10 +2481,7 @@ object VersionedTable {
       s"bad property key: '$k'"))
     props.values.foreach(v => require(v != null, "property value may not be null"))
     requireNotEngineProps(props.keys, path, "SET TBLPROPERTIES")
-    val (hfs, root) = fs(spark, path)
-    val prev = versions(hfs, root).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"setProperties on empty table at $path"))
-    val m = readManifest(hfs, root, prev)
+    val Head(_, hfs, root, prev, m) = openHead(spark, path, "setProperties on")
     val next = prev + 1
     publish(hfs, root, RawManifest(next, ts,
       s"set_properties(${props.keys.toSeq.sorted.mkString(",")})",
@@ -2453,10 +2495,7 @@ object VersionedTable {
   def unsetProperties(spark: SparkSession, path: String, keys: Seq[String],
       ifExists: Boolean = false, ts: String = "1970-01-01T00:00:00Z"): Long = {
     requireNotEngineProps(keys, path, "UNSET TBLPROPERTIES")
-    val (hfs, root) = fs(spark, path)
-    val prev = versions(hfs, root).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"unsetProperties on empty table at $path"))
-    val m = readManifest(hfs, root, prev)
+    val Head(_, hfs, root, prev, m) = openHead(spark, path, "unsetProperties on")
     val missing = keys.filterNot(m.props.contains)
     if (!ifExists && missing.nonEmpty) throw new IllegalArgumentException(
       s"no such table propert${if (missing.size == 1) "y" else "ies"} at $path: " +
@@ -2522,6 +2561,8 @@ object VersionedTable {
   private[graft] val dmlBeforeClaim =
     scala.collection.concurrent.TrieMap.empty[String, () => Unit]
 
+  private val DmlClaimRetries = 5
+
   /** Publish a DML's delta manifest with Delta's DISJOINT-CONFLICT
     * fast path (the conflict matrix, re-derived): on a lost claim,
     * inspect every intervening winner; when each one is a plain delta
@@ -2543,12 +2584,12 @@ object VersionedTable {
     * cannot invalidate the computed rewrite. Winner file stats reach
     * `addConflict` re-keyed to LOGICAL names (they are recorded under
     * physical ones); a winner file without stats conservatively
-    * conflicts through the callers' `addConflict` defaults. */
+    * conflicts through the callers' `addConflict` defaults. Up to
+    * [[DmlClaimRetries]] re-points, then the loss surfaces. */
   private def publishDml(hfs: FileSystem, root: Path, first: RawManifest,
       readSet: Set[String],
       addConflict: Map[String, (String, String)] => Boolean,
-      colMap: Map[String, String],
-      maxRetries: Int = 5): Long = {
+      colMap: Map[String, String]): Long = {
     dmlBeforeClaim.remove(root.toUri.getPath).foreach(_())
     val phys2log = colMap.collect { case (l, p) if l != p => p -> l }
     var raw = first
@@ -2558,7 +2599,7 @@ object VersionedTable {
       catch {
         case e: ConcurrentCommitException =>
           attempt += 1
-          if (attempt > maxRetries) throw e
+          if (attempt > DmlClaimRetries) throw e
           val head = versions(hfs, root).lastOption.getOrElse(throw e)
           if (head < raw.version) throw e
           // an expired/unreadable intervening manifest → sound fallback
@@ -2988,36 +3029,73 @@ object VersionedTable {
     * carries no `dv=` entry — the vector stays small by construction.
     * Folding at ≥ half-deleted also bounds WASTED READ: a file more
     * than half vectored ships more dead rows through the scan than
-    * live ones. Returns (folded files, added files, their stats); the
-    * footer counts are read on the shared [[ioPool]]. */
-  private def foldHeavyVectored(spark: SparkSession, hfs: FileSystem,
-      root: Path, m: Manifest, next: Long, touchedFiles: Set[String],
+    * live ones. Returns (folded files, their rewrite); the footer
+    * counts are read on the shared [[ioPool]]. */
+  private def foldHeavyVectored(h: Head, touchedFiles: Set[String],
       dvDir: String, posCounts: Map[String, Long], threshold: Double)
-      : (Set[String], Seq[String], Map[String, Map[String, (String, String)]],
-         Map[String, Long]) = {
-    if (threshold >= 1.0 || touchedFiles.isEmpty)
-      return (Set.empty, Seq.empty, Map.empty, Map.empty)
+      : (Set[String], Written) = {
+    if (threshold >= 1.0 || touchedFiles.isEmpty) return (Set.empty, NothingWritten)
     import scala.concurrent.{Await, Future}
     implicit val ec: scala.concurrent.ExecutionContext = ioPool
     val heavy = Await.result(
       Future.sequence(touchedFiles.toSeq.sorted.map { f =>
         Future {
           val pos = posCounts.getOrElse(relLayoutName(f), 0L)
-          val rows = if (pos == 0) 1L else fileRowCount(hfs, root, f)
+          val rows = if (pos == 0) 1L else fileRowCount(h.hfs, h.root, f)
           (f, rows > 0 && pos.toDouble / rows >= threshold)
         }
       }), ioWait).collect { case (f, true) => f }
-    if (heavy.isEmpty) return (Set.empty, Seq.empty, Map.empty, Map.empty)
-    val dataDir = newDataDir(next)
+    if (heavy.isEmpty) return (Set.empty, NothingWritten)
     // survivors = the heavy files read through the NEW (superset)
     // vector — content-identical materialization, optimize's semantics,
     // scoped to exactly the files past threshold
-    writeDataFiles(scanFiles(spark, root, heavy, heavy.map(_ -> dvDir).toMap,
-      mergeSchema = true, m.colMap, m.retired, physReadSchema(m)),
-      m.colMap, m.pcols, root, dataDir)
-    val (adds, stats, addRows) = listWithStats(hfs, root, dataDir)
-    m.bloomCfg.foreach { case (cs, b) => writeBlooms(spark, hfs, root, dataDir, cs, b) }
-    (heavy.toSet, adds, stats, addRows)
+    (heavy.toSet, h.rewrite(h.scan(heavy, heavy.map(_ -> dvDir).toMap)))
+  }
+
+  /** The merge-on-read commit [[deleteMergeOnRead]] and
+    * [[updateMergeOnRead]] share. `deleted` holds the (file, pos) of the
+    * live rows leaving their files; together with the candidates'
+    * EXISTING positions it is written as ONE vector dataset — a
+    * replacing entry must be a superset, and re-pointing an
+    * untouched-but-vectored candidate at the new dataset is sound (its
+    * position set is carried verbatim). The dataset's per-file counts
+    * name the touched files (nothing matched: a no-op commit). Then
+    * `postImages` writes the face's new files, files vectored past
+    * `threshold` fold in this same commit ([[foldHeavyVectored]]), and
+    * every other touched file gets a `dv=` entry. The disjoint-conflict
+    * fast path holds for MoR too: every vectored and folded file is
+    * inside `candidates` = the read set, so a winner that removed or
+    * re-vectored one of them (which would make this entry clobber
+    * theirs or dangle) fails the read-set checks and re-runs. */
+  private def commitVectors(h: Head, ts: String, op: String,
+      cond: org.apache.spark.sql.catalyst.expressions.Expression,
+      candidates: Seq[String], deleted: DataFrame, threshold: Double)
+      (postImages: => Written): Long = {
+    val dvDir = newDataDir(h.next)
+    val dvPath = new Path(h.root, dvDir)
+    // distinct: the folded old positions may carry duplicates (a file's
+    // stale rows survive in dirs other files still point at) — the new
+    // dataset is a SET so downstream folds and CDF diffs stay exact
+    dvFrame(h.spark, h.root, candidates, h.m.dvs).fold(deleted)(deleted.unionByName(_))
+      .distinct().write.mode("overwrite").parquet(dvPath.toString)
+    // touched file names + per-file position counts: one |files|-bounded
+    // driver read of the tiny vector feeds both the manifest entries and
+    // the materialization threshold
+    val posCounts = h.spark.read.parquet(dvPath.toString)
+      .groupBy("file").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    if (posCounts.isEmpty) {
+      h.hfs.delete(dvPath, true)
+      return h.commitDml(ts, op, NothingWritten, Set.empty, candidates, mayMatch(_, cond))
+    }
+    val touchedFiles = resolveTouched(h.m.files, posCounts.keySet)
+    val adds = postImages
+    val (folded, foldAdds) = foldHeavyVectored(h, touchedFiles, dvDir, posCounts, threshold)
+    val dvEntries = (touchedFiles -- folded).map(_ -> dvDir).toMap
+    if (dvEntries.isEmpty) h.hfs.delete(dvPath, true)
+    h.commitDml(ts, op, adds ++ foldAdds, folded, candidates, mayMatch(_, cond),
+      dvEntries,
+      dvEntries.keys.flatMap(f => posCounts.get(relLayoutName(f)).map(f -> _)).toMap)
   }
 
   /** Merge-on-read DELETE: rows where `condition` IS TRUE leave the
@@ -3039,70 +3117,17 @@ object VersionedTable {
   def deleteMergeOnRead(spark: SparkSession, path: String, condition: String,
       ts: String = "1970-01-01T00:00:00Z",
       maxVectoredFraction: Double = 0.5): Long = {
-    val (hfs, root) = fs(spark, path)
-    val prev = versions(hfs, root).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"delete from empty table at $path"))
-    val m = readManifest(hfs, root, prev)
-    val snapSchema = snapshotSchema(spark, root, m)
+    val h = openHead(spark, path, "delete from")
     val condExpr = spark.sessionState.sqlParser.parseExpression(condition)
-    requireNotAppendOnly(m.props, path, "deleteMergeOnRead")
-    val candidates =
-      m.files.filter(f => mayMatch(logicalStatsOf(m, f), condExpr))
-    val next = prev + 1
-    if (candidates.isEmpty) {
-      return publishDml(hfs, root, RawManifest(next, ts, "delete_mor", Some(prev),
-        Seq.empty, Seq.empty, None, Some(snapSchema.json), Map.empty),
-        Set.empty, st => mayMatch(st, condExpr), m.colMap)
-    }
-    // live rows (existing vectors applied) where cond IS TRUE, plus the
-    // candidates' EXISTING positions: a replacing entry must be a
-    // superset, and re-pointing an untouched-but-vectored candidate at
-    // the new dataset is sound (its position set is carried verbatim)
-    val oldDv = dvFrame(spark, root, candidates, m.dvs)
-    val newDel = scanLive(spark, root, candidates, m.dvs, m.colMap, m.retired,
-        physReadSchema(m))
-      .filter(coalesce(expr(condition), lit(false)))
-      .select(col("__file").as("file"), col("__pos").as("pos"))
-    // distinct: the folded old positions may carry duplicates (a file's
-    // stale rows survive in dirs other files still point at) — the new
-    // dataset is a SET so downstream folds and CDF diffs stay exact
-    val out = oldDv.fold(newDel)(newDel.unionByName(_)).distinct()
-    val dvDir = newDataDir(next)
-    out.write.mode("overwrite").parquet(new Path(root, dvDir).toString)
-    // touched file names + per-file position counts: one |files|-bounded
-    // driver read of the tiny vector feeds both the manifest entries and
-    // the materialization threshold below
-    val posCounts = spark.read.parquet(new Path(root, dvDir).toString)
-      .groupBy("file").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val touched = posCounts.keySet
-    if (touched.isEmpty) {
-      hfs.delete(new Path(root, dvDir), true) // nothing matched: no-op commit
-      return publishDml(hfs, root, RawManifest(next, ts, "delete_mor", Some(prev),
-        Seq.empty, Seq.empty, None, Some(snapSchema.json), Map.empty),
-        candidates.toSet, st => mayMatch(st, condExpr), m.colMap)
-    }
-    require(!touched.contains(""), "scan returned a file outside the table layout")
-    val touchedFiles = resolveTouched(m.files, touched)
-    // auto-materialization: files vectored past the threshold are
-    // COW-folded in THIS commit (removed + rewritten through the new
-    // vector) and carry no dv= entry — see [[foldHeavyVectored]]
-    val (folded, foldAdds, foldStats, foldRows) = foldHeavyVectored(spark, hfs, root,
-      m, next, touchedFiles, dvDir, posCounts, maxVectoredFraction)
-    val dvEntries = (touchedFiles -- folded).map(_ -> dvDir).toMap
-    if (dvEntries.isEmpty) hfs.delete(new Path(root, dvDir), true)
-    // disjoint-conflict fast path holds for MoR too: this commit's
-    // vectored and folded files are all inside `candidates` = readSet,
-    // so a winner that removed or re-vectored any of them (which would
-    // make this dv entry clobber theirs or dangle) fails the readSet
-    // checks and re-runs
-    publishDml(hfs, root, RawManifest(next, ts, "delete_mor", Some(prev),
-      foldAdds, folded.toSeq.sorted, None, Some(snapSchema.json), foldStats,
-      dvEntries,
-      addRows = foldRows,
-      addDvCounts = dvEntries.keys.flatMap(f =>
-        posCounts.get(relLayoutName(f)).map(f -> _)).toMap),
-      candidates.toSet, st => mayMatch(st, condExpr), m.colMap)
+    requireNotAppendOnly(h.m.props, path, "deleteMergeOnRead")
+    val candidates = h.candidates(condExpr)
+    if (candidates.isEmpty) return h.commitDml(ts, "delete_mor", NothingWritten,
+      Set.empty, Seq.empty, mayMatch(_, condExpr))
+    // the live rows (existing vectors applied) where cond IS TRUE
+    commitVectors(h, ts, "delete_mor", condExpr, candidates,
+      h.live(candidates).filter(coalesce(expr(condition), lit(false)))
+        .select(col("__file").as("file"), col("__pos").as("pos")),
+      maxVectoredFraction)(NothingWritten)
   }
 
   /** CONVERT a plain parquet directory into a versioned table IN PLACE
@@ -3500,8 +3525,10 @@ object VersionedTable {
     * way, and a COW rewrite whose removes don't string-match the
     * manifest would ADD rewritten rows without REMOVING the originals.
     * Ambiguity (two entries sharing a relative suffix) fails loudly
-    * rather than risk that corruption. */
-  private def resolveTouched(files: Seq[String], touched: Set[String]): Set[String] =
+    * rather than risk that corruption, and so does a name outside the
+    * table layout (extracted as ""). */
+  private def resolveTouched(files: Seq[String], touched: Set[String]): Set[String] = {
+    require(!touched.contains(""), "scan returned a file outside the table layout")
     touched.map { e =>
       if (files.contains(e)) e
       else {
@@ -3511,25 +3538,21 @@ object VersionedTable {
         ms.head
       }
     }
+  }
 
-  /** Rewrite-phase read for [[merge]]/[[delete]]: ONLY the given
-    * manifest-relative files, as their own parquet scan. The touched set
-    * is a driver-side list after discovery, so handing it to the source
+  /** The rewrite-phase read ([[Head.scan]]) of the given
+    * manifest-relative files at the current head. The touched set is a
+    * driver-side list after discovery, so handing it to the source
     * directly makes the rewrite scan touched-set-sized BY PLAN — the
     * FileSourceScan's location lists exactly these files (spec-asserted)
     * — where a full-snapshot read filtered on `input_file_name()` opens
     * every untouched file (Spark cannot file-prune on that expression).
-    * mergeSchema, like readVersion: post-evolution rewrites must not
-    * drop evolved columns present in the touched files. */
+    * The faces themselves read through the [[Head]] they already hold. */
   private[graft] def readTouched(spark: SparkSession, path: String,
       touched: Seq[String]): DataFrame = {
     val (hfs, root) = fs(spark, path)
-    // head-version DV entries apply: a COW rewrite of a vectored file
-    // must not resurrect its deleted rows (the rewrite drops the file
-    // AND its entry, so the survivors must already exclude them)
-    val m = readManifest(hfs, root, versions(hfs, root).last)
-    scanFiles(spark, root, touched, m.dvs, mergeSchema = true,
-      m.colMap, m.retired, physReadSchema(m))
+    val v = versions(hfs, root).last
+    Head(spark, hfs, root, v, readManifest(hfs, root, v)).scan(touched)
   }
 
   /** Per-key-column [lo, hi] bounds of the updates frame, in the STATS
@@ -3633,15 +3656,12 @@ object VersionedTable {
     * merges serialize on the commit claim. */
   def merge(updates0: DataFrame, path: String, keyCols: Seq[String],
       ts: String = "1970-01-01T00:00:00Z"): Long = {
-    val spark = updates0.sparkSession
-    val (hfs, root) = fs(spark, path)
-    val prev = versions(hfs, root).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"merge into empty table at $path"))
-    val m = readManifest(hfs, root, prev)
+    val h = openHead(updates0.sparkSession, path, "merge into")
+    val m = h.m
     val updates = applyGens(updates0, m.gens)
     requireNotAppendOnly(m.props, path, "merge") // unconditional matched UPDATE
     requireNoIdentityConflict(m.props, path, "merge", inserts = true)
-    val snapSchema = snapshotSchema(spark, root, m)
+    val snapSchema = h.schema
     val drift = updates0.schema.fieldNames.filterNot(snapSchema.fieldNames.contains)
     if (drift.nonEmpty) throw new SchemaMismatchException(
       s"merge updates carry columns ${drift.mkString("[", ",", "]")} not in the " +
@@ -3685,31 +3705,16 @@ object VersionedTable {
     // CollapseProject merges it back — "Max iterations (100) reached").
     // Inner joins have no push-through-project rule, so the plan
     // fixpoints immediately.
-    val touched =
-      if (candidates.isEmpty) Set.empty[String]
-      else scanLive(spark, root, candidates, m.dvs, m.colMap, m.retired,
-          physReadSchema(m))
-        .join(broadcast(updates.select(keyCols.map(col): _*).distinct()), keyCols, "inner")
-        .select("__file").distinct()
-        .collect().map(_.getString(0)).toSet
-    require(!touched.contains(""), "scan returned a file outside the table layout")
-    val touchedFiles = resolveTouched(m.files, touched)
+    val touchedFiles = h.touched(candidates)(_.join(
+      broadcast(updates.select(keyCols.map(col): _*).distinct()), keyCols, "inner"))
     val keys = updates.select(keyCols.map(col): _*).distinct()
-    val next = prev + 1
-    val dataDir = newDataDir(next)
     val rewrite =
       if (touchedFiles.isEmpty) updates
-      else readTouched(spark, path, touchedFiles.toSeq.sorted)
+      else h.scan(touchedFiles.toSeq.sorted)
         .join(broadcast(keys), keyCols, "left_anti")
         .unionByName(updates, allowMissingColumns = true)
-    writeDataFiles(rewrite, m.colMap, m.pcols, root, dataDir)
-    val (newFiles, newStats, newRows) = listWithStats(hfs, root, dataDir)
-    m.bloomCfg.foreach { case (cs, b) =>
-      writeBlooms(spark, hfs, root, dataDir, cs.map(physOf(m.colMap, _)), b) }
-    publishDml(hfs, root, RawManifest(next, ts, "merge", Some(prev), newFiles,
-      touchedFiles.toSeq.sorted, None, Some(snapSchema.json), newStats,
-      addRows = newRows), candidates.toSet,
-      st => boundsMayOverlap(st, keyBounds), m.colMap)
+    h.commitDml(ts, "merge", h.rewrite(rewrite), touchedFiles, candidates,
+      boundsMayOverlap(_, keyBounds))
   }
 
   /** One WHEN clause of a full MERGE ([[mergeClauses]]). Conditions and
@@ -3747,10 +3752,9 @@ object VersionedTable {
     * keep Delta's defaults (matched/bySource rows survive unchanged,
     * unmatched source rows drop).
     *
-    * Execution is the scoped COW shape [[merge]] uses: stats-pruned
-    * candidates → DV-aware discovery of the files that actually hold
-    * key matches (plus, when `notMatchedBySource` clauses exist, files
-    * whose stats may match those clauses' conditions — a t-only
+    * Discovery finds the files that actually hold key matches (plus,
+    * when `notMatchedBySource` clauses exist, files whose stats may
+    * match those clauses' conditions — a t-only
     * condition prunes there; an s-referencing or absent condition
     * keeps every file, which is inherent: NOT MATCHED BY SOURCE is a
     * full-table predicate) → only those files rewrite; everything else
@@ -3776,10 +3780,8 @@ object VersionedTable {
       extraOn: Option[String] = None): Long = {
     import MergeAction._
     val spark = source.sparkSession
-    val (hfs, root) = fs(spark, path)
-    val prev = versions(hfs, root).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"merge into empty table at $path"))
-    val m = readManifest(hfs, root, prev)
+    val h = openHead(spark, path, "merge into")
+    val m = h.m
     // insert-only merges stay allowed on an append-only table (Delta's
     // rule: only existing rows are protected)
     if (matched.nonEmpty || notMatchedBySource.nonEmpty)
@@ -3790,7 +3792,7 @@ object VersionedTable {
         case Update(_, set) => set.keys
         case _ => Nil
       })
-    val snapSchema = snapshotSchema(spark, root, m)
+    val snapSchema = h.schema
     require(keyCols.nonEmpty && keyCols.forall(snapSchema.fieldNames.contains) &&
       keyCols.forall(source.columns.contains),
       s"merge keys ${keyCols.mkString(",")} must exist in table and source at $path")
@@ -3925,59 +3927,52 @@ object VersionedTable {
     val bySrcFire = notMatchedBySource.map(c =>
       condOf(c).fold(lit(true))(x => coalesce(expr(x), lit(false))))
       .foldLeft(lit(false))((a, b) => a || b)
-    val touched =
-      if (candidates.isEmpty || insertOnly) Set.empty[String]
-      else {
-        val live = scanLive(spark, root, candidates, m.dvs, m.colMap, m.retired,
-          physReadSchema(m))
-        // no broadcast hints anywhere in this operator: a CDC batch is
-        // tiny (AQE converts these joins to broadcast at runtime from
-        // ACTUAL sizes), but a source that is half the table — the
-        // backfill-merge shape — must not be forced through the driver
-        // inner-vs-distinct, not left_semi: srcKeys is distinct, so the
-        // semantics are identical, and semi joins over this scan's
-        // __file projection trip the PushDownLeftSemiAntiJoin /
-        // ColumnPruning / CollapseProject fixpoint loop (see [[merge]])
-        val (matchFiles, bySrcFiles) = extraOn match {
-          case None =>
-            val mf = live
-              .join(srcKeys, keyCols, "inner")
-              .select("__file").distinct()
-            val bf =
-              if (notMatchedBySource.isEmpty) mf.limit(0)
-              else {
-                // rows NO source key matches, where some bySource
-                // clause fires (its condition sees s as NULL)
-                live.join(srcKeys, keyCols, "left_anti")
-                  .select(col("__file"),
-                    struct(snapSchema.fieldNames
-                      .map(col).toIndexedSeq: _*).as("t"))
-                  .withColumn("s", lit(null).cast(sType))
-                  .filter(bySrcFire)
-                  .select("__file").distinct()
-              }
-            (mf, bf)
-          case Some(_) =>
-            // full-ON classification (Delta's): a file rewrites when it
-            // holds a FULL (keys AND extra) match, or when a bySource
-            // clause may fire on a row with no full match — which now
-            // includes key-matching pairs that fail the extra conjunct
-            val liveT = withT(live)
-            val mf = liveT.join(srcS, fullCond(liveT), "inner")
-              .select("__file").distinct()
-            val bf =
-              if (notMatchedBySource.isEmpty) mf.limit(0)
-              else liveT.join(srcS, fullCond(liveT), "left_anti")
+    val touchedFiles = h.touched(if (insertOnly) Seq.empty else candidates) { live =>
+      // no broadcast hints anywhere in this operator: a CDC batch is
+      // tiny (AQE converts these joins to broadcast at runtime from
+      // ACTUAL sizes), but a source that is half the table — the
+      // backfill-merge shape — must not be forced through the driver
+      // inner-vs-distinct, not left_semi: srcKeys is distinct, so the
+      // semantics are identical, and semi joins over this scan's
+      // __file projection trip the PushDownLeftSemiAntiJoin /
+      // ColumnPruning / CollapseProject fixpoint loop (see [[merge]])
+      val (matchFiles, bySrcFiles) = extraOn match {
+        case None =>
+          val mf = live
+            .join(srcKeys, keyCols, "inner")
+            .select("__file").distinct()
+          val bf =
+            if (notMatchedBySource.isEmpty) mf.limit(0)
+            else {
+              // rows NO source key matches, where some bySource
+              // clause fires (its condition sees s as NULL)
+              live.join(srcKeys, keyCols, "left_anti")
+                .select(col("__file"),
+                  struct(snapSchema.fieldNames
+                    .map(col).toIndexedSeq: _*).as("t"))
                 .withColumn("s", lit(null).cast(sType))
                 .filter(bySrcFire)
                 .select("__file").distinct()
-            (mf, bf)
-        }
-        matchFiles.unionByName(bySrcFiles).distinct()
-          .collect().map(_.getString(0)).toSet
+            }
+          (mf, bf)
+        case Some(_) =>
+          // full-ON classification (Delta's): a file rewrites when it
+          // holds a FULL (keys AND extra) match, or when a bySource
+          // clause may fire on a row with no full match — which now
+          // includes key-matching pairs that fail the extra conjunct
+          val liveT = withT(live)
+          val mf = liveT.join(srcS, fullCond(liveT), "inner")
+            .select("__file").distinct()
+          val bf =
+            if (notMatchedBySource.isEmpty) mf.limit(0)
+            else liveT.join(srcS, fullCond(liveT), "left_anti")
+              .withColumn("s", lit(null).cast(sType))
+              .filter(bySrcFire)
+              .select("__file").distinct()
+          (mf, bf)
       }
-    require(!touched.contains(""), "scan returned a file outside the table layout")
-    val touchedFiles = resolveTouched(m.files, touched)
+      matchFiles.unionByName(bySrcFiles)
+    }
     // ---- multi-match ambiguity (Delta's error): duplicate source keys
     // are fatal only when they MATCH a target row
     if (matched.nonEmpty && touchedFiles.nonEmpty) {
@@ -3985,7 +3980,7 @@ object VersionedTable {
         case None =>
           val dupKeys = source.groupBy(keyCols.map(col): _*).count()
             .filter(col("count") > 1).drop("count")
-          val ambiguous = readTouched(spark, path, touchedFiles.toSeq.sorted)
+          val ambiguous = h.scan(touchedFiles.toSeq.sorted)
             .join(dupKeys, keyCols, "left_semi").limit(1).count()
           require(ambiguous == 0L,
             s"merge source has duplicate keys matching target rows at $path " +
@@ -3994,7 +3989,7 @@ object VersionedTable {
           // under the full ON condition, duplicate source KEYS are fine
           // as long as at most one source row FULL-matches each target
           // row (Delta's rule): count full matches per target row
-          val tS = withT(readTouched(spark, path, touchedFiles.toSeq.sorted))
+          val tS = withT(h.scan(touchedFiles.toSeq.sorted))
             .withColumn("__tid", monotonically_increasing_id())
           val ambiguous = tS.join(srcS, fullCond(tS), "inner")
             .groupBy("__tid").count().filter(col("count") > 1)
@@ -4008,7 +4003,7 @@ object VersionedTable {
     // ---- the three row classes
     val tgt =
       if (touchedFiles.isEmpty) None
-      else Some(readTouched(spark, path, touchedFiles.toSeq.sorted))
+      else Some(h.scan(touchedFiles.toSeq.sorted))
     val matchedOut = tgt.map { t =>
       val tS = t.select((keyCols.map(col) :+
         struct(snapSchema.fieldNames.map(col).toIndexedSeq: _*).as("t")).toIndexedSeq: _*)
@@ -4041,9 +4036,7 @@ object VersionedTable {
             val tgtKeys =
               if (insertOnly)
                 (if (candidates.isEmpty) None
-                 else Some(scanLive(spark, root, candidates, m.dvs, m.colMap,
-                   m.retired, physReadSchema(m))
-                   .select(keyCols.map(col): _*).distinct()))
+                 else Some(h.live(candidates).select(keyCols.map(col): _*).distinct()))
               else tgt.map(_.select(keyCols.map(col): _*).distinct())
             tgtKeys.fold(srcS)(k => srcS.join(k, keyCols, "left_anti"))
           case Some(_) =>
@@ -4053,9 +4046,7 @@ object VersionedTable {
             // path scans the stats-pruned candidates)
             val tRows =
               if (insertOnly)
-                (if (candidates.isEmpty) None
-                 else Some(scanLive(spark, root, candidates, m.dvs, m.colMap,
-                   m.retired, physReadSchema(m))))
+                (if (candidates.isEmpty) None else Some(h.live(candidates)))
               else tgt
             tRows.map(r => withT(r.select(snapSchema.fieldNames.map(col)
                 .toIndexedSeq: _*)))
@@ -4098,21 +4089,12 @@ object VersionedTable {
       throw new IllegalArgumentException("mergeClauses with no actions")
     val rewrite = pieces.reduce(_ unionByName _)
     if (m.constraints.nonEmpty) enforceConstraints(rewrite, m.constraints, path)
-    val next = prev + 1
-    val dataDir = newDataDir(next)
-    writeDataFiles(rewrite, m.colMap, m.pcols, root, dataDir)
-    val (newFiles, newStats, newRows) = listWithStats(hfs, root, dataDir)
-    m.bloomCfg.foreach { case (cs, b) =>
-      writeBlooms(spark, hfs, root, dataDir, cs.map(physOf(m.colMap, _)), b) }
     // a winner-added file conflicts when its stats may hold a source
     // key — or unconditionally when bySource clauses exist (its rows
     // could be owed NOT MATCHED BY SOURCE actions this commit computed
     // without them)
-    publishDml(hfs, root, RawManifest(next, ts, "merge_clauses", Some(prev),
-      newFiles, touchedFiles.toSeq.sorted, None, Some(snapSchema.json),
-      newStats, addRows = newRows), candidates.toSet,
-      st => notMatchedBySource.nonEmpty || boundsMayOverlap(st, keyBounds),
-      m.colMap)
+    h.commitDml(ts, "merge_clauses", h.rewrite(rewrite), touchedFiles, candidates,
+      st => notMatchedBySource.nonEmpty || boundsMayOverlap(st, keyBounds))
   }
 
   /** File-level data skipping from manifest stats: keep a file only if
@@ -4272,8 +4254,7 @@ object VersionedTable {
 
   /** Copy-on-write DELETE: rows matching `condition` leave the snapshot;
     * only files containing a match are rewritten, the rest carry by
-    * reference (same machinery as [[merge]], with the predicate as the
-    * match — manifest stats prune the discovery candidates via
+    * reference (manifest stats prune the discovery candidates via
     * [[mayMatch]], including typed DATE/TIMESTAMP ranges). A file whose
     * live rows ALL match is dropped outright with ZERO rewrite (Delta's
     * file-level delete) — the shape of a retention sweep: `DELETE WHERE
@@ -4283,79 +4264,47 @@ object VersionedTable {
     * expression over the table's columns. */
   def delete(spark: SparkSession, path: String, condition: String,
       ts: String = "1970-01-01T00:00:00Z"): Long = {
-    val (hfs, root) = fs(spark, path)
-    val prev = versions(hfs, root).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"delete from empty table at $path"))
-    val m = readManifest(hfs, root, prev)
-    val snapSchema = snapshotSchema(spark, root, m)
-    requireNotAppendOnly(m.props, path, "delete")
+    val h = openHead(spark, path, "delete from")
+    requireNotAppendOnly(h.m.props, path, "delete")
     // stats-pruned discovery: files whose manifest [min,max] ranges prove
     // the predicate false contain no deletable row and are never opened.
     // ONE pass counts matching vs total live rows per candidate file —
     // the same shuffle the old distinct-touched scan paid, now also
     // proving which files are FULLY deleted (dropped, never rewritten)
     val condExpr = spark.sessionState.sqlParser.parseExpression(condition)
-    val candidates =
-      m.files.filter(f => mayMatch(logicalStatsOf(m, f), condExpr))
+    val candidates = h.candidates(condExpr)
     val perFile =
       if (candidates.isEmpty) Array.empty[(String, Long, Long)]
-      else scanLive(spark, root, candidates, m.dvs, m.colMap, m.retired,
-          physReadSchema(m))
+      else h.live(candidates)
         .groupBy("__file")
         .agg(count(lit(1)).as("n_live"),
           count(when(coalesce(expr(condition), lit(false)), 1)).as("n_match"))
         .filter(col("n_match") > 0)
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     val touched = perFile.map(_._1).toSet
-    require(!touched.contains(""), "scan returned a file outside the table layout")
     val fullyGone = perFile.collect { case (f, n, nm) if nm == n => f }.toSet
-    val touchedFiles = resolveTouched(m.files, touched)
-    val rewriteFiles = resolveTouched(m.files, touched -- fullyGone)
-    val next = prev + 1
-    val dataDir = newDataDir(next)
-    val (newFiles, newStats, newRows) = if (rewriteFiles.nonEmpty) {
-      // rewrite reads ONLY the partially-covered files (readTouched — the
-      // plan's scan is boundary-sized); keep rows where the predicate is
-      // false OR NULL (three-valued logic: only cond-IS-TRUE rows are
-      // deleted, Delta's semantics — a bare !cond would silently drop
-      // NULL-evaluating rows)
-      val survivors = readTouched(spark, path, rewriteFiles.toSeq.sorted)
-        .filter(!coalesce(expr(condition), lit(false)))
-      writeDataFiles(survivors, m.colMap, m.pcols, root, dataDir)
-      val listed = listWithStats(hfs, root, dataDir)
-      m.bloomCfg.foreach { case (cs, b) =>
-        writeBlooms(spark, hfs, root, dataDir, cs.map(physOf(m.colMap, _)), b) }
-      listed
-    } else (Seq.empty[String], Map.empty[String, Map[String, (String, String)]],
-      Map.empty[String, Long])
-    publishDml(hfs, root, RawManifest(next, ts, "delete", Some(prev), newFiles,
-      touchedFiles.toSeq.sorted, None, Some(snapSchema.json), newStats,
-      addRows = newRows), candidates.toSet,
-      st => mayMatch(st, condExpr), m.colMap)
+    val touchedFiles = resolveTouched(h.m.files, touched)
+    val rewriteFiles = resolveTouched(h.m.files, touched -- fullyGone)
+    // the rewrite reads ONLY the partially-covered files (the plan's scan
+    // is boundary-sized); keep rows where the predicate is false OR NULL
+    // (three-valued logic: only cond-IS-TRUE rows are deleted, Delta's
+    // semantics — a bare !cond would silently drop NULL-evaluating rows)
+    val written =
+      if (rewriteFiles.isEmpty) NothingWritten
+      else h.rewrite(h.scan(rewriteFiles.toSeq.sorted)
+        .filter(!coalesce(expr(condition), lit(false))))
+    h.commitDml(ts, "delete", written, touchedFiles, candidates, mayMatch(_, condExpr))
   }
 
-  /** Validate an UPDATE's SET clause against the snapshot schema and
-    * return (touched files, the resolved assignment exprs cast to the
-    * column's existing type — Delta casts rather than evolves). */
-  private def updatePlan(spark: SparkSession, root: Path, m: Manifest,
-      snapSchema: StructType, condition: String, set: Map[String, String],
-      path: String): Set[String] = {
+  /** An UPDATE's SET clause may only target snapshot columns (the
+    * assignments are cast to the column's existing type — Delta casts
+    * rather than evolves). */
+  private def requireKnownSet(snapSchema: StructType, set: Map[String, String],
+      path: String): Unit = {
     val unknown = set.keys.filterNot(snapSchema.fieldNames.contains)
     if (unknown.nonEmpty) throw new SchemaMismatchException(
       s"update SET targets columns ${unknown.mkString("[", ",", "]")} not in the " +
         s"table schema at $path")
-    val condExpr = spark.sessionState.sqlParser.parseExpression(condition)
-    val candidates =
-      m.files.filter(f => mayMatch(logicalStatsOf(m, f), condExpr))
-    val touched =
-      if (candidates.isEmpty) Set.empty[String]
-      else scanLive(spark, root, candidates, m.dvs, m.colMap, m.retired,
-          physReadSchema(m))
-        .filter(expr(condition))
-        .select("__file").distinct()
-        .collect().map(_.getString(0)).toSet
-    require(!touched.contains(""), "scan returned a file outside the table layout")
-    touched
   }
 
   /** The SET clause applied to every cond-IS-TRUE row of `df`; other
@@ -4380,45 +4329,33 @@ object VersionedTable {
     * expression (evaluated against the pre-update row, cast to the
     * column's existing type); everything else carries unchanged. Only
     * files CONTAINING a matched row are rewritten — stats-pruned
-    * discovery then a touched-files-only rewrite, the same two-phase
-    * machinery as [[delete]]/[[merge]], so an update touching one day
-    * of a date-laid 100 TB table rewrites that day's files, not the
-    * table. `set` maps column name → SQL expression string. */
+    * discovery then a touched-files-only rewrite, so an update touching
+    * one day of a date-laid 100 TB table rewrites that day's files, not
+    * the table. `set` maps column name → SQL expression string. */
   def update(spark: SparkSession, path: String, condition: String,
       set: Map[String, String], ts: String = "1970-01-01T00:00:00Z"): Long = {
-    val (hfs, root) = fs(spark, path)
-    val prev = versions(hfs, root).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"update of empty table at $path"))
-    val m = readManifest(hfs, root, prev)
-    val snapSchema = snapshotSchema(spark, root, m)
+    val h = openHead(spark, path, "update of")
+    val m = h.m
+    val snapSchema = h.schema
     requireNotAppendOnly(m.props, path, "update")
     requireNoIdentityConflict(m.props, path, "update", assignedCols = set.keys)
-    val touched = updatePlan(spark, root, m, snapSchema, condition, set, path)
-    val touchedFiles = resolveTouched(m.files, touched)
-    val next = prev + 1
-    val dataDir = newDataDir(next)
-    val (newFiles, newStats, newRows) = if (touchedFiles.nonEmpty) {
-      val pre = readTouched(spark, path, touchedFiles.toSeq.sorted)
-      // constraints gate the POST-IMAGES (cond evaluated on pre-values:
-      // applySet over the matched slice) before the rewrite lands
-      if (m.constraints.nonEmpty)
-        enforceConstraints(
-          applySet(pre.filter(coalesce(expr(condition), lit(false))),
-            snapSchema, condition, set), m.constraints, path)
-      val rewritten = applySet(pre, snapSchema, condition, set)
-      writeDataFiles(rewritten, m.colMap, m.pcols, root, dataDir)
-      val listed = listWithStats(hfs, root, dataDir)
-      m.bloomCfg.foreach { case (cs, b) =>
-        writeBlooms(spark, hfs, root, dataDir, cs.map(physOf(m.colMap, _)), b) }
-      listed
-    } else (Seq.empty[String], Map.empty[String, Map[String, (String, String)]],
-      Map.empty[String, Long])
+    requireKnownSet(snapSchema, set, path)
     val condExpr = spark.sessionState.sqlParser.parseExpression(condition)
-    publishDml(hfs, root, RawManifest(next, ts, "update", Some(prev), newFiles,
-      touchedFiles.toSeq.sorted, None, Some(snapSchema.json), newStats,
-      addRows = newRows),
-      m.files.filter(f => mayMatch(logicalStatsOf(m, f), condExpr)).toSet,
-      st => mayMatch(st, condExpr), m.colMap)
+    val candidates = h.candidates(condExpr)
+    val touchedFiles = h.touched(candidates)(_.filter(expr(condition)))
+    val written =
+      if (touchedFiles.isEmpty) NothingWritten
+      else {
+        val pre = h.scan(touchedFiles.toSeq.sorted)
+        // constraints gate the POST-IMAGES (cond evaluated on pre-values:
+        // applySet over the matched slice) before the rewrite lands
+        if (m.constraints.nonEmpty)
+          enforceConstraints(
+            applySet(pre.filter(coalesce(expr(condition), lit(false))),
+              snapSchema, condition, set), m.constraints, path)
+        h.rewrite(applySet(pre, snapSchema, condition, set))
+      }
+    h.commitDml(ts, "update", written, touchedFiles, candidates, mayMatch(_, condExpr))
   }
 
   /** Merge-on-read UPDATE (Delta's DV-backed UPDATE): ONE commit that
@@ -4436,79 +4373,34 @@ object VersionedTable {
   def updateMergeOnRead(spark: SparkSession, path: String, condition: String,
       set: Map[String, String], ts: String = "1970-01-01T00:00:00Z",
       maxVectoredFraction: Double = 0.5): Long = {
-    val (hfs, root) = fs(spark, path)
-    val prev = versions(hfs, root).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"update of empty table at $path"))
-    val m = readManifest(hfs, root, prev)
-    val snapSchema = snapshotSchema(spark, root, m)
+    val h = openHead(spark, path, "update of")
+    val m = h.m
+    val snapSchema = h.schema
     requireNotAppendOnly(m.props, path, "updateMergeOnRead")
     requireNoIdentityConflict(m.props, path, "updateMergeOnRead",
       assignedCols = set.keys)
     val condExpr = spark.sessionState.sqlParser.parseExpression(condition)
-    val unknown = set.keys.filterNot(snapSchema.fieldNames.contains)
-    if (unknown.nonEmpty) throw new SchemaMismatchException(
-      s"update SET targets columns ${unknown.mkString("[", ",", "]")} not in the " +
-        s"table schema at $path")
-    val candidates =
-      m.files.filter(f => mayMatch(logicalStatsOf(m, f), condExpr))
-    val next = prev + 1
-    if (candidates.isEmpty) {
-      return publishDml(hfs, root, RawManifest(next, ts, "update_mor", Some(prev),
-        Seq.empty, Seq.empty, None, Some(snapSchema.json), Map.empty),
-        Set.empty, st => mayMatch(st, condExpr), m.colMap)
-    }
-    val hit = coalesce(expr(condition), lit(false))
+    requireKnownSet(snapSchema, set, path)
+    val candidates = h.candidates(condExpr)
+    if (candidates.isEmpty) return h.commitDml(ts, "update_mor", NothingWritten,
+      Set.empty, Seq.empty, mayMatch(_, condExpr))
     // the matched slice feeds TWO writes (the vector and the
     // post-images) — persist it so the candidate files are scanned
     // once, not once per write
-    val matched = scanLive(spark, root, candidates, m.dvs,
-      m.colMap, m.retired, physReadSchema(m)).filter(hit).persist()
-    val dvDir = newDataDir(next)
-    val oldDv = dvFrame(spark, root, candidates, m.dvs)
-    val newDel = matched.select(col("__file").as("file"), col("__pos").as("pos"))
-    // distinct, as in deleteMergeOnRead: the new vector is a SET
-    val out = oldDv.fold(newDel)(newDel.unionByName(_)).distinct()
-    out.write.mode("overwrite").parquet(new Path(root, dvDir).toString)
-    val posCounts = spark.read.parquet(new Path(root, dvDir).toString)
-      .groupBy("file").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val touched = posCounts.keySet
-    if (touched.isEmpty) {
-      matched.unpersist()
-      hfs.delete(new Path(root, dvDir), true)
-      return publishDml(hfs, root, RawManifest(next, ts, "update_mor", Some(prev),
-        Seq.empty, Seq.empty, None, Some(snapSchema.json), Map.empty),
-        candidates.toSet, st => mayMatch(st, condExpr), m.colMap)
-    }
-    require(!touched.contains(""), "scan returned a file outside the table layout")
-    val touchedFiles = resolveTouched(m.files, touched)
-    // post-images: the matched rows with SET applied, appended as fresh
-    // files (cond is TRUE on every row here, but applySet re-evaluates
-    // it so assignments see the pre-update row exactly as COW does)
-    val dataDir = newDataDir(next)
-    val post = applySet(matched.drop("__file", "__pos")
-      .select(snapSchema.fieldNames.map(col).toIndexedSeq: _*),
-      snapSchema, condition, set)
-    if (m.constraints.nonEmpty) enforceConstraints(post, m.constraints, path)
-    writeDataFiles(post, m.colMap, m.pcols, root, dataDir)
-    matched.unpersist()
-    val (newFiles, newStats, newRows) = listWithStats(hfs, root, dataDir)
-    m.bloomCfg.foreach { case (cs, b) =>
-      writeBlooms(spark, hfs, root, dataDir, cs.map(physOf(m.colMap, _)), b) }
-    // auto-materialization, as in deleteMergeOnRead: files vectored past
-    // the threshold fold COW-style in this same commit
-    val (folded, foldAdds, foldStats, foldRows) = foldHeavyVectored(spark, hfs, root,
-      m, next, touchedFiles, dvDir, posCounts, maxVectoredFraction)
-    val dvEntries = (touchedFiles -- folded).map(_ -> dvDir).toMap
-    if (dvEntries.isEmpty) hfs.delete(new Path(root, dvDir), true)
-    // same MoR fast-path soundness argument as deleteMergeOnRead
-    publishDml(hfs, root, RawManifest(next, ts, "update_mor", Some(prev),
-      newFiles ++ foldAdds, folded.toSeq.sorted, None,
-      Some(snapSchema.json), newStats ++ foldStats, dvEntries,
-      addRows = newRows ++ foldRows,
-      addDvCounts = dvEntries.keys.flatMap(f =>
-        posCounts.get(relLayoutName(f)).map(f -> _)).toMap),
-      candidates.toSet, st => mayMatch(st, condExpr), m.colMap)
+    val matched = h.live(candidates).filter(coalesce(expr(condition), lit(false)))
+      .persist()
+    try commitVectors(h, ts, "update_mor", condExpr, candidates,
+      matched.select(col("__file").as("file"), col("__pos").as("pos")),
+      maxVectoredFraction) {
+      // post-images: the matched rows with SET applied, appended as fresh
+      // files (cond is TRUE on every row here, but applySet re-evaluates
+      // it so assignments see the pre-update row exactly as COW does)
+      val post = applySet(matched.drop("__file", "__pos")
+        .select(snapSchema.fieldNames.map(col).toIndexedSeq: _*),
+        snapSchema, condition, set)
+      if (m.constraints.nonEmpty) enforceConstraints(post, m.constraints, path)
+      h.rewrite(post)
+    } finally matched.unpersist()
   }
 
   /** Predicate-scoped overwrite (Delta's `replaceWhere` write option):
@@ -4534,14 +4426,12 @@ object VersionedTable {
   def replaceWhere(df0: DataFrame, path: String, condition: String,
       ts: String = "1970-01-01T00:00:00Z"): Long = {
     val spark = df0.sparkSession
-    val (hfs, root) = fs(spark, path)
-    val prev = versions(hfs, root).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"replaceWhere on empty table at $path"))
-    val m = readManifest(hfs, root, prev)
+    val h = openHead(spark, path, "replaceWhere on")
+    val m = h.m
     requireNotAppendOnly(m.props, path, "replaceWhere")
     requireNoIdentityConflict(m.props, path, "replaceWhere", inserts = true)
     val df = applyGens(df0, m.gens)
-    val snapSchema = snapshotSchema(spark, root, m)
+    val snapSchema = h.schema
     if (snapSchema.fieldNames.toSet != df.schema.fieldNames.toSet)
       throw new SchemaMismatchException(
         s"replaceWhere batch schema ${df.schema.fieldNames.mkString("[", ",", "]")} " +
@@ -4552,35 +4442,18 @@ object VersionedTable {
       throw new IllegalArgumentException(
         s"replaceWhere batch contains rows outside its scope [$condition] at $path")
     val condExpr = spark.sessionState.sqlParser.parseExpression(condition)
-    val candidates =
-      m.files.filter(f => mayMatch(logicalStatsOf(m, f), condExpr))
-    val touched =
-      if (candidates.isEmpty) Set.empty[String]
-      else scanLive(spark, root, candidates, m.dvs, m.colMap, m.retired,
-          physReadSchema(m))
-        .filter(expr(condition))
-        .select("__file").distinct()
-        .collect().map(_.getString(0)).toSet
-    require(!touched.contains(""), "scan returned a file outside the table layout")
-    val touchedFiles = resolveTouched(m.files, touched)
-    val next = prev + 1
-    val dataDir = newDataDir(next)
+    val candidates = h.candidates(condExpr)
+    val touchedFiles = h.touched(candidates)(_.filter(expr(condition)))
     val aligned = df.select(snapSchema.fieldNames.map(col).toSeq: _*)
     if (m.constraints.nonEmpty)
       enforceConstraints(aligned, m.constraints, path)
     val out =
       if (touchedFiles.isEmpty) aligned
-      else readTouched(spark, path, touchedFiles.toSeq.sorted)
+      else h.scan(touchedFiles.toSeq.sorted)
         .filter(!coalesce(expr(condition), lit(false)))
         .unionByName(aligned)
-    writeDataFiles(out, m.colMap, m.pcols, root, dataDir)
-    val (newFiles, newStats, newRows) = listWithStats(hfs, root, dataDir)
-    m.bloomCfg.foreach { case (cs, b) =>
-      writeBlooms(spark, hfs, root, dataDir, cs.map(physOf(m.colMap, _)), b) }
-    publishDml(hfs, root, RawManifest(next, ts, "replace", Some(prev), newFiles,
-      touchedFiles.toSeq.sorted, None, Some(snapSchema.json), newStats,
-      addRows = newRows), candidates.toSet,
-      st => mayMatch(st, condExpr), m.colMap)
+    h.commitDml(ts, "replace", h.rewrite(out), touchedFiles, candidates,
+      mayMatch(_, condExpr))
   }
 
   /** Shallow clone (Delta `CLONE ... SHALLOW`): create a NEW table at
@@ -4749,10 +4622,7 @@ object VersionedTable {
       newName: String, ts: String = "1970-01-01T00:00:00Z"): Long = {
     require(newName.nonEmpty && !Seq("|", ",", "=", "\n").exists(newName.contains),
       s"bad column name: $newName")
-    val (hfs, root) = fs(spark, path)
-    val prev = versions(hfs, root).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"renameColumn on empty table at $path"))
-    val m = readManifest(hfs, root, prev)
+    val Head(_, hfs, root, prev, m) = openHead(spark, path, "renameColumn on")
     val schema = snapshotSchema(spark, root, m)
     require(schema.fieldNames.contains(oldName), s"no column $oldName at $path")
     if (schema.fieldNames.contains(newName)) throw new SchemaMismatchException(
@@ -4791,10 +4661,7 @@ object VersionedTable {
     * references the column. */
   def dropColumn(spark: SparkSession, path: String, colName: String,
       ts: String = "1970-01-01T00:00:00Z"): Long = {
-    val (hfs, root) = fs(spark, path)
-    val prev = versions(hfs, root).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"dropColumn on empty table at $path"))
-    val m = readManifest(hfs, root, prev)
+    val Head(_, hfs, root, prev, m) = openHead(spark, path, "dropColumn on")
     val schema = snapshotSchema(spark, root, m)
     require(schema.fieldNames.contains(colName), s"no column $colName at $path")
     require(schema.fields.length >= 2, s"cannot drop the only column at $path")
