@@ -216,6 +216,8 @@ object Models {
       sum(dy).as("sy"),
       sum(dy * dy).as("syy")).head()
     val n = row.getAs[Long]("n").toDouble
+    require(n > 0, "regressionMetrics: the predictions frame is empty; " +
+      "rmse, mae and r2 are undefined for n = 0")
     val sse = row.getAs[Double]("sse")
     val ssTot = row.getAs[Double]("syy") - row.getAs[Double]("sy") * row.getAs[Double]("sy") / n
     Map(

@@ -18,9 +18,14 @@ import graft.scoring.Scoring
   * or none. Laziness does the dependency ordering: nothing executes until
   * a sink materializes a frame, and Catalyst sees the WHOLE lineage (a
   * DAG of Spark plans, not of opaque tasks), so cross-stage optimization
-  * — pushdown through the silver projection into the bronze scan, reuse
-  * of the silver exchange across gold builds — happens for free, which
-  * per-task orchestration can never do. */
+  * such as pushdown through the silver projection into the bronze scan
+  * happens for free, which per-task orchestration can never do. What
+  * laziness does NOT give is one silver computation per run: each table
+  * written is its own query over a differently column-pruned silver
+  * branch, and Catalyst does not reuse the silver exchange across them.
+  * [[Runner.run]] therefore persists silver once per pass (and takes each
+  * table's row count from an `Observation` on its write). A caller that
+  * writes several of these frames itself should persist silver too. */
 object Pipeline {
 
   /** bronze → silver → star schema + aggregates, keyed like the

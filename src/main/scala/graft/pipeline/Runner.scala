@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.sources.Sinks
 
@@ -19,35 +20,68 @@ import graft.sources.Sinks
   * alert, volume-drop alert at 1 − volume_drop_ratio — the reference's
   * monitoring: block (config.yaml:27-31) driving real columns.
   *
-  * Scale: one session, one silver plan shared by every stage (Catalyst
-  * reuses the exchange); each write is a single pass over its frame. At
+  * Scale: one session, and silver is computed ONCE per [[run]]. Every
+  * stage table is a different column-pruned branch of silver, and
+  * Catalyst never reuses an exchange across branches pruned to different
+  * columns, so without a cache each write would re-run the bronze scan
+  * and the silver dedup shuffle. `run` therefore persists silver before
+  * any stage frame is built and drops it when the pass ends. Each write
+  * is then a single pass over its frame, and its row count comes from an
+  * [[Observation]] on that pass, not from re-reading the table. At
   * 100 TB the only knob that matters here is `spark.shuffle_partitions`,
   * which the config owns — everything else is per-operator design
   * (see the operator scaladocs). */
 object Runner {
 
   /** Run the configured stages; returns (qualified table name → rows
-    * written), in write order. Row counts come free from the write via
-    * each frame's post-write metric read-back being unnecessary — we
-    * count on the written files to keep the write itself the only job. */
+    * written), in write order. Silver is persisted before the stage
+    * frames are built because some builders run actions while building
+    * (`Mobility.zonePageRank` counts and collects its edges), and those
+    * must read the cache too; it is unpersisted even when a write fails. */
   def run(spark: SparkSession, cfg: GraftConfig): Seq[(String, Long)] = {
-    val frames: Seq[(String, DataFrame)] = stageFrames(spark, cfg)
-    frames.map { case (name, df) =>
+    val medallion = Pipeline.runMedallion(spark, cfg.inputDir)
+    val silver = medallion("silver")
+    persistKeepingLayout(silver)
+    try frames(cfg, medallion).map { case (name, df) =>
       val path = s"${cfg.outputDir}/$name"
+      val rows = Observation()
+      val observed = df.observe(rows, count(lit(1)).as("rows"))
       if (df.columns.contains("event_date"))
-        Sinks.writePartitioned(df, path, Seq("event_date"))
+        Sinks.writePartitioned(observed, path, Seq("event_date"))
       else
-        df.write.mode("overwrite").parquet(path)
-      name -> spark.read.parquet(path).count()
+        observed.write.mode("overwrite").parquet(path)
+      name -> rows.get("rows").asInstanceOf[Long]
+    }
+    finally silver.unpersist()
+  }
+
+  /** The lazy frame DAG for the configured stages (no writes, nothing
+    * persisted) — what `run` materializes, exposed for tests and
+    * notebook use. */
+  def stageFrames(spark: SparkSession, cfg: GraftConfig): Seq[(String, DataFrame)] =
+    frames(cfg, Pipeline.runMedallion(spark, cfg.inputDir))
+
+  /** Persist `df` so that its cached plan keeps the partitioning the
+    * uncached plan would have. The cached plan is planned with AQE only
+    * while `canChangeCachedPlanOutputPartitioning` is on; without AQE the
+    * dedup shuffle's partitions are not coalesced, and every table
+    * written from the cache comes out with more files per date. */
+  private def persistKeepingLayout(df: DataFrame): Unit = {
+    val key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    val spark = df.sparkSession
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "true")
+    try df.persist(StorageLevel.MEMORY_AND_DISK)
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
     }
   }
 
-  /** The lazy frame DAG for the configured stages (no writes) — what
-    * `run` materializes, exposed for tests and notebook use. */
-  def stageFrames(spark: SparkSession, cfg: GraftConfig): Seq[(String, DataFrame)] = {
-    // one silver lineage shared across stages, like Pipeline.runAll
-    lazy val medallion = Pipeline.runMedallion(spark, cfg.inputDir)
-    lazy val silver = medallion("silver")
+  /** The stage frames over one medallion map, shared by [[run]] (which
+    * persists its silver first) and [[stageFrames]]. */
+  private def frames(cfg: GraftConfig, medallion: Map[String, DataFrame]): Seq[(String, DataFrame)] = {
+    val silver = medallion("silver")
     cfg.stages.flatMap {
       case "medallion" =>
         medallion.toSeq.sortBy(_._1).map { case (n, df) => s"medallion/$n" -> df }

@@ -4,7 +4,8 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.pipeline.{GraftConfig, Runner}
+import graft.pipeline.{Bronze, GraftConfig, Runner, Silver}
+import graft.sources.Sinks
 
 class ConfigRunnerSpec extends SparkSpec {
 
@@ -109,5 +110,46 @@ class ConfigRunnerSpec extends SparkSpec {
     val pr = spark.read.parquet(s"$out/mobility/zone_pagerank")
     val mass = pr.agg(org.apache.spark.sql.functions.sum("pr")).head().getDouble(0)
     assert(math.abs(mass - 1.0) < 1e-3, s"rank mass $mass")
+  }
+
+  private def cacheIsEmpty: Boolean = spark.sharedState.cacheManager.isEmpty
+
+  test("runner: every returned row count equals the table read back, and no cache outlives the run") {
+    val out = Files.createTempDirectory("graft_run_counts").toString
+    val cfg = GraftConfig.load(writeProps(
+      s"paths.input = $sfDir\npaths.output = $out\nstages = medallion,scoring,monitoring,mobility\n"))
+    spark.catalog.clearCache() // other specs leave their own frames cached
+    Runner.stageFrames(spark, cfg)
+    assert(cacheIsEmpty, "stageFrames must stay lazy and cache nothing")
+    val written = Runner.run(spark, cfg)
+    assert(cacheIsEmpty, "run must unpersist silver when the pass ends")
+    assert(written.map(_._1).toSet.size === written.size)
+    written.foreach { case (name, rows) =>
+      assert(rows === spark.read.parquet(s"$out/$name").count(), s"row count of $name")
+    }
+  }
+
+  test("runner: a failed write leaves no cached silver behind") {
+    val file = Files.createTempFile("graft_run_blocker", ".txt").toString
+    val cfg = GraftConfig.load(writeProps(
+      s"paths.input = $sfDir\npaths.output = $file/out\nstages = medallion,mobility\n"))
+    spark.catalog.clearCache()
+    intercept[Exception] { Runner.run(spark, cfg) }
+    assert(cacheIsEmpty, "run must unpersist silver when a write throws")
+  }
+
+  test("runner: silver written from the cache has the uncached lineage's files per date") {
+    def filesPerDate(path: String): Map[String, Int] =
+      new java.io.File(path).listFiles().filter(_.getName.startsWith("event_date="))
+        .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
+    val out = Files.createTempDirectory("graft_run_layout").toString
+    val cfg = GraftConfig.load(writeProps(
+      s"paths.input = $sfDir\npaths.output = $out/run\nstages = medallion\n"))
+    Runner.run(spark, cfg)
+    Sinks.writePartitioned(Silver.cleanEvents(Bronze.ingestEvents(Tables.events(spark, sfDir))),
+      s"$out/direct", Seq("event_date"))
+    val direct = filesPerDate(s"$out/direct")
+    assert(direct.nonEmpty)
+    assert(filesPerDate(s"$out/run/medallion/silver") === direct)
   }
 }

@@ -201,4 +201,18 @@ class ModelsSpec extends SparkSpec {
       """[{"key":"maxDepth","value":"8"},{"key":"numTrees","value":"20"},{"key":"seed","value":"42"}]""",
       s"params_json not key-sorted deterministic: $pj")
   }
+
+  test("regressionMetrics: exact on a hand-sized frame, fails clearly on an empty one") {
+    import spark.implicits._
+    // e = (0, 0, 1): sse 1, sae 1; label mean 2, SStot 2
+    val m = Models.regressionMetrics(
+      Seq((1.0, 1.0), (2.0, 2.0), (3.0, 4.0)).toDF("label", "prediction"))
+    assert(m("rmse") === math.sqrt(1.0 / 3))
+    assert(m("mae") === 1.0 / 3)
+    assert(m("r2") === 0.5)
+    val e = intercept[IllegalArgumentException] {
+      Models.regressionMetrics(Seq.empty[(Double, Double)].toDF("label", "prediction"))
+    }
+    assert(e.getMessage.contains("empty"), e.getMessage)
+  }
 }
