@@ -90,6 +90,22 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, ByteType, DataType, Da
   * also share the deletion-vector write / fold / commit
   * ([[commitVectors]]).
   *
+  * APPENDS: the three append faces — `commit` in append mode (its
+  * overwrite arm shares the same prelude), `commitIfNew` and
+  * `commitWithRetry` — run ONE sequence ([[commitInternal]]): generated
+  * and identity columns fill in against the head the batch read, the
+  * batch is validated against that head (schema-on-write, type
+  * widening, CHECK constraints, retired physical names, partitioning)
+  * BEFORE any data lands, written once ([[writeBatch]]) and claimed as
+  * the next version. `commit` and `commitIfNew` claim once; a
+  * `commitWithRetry` claim lost to a concurrent writer re-validates the
+  * same batch against the moved head and re-claims the same files. A
+  * rejected batch therefore fails with the same exception on every face
+  * and writes nothing. Every face opens its snapshot once
+  * ([[openSnapshot]]); metadata-only commits (constraints, generated and
+  * identity columns, properties, bloom config, rename/drop, fsck) go
+  * through [[Head.commitMeta]].
+  *
   * Scale notes: every operation here is DRIVER-SIDE METADATA except the
   * data write itself — `history` folds manifest headers (never data),
   * `readVersion` hands Spark an explicit file list (footer-pruned,
@@ -223,18 +239,28 @@ object VersionedTable {
       pcols: Seq[String] = Seq.empty,
       rowCounts: Map[String, Long] = Map.empty,
       dvCounts: Map[String, Long] = Map.empty,
-      props: Map[String, String] = Map.empty)
+      props: Map[String, String] = Map.empty) {
+    /** The partition columns in LOGICAL names (`pcols` are physical —
+      * rename-proof; this maps them back). */
+    def logicalPcols: Seq[String] = {
+      val rev = colMap.map(_.swap)
+      pcols.map(p => rev.getOrElse(p, p))
+    }
+  }
 
   /** One manifest FILE as written: full (base = None, adds = the whole
     * snapshot) or delta (adds/removes applied to base's state).
     * `addDvs` — deletion-vector entries SET at this version (data file →
     * DV dataset dir, `dv=` lines): an entry REPLACES the file's previous
     * one (the new DV is a superset by construction — Delta's DV
-    * semantics), and a removed file's entry drops with the file. */
+    * semantics), and a removed file's entry drops with the file. Every
+    * field past `op` defaults to "nothing": a commit names only what it
+    * records. */
   private case class RawManifest(version: Long, ts: String, op: String,
-      base: Option[Long], adds: Seq[String], removes: Seq[String],
-      txn: Option[(String, Long)], schemaJson: Option[String],
-      addStats: Map[String, Map[String, (String, String)]],
+      base: Option[Long] = None, adds: Seq[String] = Seq.empty,
+      removes: Seq[String] = Seq.empty,
+      txn: Option[(String, Long)] = None, schemaJson: Option[String] = None,
+      addStats: Map[String, Map[String, (String, String)]] = Map.empty,
       addDvs: Map[String, String] = Map.empty,
       addConstraints: Map[String, String] = Map.empty,
       dropConstraints: Set[String] = Set.empty,
@@ -793,14 +819,6 @@ object VersionedTable {
         .parquet(m.files.map(f => new Path(root, f).toString): _*).schema
     }
 
-  /** The current table schema before a commit, from the previous HEAD:
-    * the raw manifest's recorded schema when present (one header read),
-    * else the resolved snapshot's derived one. */
-  private def headSchema(spark: SparkSession, hfs: FileSystem, root: Path,
-      prev: Long, raw: RawManifest): StructType =
-    raw.schemaJson.map(j => DataType.fromJson(j).asInstanceOf[StructType])
-      .getOrElse(snapshotSchema(spark, root, readManifest(hfs, root, prev)))
-
   /** Name-based union: `prev`'s fields (types authoritative) plus the
     * fields `next` adds — the schema an evolved append's readers see. */
   /** Widened common type for a column across an evolution, or None when
@@ -980,11 +998,8 @@ object VersionedTable {
     }.toIndexedSeq: _*)
 
   /** The table's CHECK constraints (name → SQL expression) at head. */
-  def constraintsOf(spark: SparkSession, path: String): Map[String, String] = {
-    val (hfs, root) = fs(spark, path)
-    versions(hfs, root).lastOption
-      .map(readManifest(hfs, root, _).constraints).getOrElse(Map.empty)
-  }
+  def constraintsOf(spark: SparkSession, path: String): Map[String, String] =
+    openSnapshot(spark, path).fold(Map.empty[String, String])(_.m.constraints)
 
   /** Add a CHECK constraint (Delta `ALTER TABLE ADD CONSTRAINT`): a
     * metadata-only commit after which EVERY write path — commit (append
@@ -1002,16 +1017,12 @@ object VersionedTable {
       validate: Boolean = true): Long = {
     require(name.nonEmpty && !name.contains('|') && !name.contains('='),
       s"bad constraint name: $name")
-    val Head(_, hfs, root, prev, m) = openHead(spark, path, "addConstraint on")
-    if (validate && m.files.nonEmpty)
-      enforceConstraints(
-        alignTo(readVersion(spark, path, prev), snapshotSchema(spark, root, m)),
+    val h = openHead(spark, path, "addConstraint on")
+    if (validate && h.m.files.nonEmpty)
+      enforceConstraints(alignTo(h.scan(h.m.files), h.schema),
         Map(name -> expression), path)
-    val next = prev + 1
-    publish(hfs, root, RawManifest(next, ts, s"add_constraint($name)",
-      Some(prev), Seq.empty, Seq.empty, None, m.schemaJson, Map.empty,
-      Map.empty, Map(name -> expression)))
-    next
+    h.commitMeta(ts, s"add_constraint($name)")(
+      _.copy(addConstraints = Map(name -> expression)))
   }
 
   // ------------------------------------------------- identity columns
@@ -1085,7 +1096,8 @@ object VersionedTable {
     require(step != 0L, "identity step must be nonzero")
     require(name.nonEmpty && !name.contains('|') && !name.contains('='),
       s"bad identity column name: $name")
-    val Head(_, hfs, root, prev, m) = openHead(spark, path, "addIdentityColumn on")
+    val h = openHead(spark, path, "addIdentityColumn on")
+    val m = h.m
     // "creation time" = zero live rows: an empty-batch bootstrap commit
     // may have written a rowless part file, which is still creation
     // (manifest row counts are authoritative and present on every file
@@ -1101,12 +1113,9 @@ object VersionedTable {
     require(!m.props.contains(s"$IdentityPropPrefix$name"),
       s"column $name is already an identity column at $path")
     val widened = StructType(cur.fields :+ StructField(name, LongType))
-    val next = prev + 1
-    publish(hfs, root, RawManifest(next, ts, s"add_identity($name)",
-      Some(prev), Seq.empty, Seq.empty, None, Some(widened.json), Map.empty,
+    h.commitMeta(ts, s"add_identity($name)")(_.copy(schemaJson = Some(widened.json),
       propsState = Some(m.props +
         identityProp(name, IdentitySpec(start, step, always, None)))))
-    next
   }
 
   /** Assign identity values to a batch (commit faces call this before
@@ -1198,11 +1207,8 @@ object VersionedTable {
   }
 
   /** The table's generated columns (name → SQL expression) at head. */
-  def generatedColumnsOf(spark: SparkSession, path: String): Map[String, String] = {
-    val (hfs, root) = fs(spark, path)
-    versions(hfs, root).lastOption
-      .map(readManifest(hfs, root, _).gens).getOrElse(Map.empty)
-  }
+  def generatedColumnsOf(spark: SparkSession, path: String): Map[String, String] =
+    openSnapshot(spark, path).fold(Map.empty[String, String])(_.m.gens)
 
   /** Declare an EXISTING column GENERATED (Delta `GENERATED ALWAYS AS`,
     * re-derived): a metadata-only commit after which every commit face
@@ -1228,210 +1234,228 @@ object VersionedTable {
       validate: Boolean = true): Long = {
     require(name.nonEmpty && !name.contains('|') && !name.contains('=') &&
       !name.contains('\n'), s"bad generated column name: $name")
-    val Head(_, hfs, root, prev, m) = openHead(spark, path, "addGeneratedColumn on")
-    val schema = snapshotSchema(spark, root, m)
-    require(schema.fieldNames.contains(name),
+    val h = openHead(spark, path, "addGeneratedColumn on")
+    val m = h.m
+    require(h.schema.fieldNames.contains(name),
       s"no column $name at $path — generated columns are declared over existing columns")
     require(!m.gens.contains(name), s"$name is already generated at $path")
     val ckName = s"gen_$name"
     require(!m.constraints.contains(ckName), s"constraint $ckName already exists at $path")
     val ckExpr = s"$name <=> ($expression)"
     if (validate && m.files.nonEmpty)
-      enforceConstraints(
-        alignTo(readVersion(spark, path, prev), schema),
+      enforceConstraints(alignTo(h.scan(m.files), h.schema),
         Map(ckName -> ckExpr), path)
-    val next = prev + 1
-    publish(hfs, root, RawManifest(next, ts, s"add_generated($name)",
-      Some(prev), Seq.empty, Seq.empty, None, m.schemaJson, Map.empty,
-      Map.empty, Map(ckName -> ckExpr), Set.empty, None, None,
-      Map(name -> expression)))
-    next
+    h.commitMeta(ts, s"add_generated($name)")(_.copy(
+      addConstraints = Map(ckName -> ckExpr), addGens = Map(name -> expression)))
   }
 
   /** Un-declare a generated column (metadata-only): the column stays in
     * the schema and the data; batches must carry it explicitly again. */
   def dropGeneratedColumn(spark: SparkSession, path: String, name: String,
       ts: String = "1970-01-01T00:00:00Z"): Long = {
-    val Head(_, hfs, root, prev, m) = openHead(spark, path, "dropGeneratedColumn on")
-    require(m.gens.contains(name), s"no generated column $name at $path")
-    val next = prev + 1
-    publish(hfs, root, RawManifest(next, ts, s"drop_generated($name)",
-      Some(prev), Seq.empty, Seq.empty, None, m.schemaJson, Map.empty,
-      Map.empty, Map.empty, Set(s"gen_$name"), None, None,
-      Map.empty, Set(name)))
-    next
+    val h = openHead(spark, path, "dropGeneratedColumn on")
+    require(h.m.gens.contains(name), s"no generated column $name at $path")
+    h.commitMeta(ts, s"drop_generated($name)")(_.copy(
+      dropConstraints = Set(s"gen_$name"), dropGens = Set(name)))
   }
 
   /** Drop a CHECK constraint — metadata-only commit; time travel before
     * it still sees (and CDF replay re-derives) the constrained epochs. */
   def dropConstraint(spark: SparkSession, path: String, name: String,
       ts: String = "1970-01-01T00:00:00Z"): Long = {
-    val Head(_, hfs, root, prev, m) = openHead(spark, path, "dropConstraint on")
-    require(m.constraints.contains(name), s"no constraint $name at $path")
-    val next = prev + 1
-    publish(hfs, root, RawManifest(next, ts, s"drop_constraint($name)",
-      Some(prev), Seq.empty, Seq.empty, None, m.schemaJson, Map.empty,
-      Map.empty, Map.empty, Set(name)))
-    next
+    val h = openHead(spark, path, "dropConstraint on")
+    require(h.m.constraints.contains(name), s"no constraint $name at $path")
+    h.commitMeta(ts, s"drop_constraint($name)")(_.copy(dropConstraints = Set(name)))
   }
 
+  /** The one commit sequence of the append and overwrite faces
+    * ([[commit]], [[commitIfNew]], [[commitWithRetry]]): validate the
+    * batch against the head it read, write it ONCE, claim the next
+    * version. A claim lost to a concurrent writer is retried up to
+    * `maxRetries` times (0 for `commit` and `commitIfNew`): each retry
+    * re-validates the same batch against the moved head and re-points
+    * the manifest at the same files. `beforeClaim(next)` runs just
+    * before every claim — the window a concurrent winner lands in. */
   private def commitInternal(df0: DataFrame, path: String, mode: String,
       ts: String, txn: Option[(String, Long)],
       mergeSchema: Boolean = false, bloomIndex: Seq[String] = Seq.empty,
-      bloomBits: Int = 1 << 17, partitionBy: Seq[String] = Seq.empty): Long = {
+      bloomBits: Int = 1 << 17, partitionBy: Seq[String] = Seq.empty,
+      maxRetries: Int = 0, beforeClaim: Long => Unit = _ => ()): Long = {
     require(mode == "append" || mode == "overwrite", s"bad mode: $mode")
+    val append = mode == "append"
     val spark = df0.sparkSession
     val (hfs, root) = fs(spark, path)
-    val prev = versions(hfs, root).lastOption
-    val prevM = prev.map(p => readManifest(hfs, root, p))
+    val first = openSnapshot(spark, path)
     // an overwrite of a NON-EMPTY table replaces its rows
-    if (mode == "overwrite")
-      prevM.foreach(pm => requireNotAppendOnly(pm.props, path, "overwrite"))
+    if (!append) first.foreach(h => requireNotAppendOnly(h.m.props, path, "overwrite"))
     // GENERATED columns compute-if-absent BEFORE the schema check: a
     // batch omitting a generated column is the intended write shape
     // (the paired gen_<name> CHECK constraint validates batches that
     // carry it explicitly). IDENTITY columns assign the same way (and a
-    // batch CARRYING a GENERATED ALWAYS identity column refuses).
-    val idSpecs = prevM.map(pm => identitySpecs(pm.props)).getOrElse(Map.empty)
+    // batch CARRYING a GENERATED ALWAYS identity column refuses), against
+    // the FIRST head's high-water mark: the data is written once.
+    val idSpecs = first.fold(Map.empty[String, IdentitySpec])(h => identitySpecs(h.m.props))
     val (df, _) = assignIdentity(
-      applyGens(df0, prevM.map(_.gens).getOrElse(Map.empty)), idSpecs, path)
-    val prevSchema =
-      if (mode == "append")
-        prev.map(p => headSchema(spark, hfs, root, p, readRaw(hfs, root, p)))
-      else None
-    // Schema-on-write (append only — an overwrite REPLACES the snapshot,
-    // new schema and all): the batch's column names must equal the
-    // current SNAPSHOT schema — the recorded/union schema, not one
-    // file's footer, which after an earlier evolution under-reports the
-    // table — or the table would silently fork. With
-    // `mergeSchema = true` the append is allowed and readers see the
-    // union schema (readVersion passes mergeSchema through to parquet;
-    // old files read the new columns as null) — Delta's
-    // autoMerge evolution.
-    if (mode == "append" && !mergeSchema) prevSchema
-      .filter(_.fieldNames.toSet != df.schema.fieldNames.toSet)
-      .foreach { ps =>
-        throw new SchemaMismatchException(
-          s"append schema ${df.schema.fieldNames.mkString("[", ",", "]")} does not " +
-            s"match table schema ${ps.fieldNames.mkString("[", ",", "]")} at $path; " +
-            "pass mergeSchema = true to evolve")
+      applyGens(df0, first.fold(Map.empty[String, String])(_.m.gens)), idSpecs, path)
+
+    // The batch's checks against head `h` — the snapshot schema, column
+    // mapping and partition columns it lands under, or the rejection.
+    def validate(h: Option[Head]): (StructType, Map[String, String], Seq[String]) = {
+      val hm = h.map(_.m)
+      val prevSchema = if (append) h.map(_.schema) else None
+      // Schema-on-write (append only — an overwrite REPLACES the
+      // snapshot, new schema and all): the batch's column names must
+      // equal the current SNAPSHOT schema — the recorded/union schema,
+      // not one file's footer, which after an earlier evolution
+      // under-reports the table — or the table would silently fork. With
+      // `mergeSchema = true` the append is allowed and readers see the
+      // union schema (old files read the new columns as null) — Delta's
+      // autoMerge evolution.
+      if (append && !mergeSchema) prevSchema
+        .filter(_.fieldNames.toSet != df.schema.fieldNames.toSet)
+        .foreach { ps =>
+          throw new SchemaMismatchException(
+            s"append schema ${df.schema.fieldNames.mkString("[", ",", "]")} does not " +
+              s"match table schema ${ps.fieldNames.mkString("[", ",", "]")} at $path; " +
+              "pass mergeSchema = true to evolve")
+        }
+      val snapSchema = prevSchema.fold(df.schema)(unionSchema(_, df.schema))
+      // TYPE evolution is gated like column evolution: a batch that
+      // WIDENS an existing column (int table, long batch) is schema
+      // drift unless mergeSchema = true; incompatible pairs threw in
+      // unionSchema above. A batch NARROWER than the table always
+      // upcasts silently (no drift — the table's contract absorbs it).
+      if (append && !mergeSchema) prevSchema.foreach { ps =>
+        val widenedCols = ps.fields.filter(f =>
+          snapSchema.fields.exists(sf => sf.name == f.name && sf.dataType != f.dataType))
+          .map(_.name)
+        if (widenedCols.nonEmpty) throw new SchemaMismatchException(
+          s"append widens columns ${widenedCols.mkString("[", ",", "]")} at $path; " +
+            "pass mergeSchema = true to evolve the type")
       }
-    val snapSchema = prevSchema.fold(df.schema)(unionSchema(_, df.schema))
-    // TYPE evolution is gated like column evolution: a batch that
-    // WIDENS an existing column (int table, long batch) is schema
-    // drift unless mergeSchema = true; incompatible pairs threw in
-    // unionSchema above. A batch NARROWER than the table always
-    // upcasts silently (no drift — the table's contract absorbs it).
-    if (mode == "append" && !mergeSchema) prevSchema.foreach { ps =>
-      val widenedCols = ps.fields.filter(f =>
-        snapSchema.fields.exists(sf => sf.name == f.name && sf.dataType != f.dataType))
-        .map(_.name)
-      if (widenedCols.nonEmpty) throw new SchemaMismatchException(
-        s"append widens columns ${widenedCols.mkString("[", ",", "]")} at $path; " +
-          "pass mergeSchema = true to evolve the type")
-    }
-    // CHECK constraints gate the batch BEFORE any data lands — table
-    // metadata, so they apply to appends AND overwrites (an overwrite
-    // replaces the data, not the table's contract)
-    val prevCks = prevM.map(_.constraints).getOrElse(Map.empty)
-    if (prevCks.nonEmpty) {
-      // constraint EVALUATION always sees union(prev schema, batch): an
-      // overwrite batch omitting a constrained column must read NULL
-      // there (NULL passes — SQL CHECK), not fail with an
-      // unresolved-attribute error; the RECORDED snapshot schema for an
-      // overwrite stays df.schema (overwrite replaces schema and all)
-      val ckSchema =
-        if (mode == "append") snapSchema
-        else prev.map(p =>
-          unionSchema(headSchema(spark, hfs, root, p, readRaw(hfs, root, p)),
-            df.schema)).getOrElse(df.schema)
-      enforceConstraints(alignTo(df, ckSchema), prevCks, path)
-    }
-    // column-mapping state: appends inherit it (batches arrive in
-    // LOGICAL names, land in physical); an overwrite replaces schema,
-    // data and mapping together — a fresh identity world
-    val (cmap, retired) =
-      if (mode == "append")
-        prevM.map(pm => (pm.colMap, pm.retired))
-          .getOrElse((Map.empty[String, String], Set.empty[String]))
-      else (Map.empty[String, String], Set.empty[String])
-    // retirement guard: an evolved append may not introduce a logical
-    // column whose name collides with a physical name already in use
-    // (another column's storage name) or retired (a dropped column's —
-    // its data still lives in old files); allowing it would make two
-    // unrelated columns share one physical name across file generations
-    if (mode == "append" && (cmap.nonEmpty || retired.nonEmpty)) {
-      val prior = prevSchema.map(_.fieldNames.toSet).getOrElse(Set.empty)
+      // CHECK constraints gate the batch BEFORE any data lands — table
+      // metadata, so they apply to appends AND overwrites (an overwrite
+      // replaces the data, not the table's contract). Evaluation always
+      // sees union(head schema, batch): an overwrite batch omitting a
+      // constrained column must read NULL there (NULL passes — SQL
+      // CHECK), not fail with an unresolved-attribute error; the RECORDED
+      // snapshot schema for an overwrite stays df.schema
+      val cks = hm.fold(Map.empty[String, String])(_.constraints)
+      if (cks.nonEmpty)
+        enforceConstraints(alignTo(df,
+          if (append) snapSchema
+          else h.fold(df.schema)(x => unionSchema(x.schema, df.schema))), cks, path)
+      // column-mapping state: appends inherit it (batches arrive in
+      // LOGICAL names, land in physical); an overwrite replaces schema,
+      // data and mapping together — a fresh identity world
+      val inherited = hm.filter(_ => append)
+      val cmap = inherited.fold(Map.empty[String, String])(_.colMap)
+      val retired = inherited.fold(Set.empty[String])(_.retired)
+      // retirement guard: an evolved append may not introduce a logical
+      // column whose name collides with a physical name already in use
+      // (another column's storage name) or retired (a dropped column's —
+      // its data still lives in old files); allowing it would make two
+      // unrelated columns share one physical name across file generations
+      val prior = prevSchema.fold(Set.empty[String])(_.fieldNames.toSet)
       val blocked = df.schema.fieldNames.filterNot(prior).filter(c =>
         retired.contains(c) || cmap.exists { case (l, p) => p == c && l != c })
       if (blocked.nonEmpty) throw new SchemaMismatchException(
         s"new columns ${blocked.mkString("[", ",", "]")} collide with " +
           s"physical names in use or retired by rename/drop at $path")
-    }
-    // partitioning is immutable table metadata (PHYSICAL names in the
-    // manifest, so renameColumn never touches it): appends inherit —
-    // an explicit partitionBy on an append may only RESTATE the
-    // table's; an overwrite replaces layout, data and schema together
-    val declaredP = partitionBy.map(physOf(cmap, _))
-    val pcols =
-      if (mode == "append" && prevM.nonEmpty) {
-        val cur = prevM.get.pcols
-        if (partitionBy.nonEmpty && declaredP != cur)
+      // partitioning is immutable table metadata (PHYSICAL names in the
+      // manifest, so renameColumn never touches it): appends inherit —
+      // an explicit partitionBy on an append may only RESTATE the
+      // table's; an overwrite replaces layout, data and schema together
+      val declaredP = partitionBy.map(physOf(cmap, _))
+      val pcols = inherited.fold(declaredP) { pm =>
+        if (partitionBy.nonEmpty && declaredP != pm.pcols)
           throw new IllegalArgumentException(
             s"append partitionBy ${declaredP.mkString("[", ",", "]")} does not " +
-              s"match table partitioning ${cur.mkString("[", ",", "]")} at $path; " +
+              s"match table partitioning ${pm.pcols.mkString("[", ",", "]")} at $path; " +
               "partition columns are fixed at table creation (overwrite to relayout)")
-        cur
-      } else declaredP
+        pm.pcols
+      }
+      (snapSchema, cmap, pcols)
+    }
+
+    val (snap0, cmap, pcols) = validate(first)
     validatePcols(pcols, toPhysical(df, cmap).schema, path)
     requireIdentityNotPartition(idSpecs, pcols, cmap, path)
-    val next = prev.map(_ + 1).getOrElse(0L)
     // bloom index config is TABLE metadata: an explicit `bloomIndex` arg
     // sets/updates it; otherwise the persisted config applies, so a
     // plain append to an indexed table keeps its sidecars without the
     // caller restating the columns (Delta persists the config as a
-    // table property for exactly this reason)
+    // table property for exactly this reason); an overwrite without an
+    // explicit index drops the config with the data it described
     val cfg =
       if (bloomIndex.nonEmpty) Some((bloomIndex, bloomBits))
-      else if (mode == "append") prevM.flatMap(_.bloomCfg)
-      else None // overwrite without an explicit index drops the config
-                // with the data it described — re-state to keep it
-    // Data first: a crash after this leaves an orphaned directory that
-    // vacuum reclaims; the table is unchanged until the manifest claims.
-    // Narrow batch columns upcast to the snapshot types so every NEW
-    // file carries the table's current (possibly widened) types.
-    val w = writeBatch(spark, hfs, root, next, alignTypes(df, snapSchema),
-      cmap, pcols, cfg)
-    // append = DELTA manifest against prev (O(batch) log write — the
-    // previous file list is never re-serialized); overwrite/first = full
-    // manifest, which must CARRY the constraints and bloom config (delta
-    // manifests inherit them through base — the cfg line is only
-    // written when this commit CHANGES it)
-    val base = if (mode == "append") prev else None
-    val cfgLine = if (base.isEmpty) cfg
-      else if (bloomIndex.nonEmpty && cfg != prevM.flatMap(_.bloomCfg)) cfg
+      else if (append) first.flatMap(_.m.bloomCfg)
       else None
-    publish(hfs, root, RawManifest(next, ts, mode, base, w.files,
-      Seq.empty, txn, Some(snapSchema.json), w.stats,
-      Map.empty, if (base.isEmpty) prevCks else Map.empty, Set.empty,
-      cfgLine, None,
-      if (base.isEmpty) prevM.map(_.gens).getOrElse(Map.empty) else Map.empty,
-      Set.empty,
-      if (base.isEmpty && pcols.nonEmpty) Some(pcols) else None,
-      addRows = w.rows,
-      // table PROPERTIES survive an overwrite (policy, not data — like
-      // constraints); a full manifest must carry them explicitly. A
-      // commit that assigned identity values carries the ADVANCED
-      // high-water mark in the same manifest (transactional counter).
-      propsState = {
-        val baseProps = prevM.map(_.props).getOrElse(Map.empty)
-        if (idSpecs.nonEmpty)
-          Some(advanceIdentity(baseProps, idSpecs, idSpecs.keySet, cmap,
-            w.stats, path))
-        else if (base.isEmpty) Some(baseProps).filter(_.nonEmpty)
-        else None
-      }))
-    next
+    // Data only after every check: a crash after this leaves an orphaned
+    // directory that vacuum reclaims; the table is unchanged until the
+    // manifest claims. Narrow batch columns upcast to the snapshot types
+    // so every NEW file carries the table's current (possibly widened)
+    // types. The dir is named for the FIRST attempted version — the name
+    // is a label; a retry re-points the manifest at the same files.
+    val w = writeBatch(spark, hfs, root, first.fold(0L)(_.next),
+      alignTypes(df, snap0), cmap, pcols, cfg)
+    var head = first
+    var snapSchema = snap0
+    var attempt = 0
+    while (true) {
+      val hm = head.map(_.m)
+      val next = head.fold(0L)(_.next)
+      // append = DELTA manifest against the head (O(batch) log write —
+      // the previous file list is never re-serialized); overwrite/first =
+      // FULL manifest, which must CARRY the constraints, generated
+      // columns, partitioning and bloom config (delta manifests inherit
+      // them through base — the cfg line is only written when this
+      // commit CHANGES it). Table PROPERTIES survive an overwrite
+      // (policy, not data); a commit that assigned identity values
+      // carries the ADVANCED high-water mark in the same manifest
+      // (transactional counter).
+      val base = if (append) head.map(_.prev) else None
+      val full = base.isEmpty
+      val props = hm.fold(Map.empty[String, String])(_.props)
+      val manifest = RawManifest(next, ts, mode, base, w.files, txn = txn,
+        schemaJson = Some(snapSchema.json), addStats = w.stats, addRows = w.rows,
+        addConstraints = if (full) hm.fold(Map.empty[String, String])(_.constraints)
+          else Map.empty,
+        bloomCfg =
+          if (full || (bloomIndex.nonEmpty && cfg != hm.flatMap(_.bloomCfg))) cfg
+          else None,
+        addGens = if (full) hm.fold(Map.empty[String, String])(_.gens) else Map.empty,
+        pcolsLine = Some(pcols).filter(_.nonEmpty && full),
+        propsState =
+          if (idSpecs.nonEmpty)
+            Some(advanceIdentity(props, idSpecs, idSpecs.keySet, cmap, w.stats, path))
+          else Some(props).filter(_.nonEmpty && full))
+      try {
+        beforeClaim(next)
+        publish(hfs, root, manifest)
+        return next
+      } catch {
+        case e: ConcurrentCommitException =>
+          attempt += 1
+          if (attempt > maxRetries) throw e
+          head = openSnapshot(spark, path)
+          val (s, c, _) = validate(head)
+          // the written files must still fit the moved head: a concurrent
+          // RENAME/DROP (physical names), a first-commit winner declaring
+          // DIFFERENT partitioning (layout) or a winner that moved the
+          // identity counter (those values could duplicate the winner's)
+          // aborts loudly — the caller re-runs the whole commit
+          if (c != cmap) throw new SchemaMismatchException(
+            s"column mapping changed concurrently during commitWithRetry at $path; re-run")
+          if (head.exists(_.m.pcols != pcols)) throw new SchemaMismatchException(
+            s"table partitioning changed concurrently during commitWithRetry at $path; re-run")
+          if (head.fold(Map.empty[String, IdentitySpec])(h => identitySpecs(h.m.props)) !=
+              idSpecs) throw new SchemaMismatchException(
+            s"identity counter changed concurrently during commitWithRetry at $path; re-run")
+          snapSchema = s
+      }
+    }
+    -1L // unreachable
   }
 
   /** Partition columns must exist in the batch (physical names — the
@@ -1453,21 +1477,12 @@ object VersionedTable {
 
   /** The table's partition columns at head, in LOGICAL names (the
     * manifest stores physical — rename-proof; this maps them back). */
-  def partitionColumnsOf(spark: SparkSession, path: String): Seq[String] = {
-    val (hfs, root) = fs(spark, path)
-    versions(hfs, root).lastOption.map { v =>
-      val m = readManifest(hfs, root, v)
-      val rev = m.colMap.map(_.swap)
-      m.pcols.map(p => rev.getOrElse(p, p))
-    }.getOrElse(Seq.empty)
-  }
+  def partitionColumnsOf(spark: SparkSession, path: String): Seq[String] =
+    openSnapshot(spark, path).fold(Seq.empty[String])(_.m.logicalPcols)
 
   /** The table's persisted bloom index config (columns, bits) at head. */
-  def bloomConfigOf(spark: SparkSession, path: String): Option[(Seq[String], Int)] = {
-    val (hfs, root) = fs(spark, path)
-    versions(hfs, root).lastOption
-      .flatMap(readManifest(hfs, root, _).bloomCfg)
-  }
+  def bloomConfigOf(spark: SparkSession, path: String): Option[(Seq[String], Int)] =
+    openSnapshot(spark, path).flatMap(_.m.bloomCfg)
 
   /** Record (or change) the bloom index config on an existing table — a
     * metadata-only commit, after which EVERY path that writes data files
@@ -1483,22 +1498,18 @@ object VersionedTable {
     require(cols.nonEmpty && cols.forall(c =>
       !c.contains(",") && !c.contains("|") && !c.contains("=") && !c.contains("\n")),
       s"bad bloom index columns: $cols")
-    val Head(_, hfs, root, prev, m) = openHead(spark, path, "setBloomIndex on")
+    val h = openHead(spark, path, "setBloomIndex on")
     if (backfill) {
-      val local = m.files.filter(f => relLayoutName(f) == f)
+      val local = h.m.files.filter(f => relLayoutName(f) == f)
       // the backfill batch is a RAW (physical-name) read — map the
       // logical config columns to their physical storage names
       if (local.nonEmpty)
-        writeBloomSidecars(hfs, root,
+        writeBloomSidecars(h.hfs, h.root,
           spark.read.option("mergeSchema", "true")
-            .parquet(local.map(f => new Path(root, f).toString): _*),
-          cols.map(physOf(m.colMap, _)), bloomBits)
+            .parquet(local.map(f => new Path(h.root, f).toString): _*),
+          cols.map(physOf(h.m.colMap, _)), bloomBits)
     }
-    val next = prev + 1
-    publish(hfs, root, RawManifest(next, ts, "set_bloom_index", Some(prev),
-      Seq.empty, Seq.empty, None, m.schemaJson, Map.empty, Map.empty,
-      Map.empty, Set.empty, Some((cols, bloomBits))))
-    next
+    h.commitMeta(ts, "set_bloom_index")(_.copy(bloomCfg = Some((cols, bloomBits))))
   }
 
   /** Version-prefixed but ATTEMPT-unique data directory: two writers
@@ -1676,7 +1687,7 @@ object VersionedTable {
     import org.apache.spark.sql.catalyst.expressions.XxHash64Function
     import org.apache.spark.unsafe.types.UTF8String
     val h = XxHash64Function.hash(
-      UTF8String.fromString(value + " " + i), StringType, 42L)
+      UTF8String.fromString(value + "\u0000" + i), StringType, 42L)
     (((h % mBits) + mBits) % mBits).toInt
   }
 
@@ -1725,7 +1736,7 @@ object VersionedTable {
     }
     val sections: Seq[(String, String, Array[Int])] = cols.flatMap { c =>
       val posCols = (0 until BloomK).map { i =>
-        pmod(xxhash64(concat(col(c).cast("string"), lit(" " + i))),
+        pmod(xxhash64(concat(col(c).cast("string"), lit("\u0000" + i))),
           lit(mBits.toLong)).cast("int")
       }
       batch.filter(col(c).isNotNull)
@@ -1865,10 +1876,11 @@ object VersionedTable {
   // The skeleton every rewrite face shares (see the header's REWRITES
   // note): one [[Head]] per operation, and each step a method on it.
 
-  /** One operation's handle on the table head — the version `prev` it
-    * builds on and its resolved manifest `m`, opened ONCE: discovery,
-    * the rewrite read and the commit all work from this manifest, never
-    * from a second listing and chain walk of the log. */
+  /** One operation's handle on a snapshot — usually the table head: the
+    * version `prev` it reads or builds on and its resolved manifest `m`,
+    * opened ONCE ([[openSnapshot]]): discovery, the rewrite read and the
+    * commit all work from this manifest, never from a second listing and
+    * chain walk of the log. */
   private case class Head(spark: SparkSession, hfs: FileSystem, root: Path,
       prev: Long, m: Manifest) {
     def next: Long = prev + 1
@@ -1947,16 +1959,51 @@ object VersionedTable {
         removes, None, m.schemaJson, adds.stats, addRows = adds.rows))
       next
     }
+
+    /** Commit a metadata-only change: a delta manifest that adds no
+      * files and keeps the head's schema; `change` names (by field) what
+      * the commit records — constraints, generated columns, bloom config,
+      * column mapping, properties, a new schema or dropped entries. */
+    def commitMeta(ts: String, op: String)(change: RawManifest => RawManifest): Long = {
+      publish(hfs, root,
+        change(RawManifest(next, ts, op, Some(prev), schemaJson = m.schemaJson)))
+      next
+    }
   }
 
-  /** Open the head of the table at `path`; an empty table fails with
-    * `"<op> empty table at <path>"` (e.g. `op = "merge into"`). */
-  private def openHead(spark: SparkSession, path: String, op: String): Head = {
+  /** Open version `version` of the table at `path` — the head when
+    * `version` < 0 — or None when the head is asked of an empty table. */
+  private def openSnapshot(spark: SparkSession, path: String,
+      version: Long = -1L): Option[Head] = {
     val (hfs, root) = fs(spark, path)
-    val prev = versions(hfs, root).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"$op empty table at $path"))
-    Head(spark, hfs, root, prev, readManifest(hfs, root, prev))
+    (if (version >= 0) Some(version) else versions(hfs, root).lastOption)
+      .map(v => Head(spark, hfs, root, v, readManifest(hfs, root, v)))
   }
+
+  /** [[openSnapshot]] for a face that needs a table: an empty one fails
+    * with `"<op> empty table at <path>"` (e.g. `op = "merge into"`). */
+  private def openHead(spark: SparkSession, path: String, op: String,
+      version: Long = -1L): Head =
+    openSnapshot(spark, path, version).getOrElse(
+      throw new IllegalArgumentException(s"$op empty table at $path"))
+
+  /** [[openSnapshot]] for the read faces: an empty table fails with
+    * `"no committed versions at <path>"`. */
+  private def openRead(spark: SparkSession, path: String, version: Long): Head =
+    openSnapshot(spark, path, version).getOrElse(
+      throw new IllegalArgumentException(s"no committed versions at $path"))
+
+  /** A FULL manifest for version `v` that carries snapshot `m`'s table
+    * metadata — constraints, bloom config, column mapping, generated
+    * columns, partitioning, properties — so the version stands alone
+    * (optimize, rollback, clones); the caller adds the file entries. */
+  private def fullManifest(v: Long, ts: String, op: String, m: Manifest): RawManifest =
+    RawManifest(v, ts, op, schemaJson = m.schemaJson, addConstraints = m.constraints,
+      bloomCfg = m.bloomCfg,
+      mapState = if (m.colMap.isEmpty && m.retired.isEmpty) None
+        else Some((m.colMap, m.retired)),
+      addGens = m.gens, pcolsLine = Some(m.pcols).filter(_.nonEmpty),
+      propsState = Some(m.props).filter(_.nonEmpty))
 
   /** Delta OPTIMIZE for a snapshot: rewrite the latest version's content
     * as ⌈bytes / targetFileBytes⌉ files — optionally Z-ORDERed on two
@@ -1988,14 +2035,8 @@ object VersionedTable {
     // head is re-indexed, so optimize never silently degrades the point
     // lookups the user paid an indexing pass for
     val w = h.rewrite(laid)
-    publish(h.hfs, h.root, RawManifest(h.next, ts, "optimize", None, w.files,
-      Seq.empty, None, Some(laid.schema.json), w.stats,
-      Map.empty, m.constraints, Set.empty, m.bloomCfg,
-      if (m.colMap.isEmpty && m.retired.isEmpty) None
-      else Some((m.colMap, m.retired)), m.gens,
-      pcolsLine = if (m.pcols.nonEmpty) Some(m.pcols) else None,
-      addRows = w.rows,
-      propsState = Some(m.props).filter(_.nonEmpty)))
+    publish(h.hfs, h.root, fullManifest(h.next, ts, "optimize", m).copy(adds = w.files,
+      schemaJson = Some(laid.schema.json), addStats = w.stats, addRows = w.rows))
     h.next
   }
 
@@ -2079,17 +2120,16 @@ object VersionedTable {
     * rather than failing mid-scan or silently under-reporting. */
   def fsck(spark: SparkSession, path: String, dryRun: Boolean = false,
       ts: String = "1970-01-01T00:00:00Z"): Seq[String] = {
-    val Head(_, hfs, root, prev, m) = openHead(spark, path, "fsck of")
+    val h = openHead(spark, path, "fsck of")
     implicit val ec: scala.concurrent.ExecutionContext = ioPool
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     val missing = Await.result(
-      Future.traverse(m.files.sorted)(f =>
-        Future(if (hfs.exists(new Path(root, f))) None else Some(f))),
+      Future.traverse(h.m.files.sorted)(f =>
+        Future(if (h.hfs.exists(new Path(h.root, f))) None else Some(f))),
       Duration.Inf).flatten
     if (missing.nonEmpty && !dryRun)
-      publish(hfs, root, RawManifest(prev + 1, ts, "fsck_repair", Some(prev),
-        Seq.empty, missing, None, m.schemaJson, Map.empty))
+      h.commitMeta(ts, "fsck_repair")(_.copy(removes = missing))
     missing
   }
 
@@ -2199,14 +2239,20 @@ object VersionedTable {
     s"version $v was committed by a concurrent writer; re-read and retry")
 
   /** APPEND with automatic conflict resolution — Delta's commit-retry
-    * loop for the one operation that never logically conflicts: the data
-    * is written ONCE to its attempt-unique directory, and on a lost race
-    * only the delta manifest is recomputed on top of the new head
-    * (version re-assigned, schema re-checked) and re-claimed. Gives
-    * multi-writer ingest without external coordination; MERGE/DELETE
-    * retries would need read-set conflict detection (their touched files
-    * may have been rewritten underneath), so those surface the exception
-    * to the caller instead. */
+    * loop for the one operation that never logically conflicts. The
+    * batch is validated against the head it read BEFORE its data is
+    * written (schema, widening, CHECK constraints, retired names,
+    * partitioning — [[commit]]'s append checks), so a rejected batch
+    * writes nothing. The data is then written ONCE to its attempt-unique
+    * directory, and on a lost race only the delta manifest is recomputed
+    * on top of the new head (version re-assigned, the batch re-validated
+    * against the moved head) and re-claimed, up to `maxRetries` times.
+    * A batch the moved head rejects (say a winner added a CHECK
+    * constraint it violates) throws, and its already-written dir is left
+    * for [[vacuum]] to reclaim. Gives multi-writer ingest without
+    * external coordination; MERGE/DELETE retries would need read-set
+    * conflict detection (their touched files may have been rewritten
+    * underneath), so those surface the exception to the caller instead. */
   def commitWithRetry(df: DataFrame, path: String,
       ts: String = "1970-01-01T00:00:00Z", mergeSchema: Boolean = false,
       maxRetries: Int = 5, partitionBy: Seq[String] = Seq.empty): Long =
@@ -2246,155 +2292,22 @@ object VersionedTable {
     -1L // unreachable
   }
 
-  /** Test seam: `beforeClaim(next)` runs after the version is computed
-    * and before the manifest claim — the window a concurrent winner
-    * lands in. */
-  private[graft] def commitWithRetryImpl(df0: DataFrame, path: String,
+  /** [[commitWithRetry]] with its test seam: `beforeClaim(next)` runs
+    * after the version is computed and before the manifest claim — the
+    * window a concurrent winner lands in. */
+  private[graft] def commitWithRetryImpl(df: DataFrame, path: String,
       ts: String, mergeSchema: Boolean, maxRetries: Int,
       beforeClaim: Long => Unit,
-      partitionBy: Seq[String] = Seq.empty): Long = {
-    val spark = df0.sparkSession
-    val (hfs, root) = fs(spark, path)
-    // write once, into a dir named for the FIRST attempted version — the
-    // name is a label; retries re-point the manifest at the same files
-    val first = versions(hfs, root).lastOption
-    val firstM = first.map(readManifest(hfs, root, _))
-    // IDENTITY columns assign against the FIRST head's high-water mark
-    // (the data is written once); the retry loop refuses to re-claim if
-    // a concurrent winner moved the counter — those values could
-    // duplicate the winner's, so the caller must re-run the whole
-    // commit against the new head (fresh assignment)
-    val idSpecs = firstM.map(pm => identitySpecs(pm.props)).getOrElse(Map.empty)
-    val (df, _) = assignIdentity(
-      applyGens(df0, firstM.map(_.gens).getOrElse(Map.empty)), idSpecs, path)
-    val firstCmap = firstM.map(_.colMap).getOrElse(Map.empty[String, String])
-    // retirement guard BEFORE any data lands (the physical write below
-    // would otherwise fail on a duplicate storage name with an opaque
-    // AnalysisException): an evolved batch may not introduce a logical
-    // column colliding with an in-use or retired physical
-    firstM.foreach { hm =>
-      if (hm.colMap.nonEmpty || hm.retired.nonEmpty) {
-        val prior = hm.schemaJson
-          .map(j => DataType.fromJson(j).asInstanceOf[StructType].fieldNames.toSet)
-          .getOrElse(Set.empty[String])
-        val blocked = df.schema.fieldNames.filterNot(prior).filter(c =>
-          hm.retired.contains(c) ||
-            hm.colMap.exists { case (l, p) => p == c && l != c })
-        if (blocked.nonEmpty) throw new SchemaMismatchException(
-          s"new columns ${blocked.mkString("[", ",", "]")} collide with " +
-            s"physical names in use or retired by rename/drop at $path")
-      }
-    }
-    // partitioning resolves like commitInternal's append arm: inherit,
-    // or set on the first commit; an explicit arg may only restate it
-    val declaredP = partitionBy.map(physOf(firstCmap, _))
-    val firstP = firstM.map(_.pcols).getOrElse(declaredP)
-    if (partitionBy.nonEmpty && firstM.nonEmpty && declaredP != firstP)
-      throw new IllegalArgumentException(
-        s"append partitionBy ${declaredP.mkString("[", ",", "]")} does not " +
-          s"match table partitioning ${firstP.mkString("[", ",", "]")} at $path")
-    validatePcols(firstP, toPhysical(df, firstCmap).schema, path)
-    requireIdentityNotPartition(idSpecs, firstP, firstCmap, path)
-    val firstSnap = firstM.flatMap(_.schemaJson)
-      .map(j => unionSchema(
-        DataType.fromJson(j).asInstanceOf[StructType], df.schema))
-      .getOrElse(df.schema)
-    // persisted index config as of the first head read — sidecars are
-    // written once with the data (a racing config change lands on the
-    // NEXT batch; a missing section only degrades to stats pruning)
-    val w = writeBatch(spark, hfs, root, first.map(_ + 1).getOrElse(0L),
-      alignTypes(df, firstSnap), firstCmap, firstP, firstM.flatMap(_.bloomCfg))
-    var attempt = 0
-    while (true) {
-      val prev = versions(hfs, root).lastOption
-      val prevSchema =
-        prev.map(p => headSchema(spark, hfs, root, p, readRaw(hfs, root, p)))
-      if (!mergeSchema) prevSchema
-        .filter(_.fieldNames.toSet != df.schema.fieldNames.toSet)
-        .foreach { ps =>
-          throw new SchemaMismatchException(
-            s"append schema ${df.schema.fieldNames.mkString("[", ",", "]")} does not " +
-              s"match table schema ${ps.fieldNames.mkString("[", ",", "]")} at $path; " +
-              "pass mergeSchema = true to evolve")
-        }
-      val snapSchema = prevSchema.fold(df.schema)(unionSchema(_, df.schema))
-      if (!mergeSchema) prevSchema.foreach { ps =>
-        val widenedCols = ps.fields.filter(f =>
-          snapSchema.fields.exists(sf => sf.name == f.name && sf.dataType != f.dataType))
-          .map(_.name)
-        if (widenedCols.nonEmpty) throw new SchemaMismatchException(
-          s"append widens columns ${widenedCols.mkString("[", ",", "]")} at $path; " +
-            "pass mergeSchema = true to evolve the type")
-      }
-      // constraint gate per attempt — the winning writer may have ADDED
-      // a constraint between our attempts, and the claim must never
-      // land a batch the head's contract rejects
-      val headM = prev.map(p => readManifest(hfs, root, p))
-      // a concurrent RENAME/DROP between our write and this claim would
-      // publish files whose physical names no longer match the head's
-      // mapping — abort loudly; the caller re-runs the whole commit
-      if (headM.map(_.colMap).getOrElse(Map.empty[String, String]) != firstCmap)
-        throw new SchemaMismatchException(
-          s"column mapping changed concurrently during commitWithRetry at $path; re-run")
-      // a first-commit race where the winner declared DIFFERENT
-      // partitioning would enqueue files laid out wrong for the table
-      if (headM.exists(_.pcols != firstP))
-        throw new SchemaMismatchException(
-          s"table partitioning changed concurrently during commitWithRetry at $path; re-run")
-      // identity counter guard: a winner that advanced the high-water
-      // mark (or declared/changed a spec) may have assigned the same
-      // values this batch carries — refuse the claim, the caller
-      // re-runs and re-assigns from the new head
-      if (headM.map(pm => identitySpecs(pm.props)).getOrElse(Map.empty) != idSpecs)
-        throw new SchemaMismatchException(
-          s"identity counter changed concurrently during commitWithRetry at $path; re-run")
-      // same retirement guard as commitInternal: an evolved batch may
-      // not introduce a logical column colliding with an in-use or
-      // retired physical name
-      headM.foreach { hm =>
-        if (hm.colMap.nonEmpty || hm.retired.nonEmpty) {
-          val prior = prevSchema.map(_.fieldNames.toSet).getOrElse(Set.empty)
-          val blocked = df.schema.fieldNames.filterNot(prior).filter(c =>
-            hm.retired.contains(c) ||
-              hm.colMap.exists { case (l, p) => p == c && l != c })
-          if (blocked.nonEmpty) throw new SchemaMismatchException(
-            s"new columns ${blocked.mkString("[", ",", "]")} collide with " +
-              s"physical names in use or retired by rename/drop at $path")
-        }
-      }
-      val cks = headM.map(_.constraints).getOrElse(Map.empty)
-      if (cks.nonEmpty) enforceConstraints(alignTo(df, snapSchema), cks, path)
-      val next = prev.map(_ + 1).getOrElse(0L)
-      try {
-        beforeClaim(next)
-        publish(hfs, root, RawManifest(next, ts, "append", prev, w.files,
-          Seq.empty, None, Some(snapSchema.json), w.stats,
-          pcolsLine = if (prev.isEmpty && firstP.nonEmpty) Some(firstP) else None,
-          addRows = w.rows,
-          // the assigned batch's advanced high-water mark rides the same
-          // manifest as the data (the transactional-counter contract)
-          propsState =
-            if (idSpecs.isEmpty) None
-            else Some(advanceIdentity(
-              headM.map(_.props).getOrElse(Map.empty), idSpecs,
-              idSpecs.keySet, firstCmap, w.stats, path))))
-        return next
-      } catch {
-        case e: ConcurrentCommitException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
-    }
-    -1L // unreachable
-  }
+      partitionBy: Seq[String] = Seq.empty): Long =
+    commitInternal(df, path, "append", ts, None, mergeSchema,
+      partitionBy = partitionBy, maxRetries = maxRetries, beforeClaim = beforeClaim)
 
   /** Exposed for the race-guard spec: publish a FULL manifest for an
     * exact version, failing if that version already exists. */
   private[graft] def commitManifestAt(spark: SparkSession, path: String,
       version: Long, ts: String, op: String, files: Seq[String]): Unit = {
     val (hfs, root) = fs(spark, path)
-    commitManifest(hfs, root,
-      RawManifest(version, ts, op, None, files, Seq.empty, None, None, Map.empty))
+    commitManifest(hfs, root, RawManifest(version, ts, op, adds = files))
   }
 
   /** Commit + best-effort checkpoint: every successful commit path goes
@@ -2481,13 +2394,9 @@ object VersionedTable {
       s"bad property key: '$k'"))
     props.values.foreach(v => require(v != null, "property value may not be null"))
     requireNotEngineProps(props.keys, path, "SET TBLPROPERTIES")
-    val Head(_, hfs, root, prev, m) = openHead(spark, path, "setProperties on")
-    val next = prev + 1
-    publish(hfs, root, RawManifest(next, ts,
-      s"set_properties(${props.keys.toSeq.sorted.mkString(",")})",
-      Some(prev), Seq.empty, Seq.empty, None, m.schemaJson, Map.empty,
-      propsState = Some(m.props ++ props)))
-    next
+    val h = openHead(spark, path, "setProperties on")
+    h.commitMeta(ts, s"set_properties(${props.keys.toSeq.sorted.mkString(",")})")(
+      _.copy(propsState = Some(h.m.props ++ props)))
   }
 
   /** Unset table properties (Delta `UNSET TBLPROPERTIES`). Unknown keys
@@ -2495,17 +2404,13 @@ object VersionedTable {
   def unsetProperties(spark: SparkSession, path: String, keys: Seq[String],
       ifExists: Boolean = false, ts: String = "1970-01-01T00:00:00Z"): Long = {
     requireNotEngineProps(keys, path, "UNSET TBLPROPERTIES")
-    val Head(_, hfs, root, prev, m) = openHead(spark, path, "unsetProperties on")
-    val missing = keys.filterNot(m.props.contains)
+    val h = openHead(spark, path, "unsetProperties on")
+    val missing = keys.filterNot(h.m.props.contains)
     if (!ifExists && missing.nonEmpty) throw new IllegalArgumentException(
       s"no such table propert${if (missing.size == 1) "y" else "ies"} at $path: " +
         s"${missing.mkString(", ")} (IF EXISTS to ignore)")
-    val next = prev + 1
-    publish(hfs, root, RawManifest(next, ts,
-      s"unset_properties(${keys.sorted.mkString(",")})",
-      Some(prev), Seq.empty, Seq.empty, None, m.schemaJson, Map.empty,
-      propsState = Some(m.props -- keys)))
-    next
+    h.commitMeta(ts, s"unset_properties(${keys.sorted.mkString(",")})")(
+      _.copy(propsState = Some(h.m.props -- keys)))
   }
 
   /** The identity counter lives in `graft.identity.*` properties but is
@@ -3185,9 +3090,9 @@ object VersionedTable {
     val opened = Await.result(
       Future.sequence(files.map(f => Future(f -> footerStats(hfs, root, f)))),
       ioWait).toMap
-    publish(hfs, root, RawManifest(0L, ts, "convert", None, files,
-      Seq.empty, None, Some(schema.json),
-      opened.map { case (f, (st, _)) => f -> st }.filter(_._2.nonEmpty),
+    publish(hfs, root, RawManifest(0L, ts, "convert", adds = files,
+      schemaJson = Some(schema.json),
+      addStats = opened.map { case (f, (st, _)) => f -> st }.filter(_._2.nonEmpty),
       addRows = opened.map { case (f, (_, n)) => f -> n }))
     0L
   }
@@ -3197,16 +3102,11 @@ object VersionedTable {
     * no data read. Partition/bloom/constraint/generated metadata in
     * LOGICAL names. */
   def describeDetail(spark: SparkSession, path: String): DataFrame = {
-    val (hfs, root) = fs(spark, path)
-    val v = versions(hfs, root).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
-    val m = readManifest(hfs, root, v)
-    val bytes = m.files.map(f => hfs.getFileStatus(new Path(root, f)).getLen).sum
-    val rev = m.colMap.map(_.swap)
+    val h = openRead(spark, path, -1L)
+    val m = h.m
     import spark.implicits._
-    Seq((v, m.ts, m.op, m.files.size.toLong, bytes,
-      rowCountOf(spark, hfs, root, m, m.files),
-      m.pcols.map(p => rev.getOrElse(p, p)),
+    Seq((h.prev, m.ts, m.op, m.files.size.toLong, h.bytes(m.files),
+      rowCountOf(spark, h.hfs, h.root, m, m.files), m.logicalPcols,
       m.constraints.keys.toSeq.sorted,
       m.gens.keys.toSeq.sorted,
       m.bloomCfg.map(_._1).getOrElse(Seq.empty),
@@ -3243,12 +3143,8 @@ object VersionedTable {
     * counting the tiny vector dataset. Delta answers SELECT COUNT(*)
     * from add-file stats the same way. */
   def rowCount(spark: SparkSession, path: String, version: Long = -1L): Long = {
-    val (hfs, root) = fs(spark, path)
-    val v = if (version >= 0) version
-      else versions(hfs, root).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"no committed versions at $path"))
-    val m = readManifest(hfs, root, v)
-    rowCountOf(spark, hfs, root, m, m.files)
+    val h = openRead(spark, path, version)
+    rowCountOf(spark, h.hfs, h.root, h.m, h.m.files)
   }
 
   private def rowCountOf(spark: SparkSession, hfs: FileSystem, root: Path,
@@ -3295,11 +3191,7 @@ object VersionedTable {
     * to the boundary scan, trading speed, never correctness. */
   def countWhere(spark: SparkSession, path: String, condition: String,
       version: Long = -1L): Long = {
-    val (hfs, root) = fs(spark, path)
-    val v = if (version >= 0) version
-      else versions(hfs, root).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"no committed versions at $path"))
-    val m = readManifest(hfs, root, v)
+    val Head(_, hfs, root, _, m) = openRead(spark, path, version)
     val cond = spark.sessionState.sqlParser.parseExpression(condition)
     val statKept = m.files.filter(f => mayMatch(logicalStatsOf(m, f), cond))
     val snapSchema = snapshotSchema(spark, root, m)
@@ -3328,8 +3220,7 @@ object VersionedTable {
       condition: String): Set[String] = {
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     if (m.pcols.isEmpty) return Set.empty
-    val rev = m.colMap.map(_.swap)
-    val logicalP = m.pcols.map(p => rev.getOrElse(p, p))
+    val logicalP = m.logicalPcols
     // every referenced attribute must BE a partition column (resolved
     // case-insensitively, like the engine's own analysis)
     val refs = cond.collect { case u: UnresolvedAttribute => u.name }
@@ -3408,11 +3299,7 @@ object VersionedTable {
     * scans unchanged. */
   def readVersion(spark: SparkSession, path: String, version: Long = -1L,
       mergeSchema: Boolean = true): DataFrame = {
-    val (hfs, root) = fs(spark, path)
-    val v = if (version >= 0) version
-      else versions(hfs, root).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"no committed versions at $path"))
-    val m = readManifest(hfs, root, v)
+    val Head(_, _, root, _, m) = openRead(spark, path, version)
     if (m.files.isEmpty)
       // legal empty state (delete-all, empty-batch commit): the manifest
       // records the schema, so the head stays readable — Delta supports
@@ -3427,13 +3314,8 @@ object VersionedTable {
     * `version` < 0) — Delta DESCRIBE DETAIL's file inventory. Lets specs
     * and maintenance jobs verify carry-by-reference (merge/rollback must
     * NOT rewrite untouched files). */
-  def snapshotFiles(spark: SparkSession, path: String, version: Long = -1L): Seq[String] = {
-    val (hfs, root) = fs(spark, path)
-    val v = if (version >= 0) version
-      else versions(hfs, root).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"no committed versions at $path"))
-    readManifest(hfs, root, v).files
-  }
+  def snapshotFiles(spark: SparkSession, path: String, version: Long = -1L): Seq[String] =
+    openRead(spark, path, version).m.files
 
   /** Time travel by timestamp: the latest snapshot with `ts` ≤ the given
     * ISO-8601 instant (string comparison — ISO-8601 sorts lexically).
@@ -3497,14 +3379,9 @@ object VersionedTable {
     val (hfs, root) = fs(spark, path)
     val target = readManifest(hfs, root, toVersion)
     val next = versions(hfs, root).last + 1
-    publish(hfs, root, RawManifest(next, ts, s"rollback($toVersion)",
-      None, target.files, Seq.empty, None, target.schemaJson, target.stats,
-      target.dvs, target.constraints, Set.empty, target.bloomCfg,
-      if (target.colMap.isEmpty && target.retired.isEmpty) None
-      else Some((target.colMap, target.retired)), target.gens,
-      pcolsLine = if (target.pcols.nonEmpty) Some(target.pcols) else None,
-      addRows = target.rowCounts, addDvCounts = target.dvCounts,
-      propsState = Some(target.props).filter(_.nonEmpty)))
+    publish(hfs, root, fullManifest(next, ts, s"rollback($toVersion)", target).copy(
+      adds = target.files, addStats = target.stats, addDvs = target.dvs,
+      addRows = target.rowCounts, addDvCounts = target.dvCounts))
     next
   }
 
@@ -3549,11 +3426,8 @@ object VersionedTable {
     * every untouched file (Spark cannot file-prune on that expression).
     * The faces themselves read through the [[Head]] they already hold. */
   private[graft] def readTouched(spark: SparkSession, path: String,
-      touched: Seq[String]): DataFrame = {
-    val (hfs, root) = fs(spark, path)
-    val v = versions(hfs, root).last
-    Head(spark, hfs, root, v, readManifest(hfs, root, v)).scan(touched)
-  }
+      touched: Seq[String]): DataFrame =
+    openSnapshot(spark, path).get.scan(touched)
 
   /** Per-key-column [lo, hi] bounds of the updates frame, in the STATS
     * ENCODING ([[footerStats]]'s logical domain: plain numerics as-is,
@@ -3601,12 +3475,9 @@ object VersionedTable {
     * on that column (pruning is only ever an optimization). Exposed for
     * the composite-key pruning spec. */
   private[graft] def mergeCandidates(updates: DataFrame, path: String,
-      keyCols: Seq[String]): Seq[String] = {
-    val spark = updates.sparkSession
-    val (hfs, root) = fs(spark, path)
-    val m = readManifest(hfs, root, versions(hfs, root).last)
-    candidateFiles(m, updateKeyBounds(updates, keyCols))
-  }
+      keyCols: Seq[String]): Seq[String] =
+    candidateFiles(openSnapshot(updates.sparkSession, path).get.m,
+      updateKeyBounds(updates, keyCols))
 
   /** True when a file with `stats` may hold a row inside EVERY bound
     * (both sides in the stats encoding; a missing stat or a
@@ -4209,11 +4080,7 @@ object VersionedTable {
 
   private def readFiltered(spark: SparkSession, path: String, condition: String,
       version: Long): (DataFrame, Seq[String]) = {
-    val (hfs, root) = fs(spark, path)
-    val v = if (version >= 0) version
-      else versions(hfs, root).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"no committed versions at $path"))
-    val m = readManifest(hfs, root, v)
+    val Head(_, hfs, root, _, m) = openRead(spark, path, version)
     val cond = spark.sessionState.sqlParser.parseExpression(condition)
     val statKept = m.files.filter(f => mayMatch(logicalStatsOf(m, f), cond))
     val snapSchema = snapshotSchema(spark, root, m)
@@ -4246,11 +4113,9 @@ object VersionedTable {
     * the stats pruning (a range-partitioned table's untouched files must
     * not even be candidates). */
   private[graft] def discoveryCandidates(spark: SparkSession, path: String,
-      keyCol: String, lo: BigDecimal, hi: BigDecimal): Seq[String] = {
-    val (hfs, root) = fs(spark, path)
-    val m = readManifest(hfs, root, versions(hfs, root).last)
-    candidateFiles(m, Map(keyCol -> (lo.toString, hi.toString)))
-  }
+      keyCol: String, lo: BigDecimal, hi: BigDecimal): Seq[String] =
+    candidateFiles(openSnapshot(spark, path).get.m,
+      Map(keyCol -> (lo.toString, hi.toString)))
 
   /** Copy-on-write DELETE: rows matching `condition` leave the snapshot;
     * only files containing a match are rewritten, the rest carry by
@@ -4477,11 +4342,8 @@ object VersionedTable {
     * the clone rewrites it self-contained. */
   def cloneTable(spark: SparkSession, source: String, target: String,
       version: Long = -1L, ts: String = "1970-01-01T00:00:00Z"): Long = {
-    val (shfs, sroot) = fs(spark, source)
-    val v = if (version >= 0) version
-      else versions(shfs, sroot).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"clone of empty table at $source"))
-    val m = readManifest(shfs, sroot, v)
+    val h = openHead(spark, source, "clone of", version)
+    val Head(_, shfs, sroot, v, m) = h
     val (thfs, troot) = fs(spark, target)
     require(versions(thfs, troot).isEmpty, s"clone target $target is not empty")
     val abs = m.files.map(f => shfs.makeQualified(new Path(sroot, f)).toString)
@@ -4498,17 +4360,11 @@ object VersionedTable {
       .flatMap { case (f, a) => m.rowCounts.get(f).map(a -> _) }.toMap
     val absDvCounts = m.files.zip(abs)
       .flatMap { case (f, a) => m.dvCounts.get(f).map(a -> _) }.toMap
-    val schema = m.schemaJson.getOrElse(snapshotSchema(spark, sroot, m).json)
     // constraints are TABLE metadata — they carry verbatim (Delta clones
     // carry table properties) and bind the clone's own future writes
-    publish(thfs, troot, RawManifest(0L, ts, s"clone(v$v)", None, abs,
-      Seq.empty, None, Some(schema), absStats, absDvs, m.constraints,
-      Set.empty, m.bloomCfg,
-      if (m.colMap.isEmpty && m.retired.isEmpty) None
-      else Some((m.colMap, m.retired)), m.gens,
-      pcolsLine = if (m.pcols.nonEmpty) Some(m.pcols) else None,
-      addRows = absRows, addDvCounts = absDvCounts,
-      propsState = Some(m.props).filter(_.nonEmpty)))
+    publish(thfs, troot, fullManifest(0L, ts, s"clone(v$v)", m).copy(adds = abs,
+      schemaJson = Some(m.schemaJson.getOrElse(h.schema.json)), addStats = absStats,
+      addDvs = absDvs, addRows = absRows, addDvCounts = absDvCounts))
     recordCloneRef(spark, shfs, sroot, target, v, m)
     0L
   }
@@ -4529,11 +4385,8 @@ object VersionedTable {
     * the copy is normal-form regardless of the source's own shape. */
   def cloneTableDeep(spark: SparkSession, source: String, target: String,
       version: Long = -1L, ts: String = "1970-01-01T00:00:00Z"): Long = {
-    val (shfs, sroot) = fs(spark, source)
-    val v = if (version >= 0) version
-      else versions(shfs, sroot).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"clone of empty table at $source"))
-    val m = readManifest(shfs, sroot, v)
+    val h = openHead(spark, source, "clone of", version)
+    val Head(_, shfs, sroot, v, m) = h
     val (thfs, troot) = fs(spark, target)
     require(versions(thfs, troot).isEmpty, s"clone target $target is not empty")
     // target-relative name per entry: layout-local entries keep their
@@ -4567,16 +4420,11 @@ object VersionedTable {
     scala.concurrent.Await.result(scala.concurrent.Future.sequence(copies), ioWait)
     def rekey[A](src: Map[String, A]): Map[String, A] =
       fileMap.flatMap { case (f, r) => src.get(f).map(r -> _) }.toMap
-    val schema = m.schemaJson.getOrElse(snapshotSchema(spark, sroot, m).json)
-    publish(thfs, troot, RawManifest(0L, ts, s"clone_deep(v$v)", None,
-      fileMap.map(_._2), Seq.empty, None, Some(schema), rekey(m.stats),
-      rekey(m.dvs).map { case (f, d) => f -> dvMap.getOrElse(d, d) },
-      m.constraints, Set.empty, m.bloomCfg,
-      if (m.colMap.isEmpty && m.retired.isEmpty) None
-      else Some((m.colMap, m.retired)), m.gens,
-      pcolsLine = if (m.pcols.nonEmpty) Some(m.pcols) else None,
-      addRows = rekey(m.rowCounts), addDvCounts = rekey(m.dvCounts),
-      propsState = Some(m.props).filter(_.nonEmpty)))
+    publish(thfs, troot, fullManifest(0L, ts, s"clone_deep(v$v)", m).copy(
+      adds = fileMap.map(_._2), schemaJson = Some(m.schemaJson.getOrElse(h.schema.json)),
+      addStats = rekey(m.stats),
+      addDvs = rekey(m.dvs).map { case (f, d) => f -> dvMap.getOrElse(d, d) },
+      addRows = rekey(m.rowCounts), addDvCounts = rekey(m.dvCounts)))
     0L
   }
 
@@ -4598,12 +4446,9 @@ object VersionedTable {
   /** The table's column-mapping state at head: (logical → physical map,
     * retired physical names). Empty maps = unmapped. */
   def columnMappingOf(spark: SparkSession, path: String)
-      : (Map[String, String], Set[String]) = {
-    val (hfs, root) = fs(spark, path)
-    versions(hfs, root).lastOption
-      .map { v => val m = readManifest(hfs, root, v); (m.colMap, m.retired) }
-      .getOrElse((Map.empty, Set.empty))
-  }
+      : (Map[String, String], Set[String]) =
+    openSnapshot(spark, path).fold((Map.empty[String, String], Set.empty[String]))(
+      h => (h.m.colMap, h.m.retired))
 
   /** ZERO-REWRITE column rename (Delta column mapping, name mode): a
     * metadata-only commit — the parquet files keep the column under its
@@ -4622,8 +4467,8 @@ object VersionedTable {
       newName: String, ts: String = "1970-01-01T00:00:00Z"): Long = {
     require(newName.nonEmpty && !Seq("|", ",", "=", "\n").exists(newName.contains),
       s"bad column name: $newName")
-    val Head(_, hfs, root, prev, m) = openHead(spark, path, "renameColumn on")
-    val schema = snapshotSchema(spark, root, m)
+    val h = openHead(spark, path, "renameColumn on")
+    val (m, schema) = (h.m, h.schema)
     require(schema.fieldNames.contains(oldName), s"no column $oldName at $path")
     if (schema.fieldNames.contains(newName)) throw new SchemaMismatchException(
       s"column $newName already exists at $path")
@@ -4644,11 +4489,9 @@ object VersionedTable {
       case (cs, b) if cs.contains(oldName) =>
         (cs.map(c => if (c == oldName) newName else c), b)
     }
-    val next = prev + 1
-    publish(hfs, root, RawManifest(next, ts, s"rename_column($oldName->$newName)",
-      Some(prev), Seq.empty, Seq.empty, None, Some(newSchema.json), Map.empty,
-      Map.empty, Map.empty, Set.empty, newCfg, Some((newMap, m.retired))))
-    next
+    h.commitMeta(ts, s"rename_column($oldName->$newName)")(_.copy(
+      schemaJson = Some(newSchema.json), bloomCfg = newCfg,
+      mapState = Some((newMap, m.retired))))
   }
 
   /** ZERO-REWRITE column drop: metadata-only — the column's data stays
@@ -4661,8 +4504,8 @@ object VersionedTable {
     * references the column. */
   def dropColumn(spark: SparkSession, path: String, colName: String,
       ts: String = "1970-01-01T00:00:00Z"): Long = {
-    val Head(_, hfs, root, prev, m) = openHead(spark, path, "dropColumn on")
-    val schema = snapshotSchema(spark, root, m)
+    val h = openHead(spark, path, "dropColumn on")
+    val (m, schema) = (h.m, h.schema)
     require(schema.fieldNames.contains(colName), s"no column $colName at $path")
     require(schema.fields.length >= 2, s"cannot drop the only column at $path")
     val dependent = constraintReferences(spark, m.constraints, colName)
@@ -4680,11 +4523,9 @@ object VersionedTable {
       case (cs, b) if cs.contains(colName) && cs.exists(_ != colName) =>
         (cs.filterNot(_ == colName), b)
     }
-    val next = prev + 1
-    publish(hfs, root, RawManifest(next, ts, s"drop_column($colName)",
-      Some(prev), Seq.empty, Seq.empty, None, Some(newSchema.json), Map.empty,
-      Map.empty, Map.empty, Set.empty, newCfg, Some((newMap, newRetired))))
-    next
+    h.commitMeta(ts, s"drop_column($colName)")(_.copy(
+      schemaJson = Some(newSchema.json), bloomCfg = newCfg,
+      mapState = Some((newMap, newRetired))))
   }
 
   private val ClonesDir = "_clones"

@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Contracts of the driver-facing harness that no operator work may break. */
@@ -34,5 +38,22 @@ class HarnessContractSpec extends AnyFunSuite {
     assert(!line.contains("\"queries\""),
       "per-query timings belong in BENCH_FULL.json, never on stdout — " +
         "that is what ended the key-rename treadmill")
+  }
+
+  test("no file under src/ carries a control byte other than tab, LF and CR") {
+    // a raw control byte makes grep and git grep treat the whole file as
+    // binary and hide every hit; spell it as a unicode escape instead
+    val src = Paths.get("src")
+    assert(Files.isDirectory(src.resolve("main/scala/graft")),
+      s"src/ not found under ${Paths.get("").toAbsolutePath}")
+    def control(b: Byte): Boolean =
+      (b >= 0 && b < 0x20 && b != '\t' && b != '\n' && b != '\r') || b == 0x7f
+    val walk = Files.walk(src)
+    val offenders =
+      try walk.iterator.asScala.filter(p => Files.isRegularFile(p))
+        .filter((p: Path) => Files.readAllBytes(p).exists(control))
+        .map(_.toString).toSeq.sorted
+      finally walk.close()
+    assert(offenders.isEmpty, s"control bytes in ${offenders.mkString(", ")}")
   }
 }
