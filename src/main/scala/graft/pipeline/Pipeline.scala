@@ -23,9 +23,11 @@ import graft.scoring.Scoring
   * laziness does NOT give is one silver computation per run: each table
   * written is its own query over a differently column-pruned silver
   * branch, and Catalyst does not reuse the silver exchange across them.
-  * [[Runner.run]] therefore persists silver once per pass (and takes each
-  * table's row count from an `Observation` on its write). A caller that
-  * writes several of these frames itself should persist silver too. */
+  * [[Runner.run]] therefore persists silver once per pass, and once the
+  * cache is filled writes the tables concurrently on a bounded pool
+  * (taking each table's row count from an `Observation` on its write).
+  * A caller that writes several of these frames itself should persist
+  * silver too, and fill it before any concurrent reader starts. */
 object Pipeline {
 
   /** bronze → silver → star schema + aggregates, keyed like the

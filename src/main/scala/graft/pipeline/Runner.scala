@@ -1,7 +1,9 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.classic.{Dataset => ClassicDataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Fanout
 import org.apache.spark.storage.StorageLevel
 
 import graft.sources.Sinks
@@ -27,33 +29,71 @@ import graft.sources.Sinks
   * and the silver dedup shuffle. `run` therefore persists silver before
   * any stage frame is built and drops it when the pass ends. Each write
   * is then a single pass over its frame, and its row count comes from an
-  * [[Observation]] on that pass, not from re-reading the table. At
-  * 100 TB the only knob that matters here is `spark.shuffle_partitions`,
-  * which the config owns — everything else is per-operator design
-  * (see the operator scaladocs). */
+  * [[Observation]] on that pass, not from re-reading the table. The
+  * writes are independent queries, mostly of one or two tasks each, so
+  * once silver's cache is filled they run concurrently on a bounded pool
+  * (2 × `defaultParallelism` writers) and the driver's planning and
+  * commits of one table overlap the tasks of another. A failed pass may
+  * leave any subset of its tables written; every write is an overwrite,
+  * so re-running the pass is idempotent. At 100 TB the only knob that
+  * matters here is `spark.shuffle_partitions`, which the config owns —
+  * everything else is per-operator design (see the operator scaladocs). */
 object Runner {
 
   /** Run the configured stages; returns (qualified table name → rows
-    * written), in write order. Silver is persisted before the stage
-    * frames are built because some builders run actions while building
-    * (`Mobility.zonePageRank` counts and collects its edges), and those
-    * must read the cache too; it is unpersisted even when a write fails. */
+    * written), in [[stageFrames]] order. Silver is persisted before the
+    * stage frames are built because some builders run actions while
+    * building (`Mobility.zonePageRank` counts and collects its edges),
+    * and those must read the cache too.
+    *
+    * The writes are independent queries over the cache, so they run
+    * concurrently on a pool owned by this call (see [[Fanout]]), under
+    * the caller's job group and other local properties. The pool starts
+    * only once silver's cache is filled: until then writes run one at a
+    * time, since two concurrent first readers would each compute the same
+    * silver partitions. When a write fails, no further write starts, the
+    * running ones finish, the first failure in frame order is thrown
+    * (naming its table; later ones are suppressed) and silver is
+    * unpersisted. A failed pass may leave any subset of its tables
+    * written; every table is an overwrite, so a re-run is idempotent. */
   def run(spark: SparkSession, cfg: GraftConfig): Seq[(String, Long)] = {
     val medallion = Pipeline.runMedallion(spark, cfg.inputDir)
     val silver = medallion("silver")
     persistKeepingLayout(silver)
-    try frames(cfg, medallion).map { case (name, df) =>
-      val path = s"${cfg.outputDir}/$name"
+    try {
+      val writes = frames(cfg, medallion).map { case (name, df) =>
+        () => name -> write(df, s"${cfg.outputDir}/$name", name)
+      }
+      val serial = Vector.newBuilder[(String, Long)]
+      var started = 0
+      while (started < writes.size && !cacheFilled(silver)) {
+        serial += writes(started)()
+        started += 1
+      }
+      serial.result() ++ Fanout.run(spark, "graft-runner-write", writes.drop(started))
+    } finally silver.unpersist()
+  }
+
+  /** Overwrite `path` with `df` (date-partitioned when it has
+    * `event_date`); the row count comes from an [[Observation]] on the
+    * write itself. A failure is rethrown naming `table`. */
+  private def write(df: DataFrame, path: String, table: String): Long =
+    try {
       val rows = Observation()
       val observed = df.observe(rows, count(lit(1)).as("rows"))
       if (df.columns.contains("event_date"))
         Sinks.writePartitioned(observed, path, Seq("event_date"))
       else
         observed.write.mode("overwrite").parquet(path)
-      name -> rows.get("rows").asInstanceOf[Long]
+      rows.get("rows").asInstanceOf[Long]
+    } catch {
+      case e: Exception => throw new RuntimeException(s"writing table $table failed: ${e.getMessage}", e)
     }
-    finally silver.unpersist()
-  }
+
+  /** Whether every partition of `df`'s cache has been built. */
+  private def cacheFilled(df: DataFrame): Boolean =
+    df.sparkSession.sharedState.cacheManager.lookupCachedData(df.asInstanceOf[ClassicDataset[_]])
+      .exists(_.cachedRepresentation.cacheBuilder.isCachedColumnBuffersLoaded)
 
   /** The lazy frame DAG for the configured stages (no writes, nothing
     * persisted) — what `run` materializes, exposed for tests and

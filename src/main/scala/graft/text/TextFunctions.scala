@@ -533,19 +533,21 @@ object TextFunctions {
     * token array (overshoot-and-slice as in [[repetition]]); then one
     * aggregate keyed by bigram, one keyed by word, and two equi-joins on
     * the word marginals (vocab-sized — AQE broadcasts them when small,
-    * sort-merge when a 100 TB vocab isn't). The scalar totals broadcast.
-    * `minCount` prunes the hapax tail BEFORE the joins — PMI is noise
-    * below a handful of observations anyway. The ln-chain is mirrored
-    * shape-for-shape in the oracle so the doubles stay bit-comparable.
+    * sort-merge when a 100 TB vocab isn't). `minCount` prunes the
+    * hapax tail BEFORE the joins — PMI is noise below a handful of
+    * observations anyway. The ln-chain is mirrored shape-for-shape in
+    * the oracle so the doubles stay bit-comparable.
     *
-    * The scalar totals ride single-partition WINDOWS over the two
-    * vocab-sized count tables (exact long sums — value-identical to a
-    * separate aggregate) instead of a separate totals subplan: the
-    * aggregate+crossJoin form re-derived each count table once more
-    * (per-branch column pruning defeats exchange reuse), ~5 text scans
-    * at runtime where the window form pays 3 (one bigram build + one
-    * per unigram-marginal join side — the floor without persisting).
-    * At corpus scale set `persistCounts = true`: the cached tables are
+    * The scalar totals are a one-row `sum` aggregate over the two count
+    * tables (exact long sums), broadcast and cross-joined back. The
+    * aggregate is partial per partition, so only one partial row per
+    * partition reaches the final single-row step: nothing vocab-sized
+    * ever goes through one task (an unpartitioned window over the count
+    * tables would). Without persisting, the totals reuse the unigram
+    * counts' exchange but re-derive the bigram counts from the
+    * repartitioned docs (the joins' inferred not-null filter on the
+    * bigram's words changes that branch's exchange); at corpus scale
+    * set `persistCounts = true`: the cached tables are
     * vocab-sized, not corpus-sized, and the text then scans exactly
     * twice (once per count build) — same remedy as
     * [[graft.dedup.Dedup.ngramJaccard]]'s `persistShingles`. */
@@ -565,20 +567,21 @@ object TextFunctions {
     val (bigrams, uni) =
       if (persistCounts) (bigramsRaw.persist(), uniRaw.persist())
       else (bigramsRaw, uniRaw)
-    // totals ride windows over the count tables, not the corpus
-    // re-scanned. n_bg sums ALL bigrams (the probability denominator),
-    // not just the ones surviving minCount — so it attaches BEFORE the
-    // minCount filter; n_uni rides the word_a marginal side.
-    val wAll = org.apache.spark.sql.expressions.Window.partitionBy()
+    // n_bg sums ALL bigrams (the probability denominator), not just the
+    // ones surviving minCount. Both totals come from ONE aggregate over
+    // the union of the two count columns: one single-row stage and one
+    // broadcast instead of two of each.
+    val totals = bigrams.select(col("pair_count").as("n_bg"), lit(0L).as("n_uni"))
+      .unionByName(uni.select(lit(0L).as("n_bg"), col("c_word").as("n_uni")))
+      .agg(sum(col("n_bg")).as("n_bg"), sum(col("n_uni")).as("n_uni"))
     graft.functions.GraftFunctions.register(docs.sparkSession)
     bigrams
-      .withColumn("n_bg", sum(col("pair_count")).over(wAll))
       .filter(col("pair_count") >= minCount)
       .withColumn("word_a", split(col("bigram"), " ").getItem(0))
       .withColumn("word_b", split(col("bigram"), " ").getItem(1))
-      .join(uni.select(col("word").as("word_a"), col("c_word").as("c_a"),
-        sum(col("c_word")).over(wAll).as("n_uni")), "word_a")
+      .join(uni.select(col("word").as("word_a"), col("c_word").as("c_a")), "word_a")
       .join(uni.select(col("word").as("word_b"), col("c_word").as("c_b")), "word_b")
+      .crossJoin(broadcast(totals))
       // NativeLog + 6 dp round: the log argument is an exact-integer-ratio
       // chain (bit-identical on both engines), the ln itself rides libm —
       // Math.log matches the oracle's glibc on 99.97% of args and the

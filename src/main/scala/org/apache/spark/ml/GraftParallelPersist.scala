@@ -1,12 +1,12 @@
 package org.apache.spark.ml
 
-import org.apache.hadoop.fs.Path
+import java.io.IOException
+
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.ml.util.{DefaultParamsReader, DefaultParamsWriter, MLWritable}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.Fanout
 import org.json4s.{JArray, JObject, JString}
-
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
 
 /** Parallel save/load of a fitted [[PipelineModel]], byte-compatible with
   * `PipelineModel.write` / `PipelineModel.load`'s on-disk layout (same
@@ -23,10 +23,12 @@ import scala.concurrent.duration.Duration
   * latencies. Spark's scheduler happily overlaps independent jobs
   * submitted from different threads (optimization guide §2.6), and the
   * stage artifacts are independent by construction — so the stage
-  * writes/reads fan out on a small bounded pool and wall-clock drops to
-  * the slowest single stage. At cluster scale the win is the same
-  * mechanism, larger: output-commit latency per stage directory is paid
-  * once, concurrently, instead of serially.
+  * writes/reads fan out on a bounded pool owned by each call
+  * ([[Fanout]], which runs every stage under the caller's job group and
+  * other local properties) and wall-clock drops to the slowest single
+  * stage. At cluster scale the win is the same mechanism, larger:
+  * output-commit latency per stage directory is paid once,
+  * concurrently, instead of serially.
   *
   * Lives in `org.apache.spark.ml` because the stage-path layout helper
   * and the metadata reader/writer (`DefaultParamsWriter`/`Reader`,
@@ -36,65 +38,79 @@ import scala.concurrent.duration.Duration
   */
 object GraftParallelPersist {
 
-  /** Bounded daemon pool for stage I/O (pipelines have a handful of
-    * stages; the pool bounds concurrent driver jobs, not data). */
-  private lazy val pool: ExecutionContext =
-    ExecutionContext.fromExecutor(
-      java.util.concurrent.Executors.newFixedThreadPool(4,
-        (r: Runnable) => {
-          val t = new Thread(r, "graft-ml-persist")
-          t.setDaemon(true)
-          t
-        }))
-
-  /** Save `model` under `path` (overwriting), stages in parallel. */
+  /** Save `model` under `path` (overwriting), stages in parallel.
+    * Failure-safe: every stage is checked to be [[MLWritable]] before
+    * anything is written, the model is written to a hidden sibling
+    * directory, and only a complete write replaces `path` (by rename);
+    * a failed save leaves the previous model at `path` loadable. */
   def save(model: PipelineModel, spark: SparkSession, path: String): Unit = {
-    implicit val ec: ExecutionContext = pool
-    val fsPath = new Path(path)
-    val fs = fsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(fsPath)) { fs.delete(fsPath, true); () }
     val stages = model.stages
-    // the exact metadata SharedReadWrite.saveImpl writes: paramMap
-    // overridden with the stage uids (the `stages` param itself is not
-    // JSON-encodable), everything else DefaultParamsWriter's standard shape
-    val jsonParams = JObject(List(
-      "stageUids" -> JArray(stages.map(s => JString(s.uid)).toList)))
-    DefaultParamsWriter.saveMetadata(model, path, spark, None, Some(jsonParams))
-    val stagesDir = new Path(path, "stages").toString
-    val writes = stages.zipWithIndex.toSeq.map { case (stage, idx) =>
-      Future {
-        val stagePath = Pipeline.SharedReadWrite
-          .getStagePath(stage.uid, idx, stages.length, stagesDir)
-        stage.asInstanceOf[MLWritable].write.save(stagePath)
-      }
+    stages.find(!_.isInstanceOf[MLWritable]).foreach { s =>
+      throw new UnsupportedOperationException("Pipeline write will fail on this pipeline " +
+        s"because stage ${s.uid} of type ${s.getClass} is not MLWritable")
     }
-    Await.result(Future.sequence(writes), Duration.Inf)
-    ()
+    val target = new Path(path)
+    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tmp = sibling(target, "tmp")
+    try {
+      // the exact metadata SharedReadWrite.saveImpl writes: paramMap
+      // overridden with the stage uids (the `stages` param itself is not
+      // JSON-encodable), everything else DefaultParamsWriter's standard shape
+      val jsonParams = JObject(List(
+        "stageUids" -> JArray(stages.map(s => JString(s.uid)).toList)))
+      DefaultParamsWriter.saveMetadata(model, tmp.toString, spark, None, Some(jsonParams))
+      val stagesDir = new Path(tmp, "stages").toString
+      Fanout.run(spark, "graft-ml-persist", stages.toSeq.zipWithIndex.map { case (stage, idx) =>
+        () => stage.asInstanceOf[MLWritable].write.save(
+          Pipeline.SharedReadWrite.getStagePath(stage.uid, idx, stages.length, stagesDir))
+      })
+      swapIn(fs, tmp, target)
+    } finally {
+      if (fs.exists(tmp)) fs.delete(tmp, true)
+    }
   }
 
   /** Load a [[PipelineModel]] from `path`, stages in parallel. */
   def load(spark: SparkSession, path: String): PipelineModel = {
-    implicit val ec: ExecutionContext = pool
     val metadata = DefaultParamsReader.loadMetadata(
       path, spark, classOf[PipelineModel].getName)
     implicit val fmt: org.json4s.Formats = org.json4s.DefaultFormats
     val stageUids = (metadata.params \ "stageUids").extract[Seq[String]]
     val stagesDir = new Path(path, "stages").toString
-    val reads = stageUids.zipWithIndex.map { case (uid, idx) =>
-      Future {
+    val stages = Fanout.run(spark, "graft-ml-persist", stageUids.zipWithIndex.map { case (uid, idx) =>
+      () => {
         val stagePath = Pipeline.SharedReadWrite
           .getStagePath(uid, idx, stageUids.length, stagesDir)
         DefaultParamsReader
           .loadParamsInstanceReader[PipelineStage](stagePath, spark)
           .load(stagePath)
       }
-    }
-    val stages = Await.result(Future.sequence(reads), Duration.Inf)
+    })
     val transformers = stages.map {
       case t: Transformer => t
       case other => throw new IllegalStateException(
         s"PipelineModel stage ${other.uid} is not a Transformer")
     }
     new PipelineModel(metadata.uid, transformers.toArray)
+  }
+
+  /** A hidden sibling of `target` (Hadoop listings skip `.`-names). */
+  private def sibling(target: Path, kind: String): Path =
+    new Path(target.getParent, s".${target.getName}.$kind-${java.util.UUID.randomUUID()}")
+
+  /** Replace `target` with the complete write at `tmp`. The previous
+    * target is renamed aside first (a rename onto an existing directory
+    * would nest instead of replace), put back if the swap fails, and
+    * deleted once the new model is in place. */
+  private def swapIn(fs: FileSystem, tmp: Path, target: Path): Unit = {
+    val old = sibling(target, "old")
+    val hadOld = fs.exists(target)
+    if (hadOld && !fs.rename(target, old))
+      throw new IOException(s"cannot move the previous model at $target aside")
+    if (!fs.rename(tmp, target)) {
+      if (hadOld) fs.rename(old, target)
+      throw new IOException(s"cannot move the new model into $target")
+    }
+    if (hadOld) fs.delete(old, true)
   }
 }

@@ -152,4 +152,135 @@ class ConfigRunnerSpec extends SparkSpec {
     assert(direct.nonEmpty)
     assert(filesPerDate(s"$out/run/medallion/silver") === direct)
   }
+
+  /** One four-stage pass under a job group, with every job it ran. */
+  private lazy val groupedPass: (Seq[(String, Long)], Seq[LoggedJob], GraftConfig) = {
+    val out = Files.createTempDirectory("graft_run_fanout").toString
+    val cfg = GraftConfig.load(writeProps(
+      s"paths.input = $sfDir\npaths.output = $out\nstages = medallion,scoring,monitoring,mobility\n"))
+    spark.sparkContext.setJobGroup("graft-runner-pass", "runner fan-out spec")
+    val (written, jobs) =
+      try JobLog.during(spark)(Runner.run(spark, cfg))
+      finally spark.sparkContext.clearJobGroup()
+    (written, jobs, cfg)
+  }
+
+  test("runner: tables come back in stageFrames order") {
+    val (written, _, cfg) = groupedPass
+    assert(written.map(_._1) === Runner.stageFrames(spark, cfg).map(_._1))
+  }
+
+  test("runner: stage tables are written concurrently") {
+    val writes = groupedPass._2.filter(_.isWrite)
+    assert(writes.size >= groupedPass._1.size, "every table's write must run as a job")
+    // jobs of one write may overlap each other (broadcast and shuffle
+    // stages); only jobs of two different tables' writes count
+    val overlapping = writes.combinations(2).count { case Seq(a, b) =>
+      a.execution != b.execution && a.overlaps(b)
+    }
+    assert(overlapping > 0, "no two tables' write jobs overlapped in time")
+  }
+
+  test("runner: every job of the pass carries the caller's job group") {
+    val jobs = groupedPass._2
+    assert(jobs.nonEmpty)
+    val stray = jobs.filterNot(_.group.contains("graft-runner-pass"))
+    assert(stray.isEmpty, s"jobs outside the caller's group: ${stray.map(j => j.id -> j.group)}")
+  }
+
+  private def writerThreadsAlive: Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    Thread.getAllStackTraces.keySet.asScala.toSeq
+      .filter(t => t.getName.startsWith("graft-runner-write") && t.isAlive).map(_.getName)
+  }
+
+  test("runner: a failed write names the first failing table, unpersists silver and leaves no writer thread") {
+    val out = Files.createTempDirectory("graft_run_fail").toString
+    // a regular file where the monitoring stage's directory should go
+    Files.createFile(java.nio.file.Paths.get(s"$out/monitoring"))
+    val cfg = GraftConfig.load(writeProps(
+      s"paths.input = $sfDir\npaths.output = $out\nstages = medallion,scoring,monitoring,mobility\n"))
+    spark.catalog.clearCache()
+    val firstMonitoring = Runner.stageFrames(spark, cfg).map(_._1).find(_.startsWith("monitoring/")).get
+    val e = intercept[Exception] { Runner.run(spark, cfg) }
+    assert(e.getMessage.contains(s"table $firstMonitoring "), e.getMessage)
+    assert(cacheIsEmpty, "run must unpersist silver when a concurrent write throws")
+    val deadline = System.currentTimeMillis() + 10000
+    while (writerThreadsAlive.nonEmpty && System.currentTimeMillis() < deadline) Thread.sleep(50)
+    assert(writerThreadsAlive.isEmpty, s"writer threads left alive: $writerThreadsAlive")
+  }
+
+  /** Runs `body`, and returns with its result the BlockManager warnings
+    * it logged that say a task went to store an RDD block another task
+    * had already stored or was storing: it raced the first build of that
+    * partition. */
+  private def blockRaces[T](body: => T): (T, Seq[String]) = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("graft-block-races", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        val m = e.getMessage.getFormattedMessage
+        if (m.contains("already exists") && m.contains("rdd_")) seen.add(m)
+        ()
+      }
+    }
+    appender.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(appender, Level.WARN, null)
+    ctx.updateLoggers()
+    try (body, { import scala.jdk.CollectionConverters._; seen.asScala.toSeq })
+    finally {
+      root.removeAppender(appender.getName)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+  }
+
+  test("runner: silver's cache is filled before a second write starts, and no task races its build") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val out = Files.createTempDirectory("graft_run_once").toString
+    val cfg = GraftConfig.load(writeProps(
+      s"paths.input = $sfDir\npaths.output = $out\nstages = medallion\n"))
+    spark.catalog.clearCache()
+    // events reach a listener in the order they were posted, so a counter
+    // orders them: the last stored RDD block (silver is the only frame a
+    // medallion-only pass caches) marks when silver's cache was filled
+    val seq = new java.util.concurrent.atomic.AtomicLong(0L)
+    val filledAt = new java.util.concurrent.atomic.AtomicLong(0L)
+    val writeStarts = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new SparkListener {
+      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit = {
+        val n = seq.incrementAndGet()
+        val b = e.blockUpdatedInfo
+        if (b.blockId.isRDD && b.storageLevel.isValid) filledAt.set(n)
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart
+            if s.physicalPlanDescription.contains("InsertIntoHadoopFsRelationCommand") =>
+          writeStarts.add(seq.incrementAndGet())
+          ()
+        case _ =>
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val (written, races) =
+      try blockRaces(Runner.run(spark, cfg))
+      finally {
+        org.apache.spark.ListenerBusAccess.drain(sc)
+        sc.removeSparkListener(listener)
+      }
+    assert(races.isEmpty, s"tasks raced the first build of a cached block: $races")
+    assert(filledAt.get > 0, "no task stored a cached silver block")
+    import scala.jdk.CollectionConverters._
+    val starts = writeStarts.asScala.toSeq
+    assert(starts.size === written.size, "every table's write must run as a SQL execution")
+    val beforeFill = starts.count(_ < filledAt.get)
+    assert(beforeFill === 1, s"$beforeFill writes started before silver's cache was filled")
+  }
 }

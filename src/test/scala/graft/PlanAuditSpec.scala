@@ -118,6 +118,17 @@ class PlanAuditSpec extends SparkSpec {
       s"expected 2 exchanges (silver event_id dedup + event_type window), got $exchanges:\n$plan")
   }
 
+  test("t_pmi: the corpus totals take no unpartitioned window, at most 20 exchanges") {
+    // an unpartitioned window moves the whole bigram / unigram count
+    // table through ONE task; the totals are one-row aggregates instead
+    // (partial per partition), broadcast back onto the scoring rows
+    val plan = SparkEntry.queries("t_pmi")(spark, sfDir)
+      .queryExecution.executedPlan.toString
+    assert(!plan.contains("Window"), s"pmi totals must not plan a window:\n$plan")
+    val exchanges = "Exchange".r.findAllIn(plan).length
+    assert(exchanges <= 20, s"expected at most 20 exchanges, got $exchanges:\n$plan")
+  }
+
   test("f_rm: quintiles plan no single-partition window sort") {
     // the round-7 scale-killer: three bare Window.orderBy ntile windows
     // each moved the whole user dim through ONE task (Exchange
