@@ -40,20 +40,16 @@ object PlanDump {
       println(s"wrote $outDir/${name}_$tag.txt (${txt.length} chars)")
     }
     // `cur` materializes via localCheckpoint inside the operator, so its
-    // query plan is just the checkpoint scan; additionally dump the LAZY
-    // one-pass aggregate plan (what actually executes before the pin).
+    // query plan is just the checkpoint scan; additionally dump the lazy
+    // report aggregate over the pinned curation flags.
     if (keys.contains("cur")) {
       import org.apache.spark.sql.functions.col
       val docs = Tables.documents(spark, dir)
-      val flagged = graft.pipeline.Pipeline.onePassFlagged(docs, 0.2).persist()
-      flagged.count()
-      val lazyReport = graft.pipeline.Pipeline.onePassReport(
-        flagged, docs.filter(col("doc_id") % 20 === 0),
-        Map("en" -> 0.5, "de" -> 0.25), 0.1)
+      val lazyReport = graft.pipeline.Pipeline.flagReport(graft.pipeline.Pipeline.curationFlags(
+        docs, docs.filter(col("doc_id") % 20 === 0), 0.2, Map("en" -> 0.5, "de" -> 0.25), 0.1))
       val txt = lazyReport.queryExecution.explainString(FormattedMode)
-      Files.writeString(outDir.resolve(s"cur_onepass_$tag.txt"), txt)
-      flagged.unpersist()
-      println(s"wrote $outDir/cur_onepass_$tag.txt (${txt.length} chars)")
+      Files.writeString(outDir.resolve(s"cur_flags_$tag.txt"), txt)
+      println(s"wrote $outDir/cur_flags_$tag.txt (${txt.length} chars)")
     }
     spark.stop()
   }

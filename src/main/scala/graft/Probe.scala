@@ -18,7 +18,6 @@ object Probe {
     spark.sparkContext.setLogLevel("ERROR")
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     SparkEntry.warmCache(spark, dir)
-    // one-off curation-stage decomposition probe
     // IVF-PQ recall curve over its two query-side levers (nprobe ×
     // refine) — the measurement behind the deployed v_iq/v_ix defaults;
     // results recorded in BASELINE.md
@@ -151,60 +150,6 @@ object Probe {
           s"(stages=${model.stages.length})")
       }
       spark.stop(); return
-    }
-    // one-pass curation report decomposition
-    if (args.length > 1 && args(1) == "curparts") {
-      import org.apache.spark.sql.functions._
-      val docs = Tables.documents(spark, dir)
-      val bench = docs.filter(col("doc_id") % 20 === 0)
-      for (pass <- 1 to 2) {
-        def t(name: String)(f: => Any): Unit = {
-          val t0 = System.nanoTime()
-          f
-          println(f"CURPART $name%-16s($pass) ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-        }
-        val hashW = org.apache.spark.sql.expressions.Window.partitionBy(md5(lower(col("text"))))
-        val flagged = docs
-          .withColumn("n_toks", size(filter(split(lower(col("text")), " "), t => t =!= "")))
-          .withColumn("q", graft.text.TextFunctions.qualityScoreCol(col("text")) >= 0.2)
-          .withColumn("e", col("q") && col("doc_id") === min(when(col("q"), col("doc_id"))).over(hashW))
-          .persist()
-        t("flag_fill")(flagged.count())
-        val exactKept = flagged.filter(col("e"))
-        var pairs: org.apache.spark.sql.DataFrame = null
-        t("lsh_pairs")({ pairs = graft.dedup.Dedup.minhashLsh(exactKept).persist(); pairs.count() })
-        var clusters: org.apache.spark.sql.DataFrame = null
-        t("dupClusters")({ clusters = graft.dedup.Dedup.dupClusters(exactKept, pairs) })
-        t("nearIds")(graft.dedup.Dedup.nearHitIds(exactKept, bench, 3, 5).count())
-        t("full_report")(graft.pipeline.Pipeline.curationReport(
-          docs, bench, 0.2, Map("en" -> 0.5, "de" -> 0.25), 0.1).count())
-        pairs.unpersist(); flagged.unpersist()
-      }
-      spark.stop(); return
-    }
-    if (args.length > 1 && args(1) == "curstages") {
-      import org.apache.spark.sql.functions._
-      val docs = Tables.documents(spark, dir)
-      val bench = docs.filter(col("doc_id") % 20 === 0)
-      def t(name: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val n = f
-        println(f"CURSTAGE $name%-22s ${(System.nanoTime() - t0) / 1e9}%6.2f s ($n rows)")
-      }
-      for (pass <- 1 to 2) {
-        val t0 = System.nanoTime()
-        val st = graft.pipeline.Pipeline.runCuration(docs, bench, 0.2,
-          Map("en" -> 0.5, "de" -> 0.25), 0.1)
-        println(f"CURSTAGE runCuration($pass)      ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-        t(s"decontam_lazy($pass)")(st("decontaminated").count())
-        val d = st("decontaminated")
-        val t1 = System.nanoTime()
-        d.persist(); d.count()
-        println(f"CURSTAGE decontam_fill($pass)    ${(System.nanoTime() - t1) / 1e9}%6.2f s")
-        d.unpersist()
-      }
-      spark.stop()
-      return
     }
     // post-execution plan + job/stage counts for named keys: AQE's FINAL
     // plan (with ReusedQueryStage/ReusedExchange nodes runtime reuse

@@ -177,14 +177,10 @@ object Stress {
     val bench10 = dupHeavy.filter(col("doc_id") % 10 === 0)
     time("decontam_exact_10x")(Dedup.decontaminate(dupHeavy, bench10))
     time("decontam_bloom_10x")(Dedup.bloomDecontaminate(dupHeavy, bench10))
-    // persisted-intermediate (_mat) timings run LAST in the dupHeavy
-    // block: the callees persist frames the caller can't unpersist by
+    // the persisted-intermediate (_mat) timing runs LAST in the dupHeavy
+    // block: the callee persists frames the caller can't unpersist by
     // reference, so the clearCache below reclaims them before the next
-    // corpus — and no NON-mat timing runs with them resident. Between
-    // the two _mat lines the only leak is PMI's count tables, which are
-    // vocab-sized (KBs) — negligible next to the cached 50k-doc corpus.
-    time("text_pmi_10x_mat")(
-      graft.text.TextFunctions.pmiCollocations(dupHeavy, persistCounts = true))
+    // corpus — and no NON-mat timing runs with them resident.
     // persisted anchors: tokenize+hash once instead of once per plan
     // branch (stop count, anti-join probe, both self-join sides); its
     // token-stream-sized anchor cache is why this line runs last of all
@@ -448,10 +444,9 @@ object Stress {
     // hashes) all grow 10× with no candidate blow-up, so the report's
     // composed five shuffle families must track ~linearly. The adversarial
     // candidate-volume axis is already gated by minhash_*_10x above; this
-    // line gates the COMPOSITION (the `cur` entry is the second-most
-    // expensive bench line — per-stage job latency across the nine
-    // aggregate branches at test SF, which a 10× corpus amortizes; the
-    // pin variant below measures where persist-every-stage overtakes).
+    // line gates the COMPOSITION (the `cur` entry is one of the most
+    // expensive bench lines — per-job latency of the flag, LSH,
+    // cluster and probe passes at test SF, which a 10× corpus amortizes).
     val docsL = Tables.documents(spark, sfDir).select("doc_id", "lang", "text")
     def curCorpus(copies: Int): DataFrame = (0 until copies).map { i =>
       docsL.select((col("doc_id") + lit(i * 10000000L)).as("doc_id"), col("lang"),
@@ -468,10 +463,6 @@ object Stress {
     time("curation_10x")(graft.pipeline.Pipeline.curationReport(
       cur10, cur10.filter(col("doc_id") % 20 === 0),
       minQuality = 0.2, rates = Map("en" -> 0.5, "de" -> 0.25), defaultRate = 0.1))
-    time("curation_10x_pin")(graft.pipeline.Pipeline.curationReport(
-      cur10, cur10.filter(col("doc_id") % 20 === 0),
-      minQuality = 0.2, rates = Map("en" -> 0.5, "de" -> 0.25), defaultRate = 0.1,
-      pinStages = true))
     cur10.unpersist()
     spark.catalog.clearCache()
 

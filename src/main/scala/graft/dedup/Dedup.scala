@@ -762,12 +762,11 @@ object Dedup {
         .select(col("doc_id").cast(docIdType).as("doc_id"),
           col("mapped").cast(docIdType).as("mapped"))
       // Eager localCheckpoint: the distributed loop below returns a
-      // checkpointed frame by construction, and callers rely on that
-      // pinned-result contract — curationReport's nine branches each
-      // re-evaluate their clusters reference, and an unpinned broadcast
-      // join here would re-run the docs LINEAGE (quality filter + dedup
-      // window) per branch (measured: cur 5.3 → 6.5 s when this path
-      // first shipped lazy). One docs-sized 3-column materialization.
+      // checkpointed frame by construction, so both paths keep one
+      // pinned-result contract — a caller that reads the clusters more
+      // than once never re-runs the docs lineage under them (e.g. a
+      // quality filter and dedup window). One docs-sized 3-column
+      // materialization.
       return docs.select("doc_id")
         .join(broadcast(mapped), Seq("doc_id"), "left")
         .select(col("doc_id"),

@@ -301,9 +301,9 @@ object Models {
   /** FastText-style corpus quality classifier — the reference's
     * features → model → batch-score arc (demand_forecasting.py:63-300)
     * applied to the LLM-data surface: hashed token features →
-    * LogisticRegression → a per-document quality PROBABILITY, the score
-    * [[graft.pipeline.Pipeline.runCuration]] can filter on in place of
-    * the hand-tuned heuristic (`classifierQuality = true`).
+    * LogisticRegression → a per-document quality PROBABILITY, a learned
+    * alternative to the hand-tuned heuristic score
+    * [[graft.pipeline.Pipeline.runCuration]] filters on.
     *
     * Labels, in fastText's recipe (positive class = a TRUSTED corpus,
     * negative = the raw crawl — noisy by design, positives hiding in the

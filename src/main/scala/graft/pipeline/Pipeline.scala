@@ -1,13 +1,18 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.dedup.Dedup
 import graft.features.FeatureEngineering
 import graft.mobility.Mobility
 import graft.monitoring.Monitoring
 import graft.quality.DataQuality
+import graft.sampling.Sampling
 import graft.scoring.Scoring
+import graft.text.TextFunctions
 
 /** Composable pipeline runners — the re-expression of the reference's
   * Airflow DAGs (reference airflow/dags: bronze → silver → gold → ML)
@@ -101,7 +106,6 @@ object Pipeline {
     * gets from Delta MERGE. Untouched partitions are never rewritten. */
   def runIncremental(spark: SparkSession, dir: String, sinkPath: String,
       dates: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions._
     val silver = Silver.cleanEvents(Bronze.ingestEvents(Tables.events(spark, dir)))
       .filter(col("event_date").isin(dates.map(java.sql.Date.valueOf): _*))
     graft.sources.Sinks.overwritePartitions(silver, sinkPath, Seq("event_date"))
@@ -119,7 +123,6 @@ object Pipeline {
     * trigger full reprocessing (safe under the idempotent overwrite, but
     * expensive) and hide a sink that needs fixing. */
   def newDates(spark: SparkSession, dir: String, sinkPath: String): Seq[String] = {
-    import org.apache.spark.sql.functions._
     val src = Silver.cleanEvents(Bronze.ingestEvents(Tables.events(spark, dir)))
       .select(col("event_date")).distinct()
     val sink = new org.apache.hadoop.fs.Path(sinkPath)
@@ -135,9 +138,9 @@ object Pipeline {
     * medallion flow, chaining the §2.7-§2.9 operators the way a real
     * corpus pipeline runs them:
     *
-    *   1. score: language ID + quality signals per doc;
+    *   1. score: quality signals per doc;
     *   2. filter: keep docs whose quality score clears `minQuality`;
-    *   3. exact dedup: drop byte-identical texts (keep min doc_id);
+    *   3. exact dedup: drop texts identical up to case (keep min doc_id);
     *   4. near dedup: MinHash-LSH pairs → connected components → keep
     *      only each cluster's canonical doc;
     *   5. decontaminate against the benchmark set;
@@ -146,239 +149,121 @@ object Pipeline {
     *   8. deterministic epoch shuffle of the curated mix (sharded md5
     *      permutation — the order a training run replays).
     *
-    * Every stage is a DataFrame→DataFrame transform: the whole curation
-    * is ONE Catalyst lineage (plus the bounded label-propagation loop),
-    * so column pruning reaches the parquet scan through all six stages. */
-  /** `withLshEval = true` adds an `"lsh_eval"` output: the
+    * The funnel executes ONCE, at call time: [[curationFlags]] pins one
+    * flag per stage on a docs-sized frame, and each stage output is
+    * `docs` filtered to the doc_ids its flag keeps (`split` and
+    * `shuffled` are projections of `curated`). Writing the outputs scans
+    * `docs` and joins the pinned flags; no quality scan, dedup window or
+    * LSH join runs again. The pin is a `localCheckpoint`, whose blocks
+    * are lost with their executor: re-call the operator rather than hold
+    * its outputs across executor loss.
+    *
+    * `withLshEval = true` adds an `"lsh_eval"` output: the
     * precision/recall/F1 of the approximate near-dup pass against the
     * exact shingle-Jaccard path over the quality-kept corpus — the QA
     * report a curation run ships alongside its outputs. Off by default
     * (it costs an extra exact-Jaccard pass; at 100 TB run it on a
     * sampled stratum). */
-  /** `classifierQuality = true` swaps the hand-tuned heuristic filter for
-    * [[graft.ml.Models.qualityClassifier]]'s learned per-doc probability
-    * (same threshold semantics): the features→model→batch-score arc as a
-    * drop-in curation stage. The classifier run costs one LR fit over
-    * hashed token vectors; at 100 TB fit it on a sampled stratum and
-    * broadcast-score, same protocol as the other spark.ml models. */
   def runCuration(docs: DataFrame, benchmark: DataFrame,
       minQuality: Double = 0.2,
       rates: Map[String, Double] = Map.empty, defaultRate: Double = 1.0,
-      withLshEval: Boolean = false,
-      classifierQuality: Boolean = false):
-      Map[String, DataFrame] = {
-    import org.apache.spark.sql.functions._
-    val scored =
-      if (classifierQuality)
-        graft.ml.Models.qualityClassifier(docs)
-          .select(col("doc_id"), col("quality_prob").as("quality_score"))
-      else
-        graft.text.TextFunctions.quality(docs)
-          .select(col("doc_id"), col("quality_score"))
-    val qualityKept = docs.join(
-      scored.filter(col("quality_score") >= minQuality).select("doc_id"), "doc_id")
-    val exactKept = graft.dedup.Dedup.exactDedup(qualityKept)
-      .filter(col("is_duplicate") === 0).select("doc_id")
-      .join(qualityKept, "doc_id")
-    val clusters = graft.dedup.Dedup.dupClusters(
-      exactKept, graft.dedup.Dedup.minhashLsh(exactKept))
-    val nearKept = clusters.filter(col("is_canonical") === 1).select("doc_id")
-      .join(exactKept, "doc_id")
-    val clean = graft.dedup.Dedup.decontaminate(nearKept, benchmark)
-    val sampled =
-      if (rates.isEmpty && defaultRate >= 1.0) clean
-      else graft.sampling.Sampling.stratifiedHashSample(
-        clean, "doc_id", "lang", rates, defaultRate)
+      withLshEval: Boolean = false): Map[String, DataFrame] = {
+    val flags = curationFlags(docs, benchmark, minQuality, rates, defaultRate)
+    def kept(flag: String) = docs.join(flags.filter(col(flag)).select("doc_id"), "doc_id")
+    val qualityKept = kept("q")
+    val curated = kept("cur")
     val outputs = Map(
       "quality_kept" -> qualityKept,
-      "exact_kept" -> exactKept,
-      "near_kept" -> nearKept,
-      "decontaminated" -> clean,
-      "curated" -> sampled,
+      "exact_kept" -> kept("e"),
+      "near_kept" -> kept("nk"),
+      "decontaminated" -> kept("dec"),
+      "curated" -> curated,
       // split salt MUST differ from the sampling salt: both hash doc_id,
       // and with the shared default every sampled survivor has fraction
       // < rate ≤ its stratum cap, so the 0.8/0.9 split thresholds would
       // assign every curated doc to train (round-8 find; the independent
       // salt restores the unconditional 80/10/10 expectation)
-      "split" -> graft.sampling.Sampling.splitAssign(sampled, "doc_id", salt = "graft:split"),
-      "shuffled" -> graft.sampling.Sampling.shuffleShards(sampled, "doc_id"))
-    if (withLshEval)
-      outputs + ("lsh_eval" -> graft.dedup.Dedup.lshEval(qualityKept))
+      "split" -> Sampling.splitAssign(curated, "doc_id", salt = "graft:split"),
+      "shuffled" -> Sampling.shuffleShards(curated, "doc_id"))
+    if (withLshEval) outputs + ("lsh_eval" -> Dedup.lshEval(qualityKept))
     else outputs
   }
 
   /** The curation run's oracle-checkable face: one row per stage with
     * surviving doc and token counts — input → quality filter → exact
     * dedup → near dedup → decontamination → stratified sample → the three
-    * split assignments. Every stage is an already-oracle-green operator,
-    * so the whole end-to-end composition gets a DuckDB-verifiable
-    * signature (the round-7 verdict's one soft spot: `runCuration` was
-    * spec-tested but had no oracle-checked output).
+    * split assignments — taken in one conditional-sum aggregate over the
+    * same pinned flags [[runCuration]] filters `docs` by. The DuckDB
+    * oracle replays the funnel from the operators' definitions.
     *
     * Token counts are non-empty whitespace tokens (the `t_pk` packing
     * definition).
     *
-    * Cost model (honest — Spark performs NO cross-branch common-
-    * subexpression reuse across union branches; ReuseExchange only dedups
-    * identical exchanges within one physical plan): each of the nine
-    * aggregates re-evaluates the curation tail DOWNSTREAM of
-    * `dupClusters`' pinned result (the driver union-find's broadcast map
-    * below its edge cutover, the per-round localCheckpoint above it) —
-    * the expensive middle (LSH + clustering) runs once by construction.
-    * MEASURED at sf0.1 (5k docs): the whole nine-branch union job costs
-    * ~1.1 s on top of runCuration's ~4.1 s eager cluster loop, because the
-    * branches evaluate concurrently across cores; a persist-every-stage
-    * variant was measured SLOWER (7.5 s of serialized cache-fill latency,
-    * and the InMemoryRelation chain slowed the decontaminate tail 4× by
-    * breaking the codegen'd scan pipeline — round 9). The trade flips at
-    * scale: when the post-checkpoint tails are expensive (100 TB corpora,
-    * not benchmark-sized ones), set `pinStages = true` to persist each
-    * stage, fill the caches sequentially in dependency order (concurrent
-    * tasks racing an unfilled cache each recompute it), and unpersist
-    * after the report materializes — each stage then executes exactly
-    * once at the price of one job of latency per stage.
-    *
-    * EXECUTION NOTE: both paths return an eagerly materialized
-    * `localCheckpoint` of the 9-row report, not a lazy plan — the report
-    * executes at call time, its lineage is cut (explain shows a
-    * checkpoint scan; it will not recompute if the source data changes),
-    * and localCheckpoint blocks are unrecoverable on executor loss under
-    * dynamic allocation. Fine for a 9-row frame; callers wanting a fresh
-    * report re-call the operator. */
+    * Returns an eagerly materialized `localCheckpoint` of the 9-row
+    * report: it executes at call time, its lineage is cut (it will not
+    * recompute if the source data changes), and localCheckpoint blocks
+    * are unrecoverable on executor loss under dynamic allocation.
+    * Callers wanting a fresh report re-call the operator. */
   def curationReport(docs: DataFrame, benchmark: DataFrame,
       minQuality: Double = 0.2,
       rates: Map[String, Double] = Map.empty,
-      defaultRate: Double = 1.0,
-      pinStages: Boolean = false): DataFrame = {
-    if (!pinStages)
-      return curationReportOnePass(docs, benchmark, minQuality, rates, defaultRate)
-    import org.apache.spark.sql.functions._
-    val stages = runCuration(docs, benchmark, minQuality, rates, defaultRate)
-    val splits = stages("split")
-    // CacheManager substitutes by logical-plan fragment at planning time,
-    // so persisting here also serves the frames derived from these inside
-    // runCuration (e.g. splits was built from `curated` before this call).
-    // pinStages is always true past the early return above
-    val pinned =
-      Seq("quality_kept", "exact_kept", "near_kept",
-        "decontaminated", "curated").map(stages) :+ splits
-    pinned.foreach { df => df.persist(); df.count(); () }
-    try {
-      val named = Seq(
-        ("input", docs),
-        ("quality_kept", stages("quality_kept")),
-        ("exact_kept", stages("exact_kept")),
-        ("near_kept", stages("near_kept")),
-        ("decontaminated", stages("decontaminated")),
-        ("curated", stages("curated")),
-        ("split_train", splits.filter(col("split") === "train")),
-        ("split_val", splits.filter(col("split") === "val")),
-        ("split_test", splits.filter(col("split") === "test")))
-      val report = named.zipWithIndex.map { case ((name, df), i) =>
-        df.agg(
-          count(lit(1)).as("n_docs"),
-          coalesce(sum(size(filter(split(lower(col("text")), " "), t => t =!= ""))),
-            lit(0L)).as("n_tokens"))
-          .select(lit(i).as("stage_idx"), lit(name).as("stage"),
-            col("n_docs"), col("n_tokens"))
-      }.reduce(_.unionByName(_))
-      // materialize BEFORE the caches drop in finally
-      report.localCheckpoint(true)
-    } finally {
-      pinned.foreach(_.unpersist())
-      ()
-    }
-  }
+      defaultRate: Double = 1.0): DataFrame =
+    flagReport(curationFlags(docs, benchmark, minQuality, rates, defaultRate))
+      .localCheckpoint(true)
 
-  /** The default execution of [[curationReport]]: every stage of the
-    * curation funnel is a FLAG COLUMN on one persisted corpus frame, and
-    * the nine report rows fall out of a single conditional-sum aggregate
-    * — instead of nine union branches each re-evaluating its stage
-    * lineage (the quality scan ran ~8×, the exact-dedup window ~7× in
-    * the staged shape; Spark performs no cross-branch reuse). The stage
-    * SETS are provably identical:
+  /** The curation funnel as one flag column per stage, over every doc:
+    * `doc_id, n_toks, q, e, nk, dec, cur, s_tr, s_va, s_te`.
     *
-    *   - `q`  — quality_score ≥ minQuality, the same
-    *     [[graft.text.TextFunctions.qualityScoreCol]] expression the
-    *     staged path joins in;
-    *   - `e`  — q AND doc_id = min(quality doc_id) over the same
-    *     md5(lower(text)) window ([[graft.dedup.Dedup.exactDedup]]'s
+    *   - `q`   — quality_score ≥ minQuality
+    *     ([[graft.text.TextFunctions.qualityScoreCol]]);
+    *   - `e`   — q AND doc_id = min(quality doc_id) over the
+    *     md5(lower(text)) group ([[graft.dedup.Dedup.exactDedup]]'s
     *     groups restricted to quality docs via min-over-when);
-    *   - `nk` — e AND not in the NON-canonical set of
-    *     [[graft.dedup.Dedup.dupClusters]] over the SAME exact-kept
-    *     frame and LSH pairs (the non-canonical set is dup-volume-sized,
-    *     so the flag join broadcasts);
-    *   - `dec`— nk AND neither decontamination probe fires (same
-    *     [[graft.dedup.Dedup.benchHashSet]]/`nearHitIds` probes, the
-    *     near probe computed over the nk subset exactly as
-    *     `decontaminate(nearKept, benchmark)` would);
-    *   - `cur`— dec AND the stratified hash-sample predicate
-    *     (same [[graft.sampling.Sampling.hashFraction]] salt/rates);
-    *   - splits — the same "graft:split" hash thresholds.
+    *   - `nk`  — e AND not in the NON-canonical set of
+    *     [[graft.dedup.Dedup.dupClusters]] over the exact-kept docs and
+    *     their MinHash-LSH pairs (the non-canonical set is
+    *     dup-volume-sized, so the flag join broadcasts);
+    *   - `dec` — nk AND neither [[graft.dedup.Dedup.decontaminate]] probe
+    *     fires (exact hash hit, or the near-overlap probe over the nk
+    *     docs);
+    *   - `cur` — dec AND the stratified hash-sample predicate
+    *     ([[graft.sampling.Sampling.stratifiedHashSample]]'s salt and
+    *     rates);
+    *   - `s_tr`/`s_va`/`s_te` — cur AND the "graft:split" 80/10/10
+    *     thresholds of [[graft.sampling.Sampling.splitAssign]].
     *
-    * Counts are exact integer sums, so the collapse is value-identical,
-    * not approximately so — the `cur` DuckDB oracle replays it, and
-    * `pinStages = true` keeps the independent staged execution as a
-    * cross-check (spec-asserted equal). The corpus text scans exactly
-    * twice per report (flag fill + the LSH signing inside the cached
-    * frame), versus ~9 staged evaluations. */
-  private def curationReportOnePass(docs: DataFrame, benchmark: DataFrame,
-      minQuality: Double,
-      rates: Map[String, Double],
-      defaultRate: Double): DataFrame = {
-    val flagged = onePassFlagged(docs, minQuality).persist()
-    flagged.count() // fill once; every downstream pass reads the cache
-    // 9 rows; materialize before the cache drops in finally
-    try onePassReport(flagged, benchmark, rates, defaultRate).localCheckpoint(true)
-    finally {
-      flagged.unpersist()
-      ()
-    }
-  }
-
-  /** The flag frame of the one-pass report (lazy; callers persist). */
-  private[graft] def onePassFlagged(docs: DataFrame, minQuality: Double): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val hashW = org.apache.spark.sql.expressions.Window
-      .partitionBy(md5(lower(col("text"))))
-    docs
+    * The q/e frame is persisted while the LSH, cluster and probe passes
+    * read it, so the corpus text is scored once; it needs no fill job of
+    * its own, because those passes run one after another. The result is an eager
+    * `localCheckpoint(true)`, the pinned-result contract of
+    * [[graft.dedup.Dedup.dupClusters]]: every frame derived from it reads
+    * the materialized flags instead of re-running the funnel. */
+  private[graft] def curationFlags(docs: DataFrame, benchmark: DataFrame,
+      minQuality: Double, rates: Map[String, Double], defaultRate: Double): DataFrame = {
+    val hashW = Window.partitionBy(md5(lower(col("text"))))
+    val flagged = docs
       .withColumn("n_toks",
         size(filter(split(lower(col("text")), " "), t => t =!= "")))
-      .withColumn("q",
-        graft.text.TextFunctions.qualityScoreCol(col("text")) >= minQuality)
+      .withColumn("q", TextFunctions.qualityScoreCol(col("text")) >= minQuality)
       .withColumn("e",
         col("q") && col("doc_id") === min(when(col("q"), col("doc_id"))).over(hashW))
-  }
-
-  /** The lazy 9-row report over a (persisted) flag frame — split out so
-    * plan audits can `explain` the aggregate without the operator's own
-    * checkpoint hiding it. */
-  private[graft] def onePassReport(flagged: DataFrame, benchmark: DataFrame,
-      rates: Map[String, Double],
-      defaultRate: Double): DataFrame = {
-    import org.apache.spark.sql.functions._
-    {
+      .persist() // filled by its first reader, dupClusters' pair count
+    try {
       val exactKept = flagged.filter(col("e"))
-      val clusters = graft.dedup.Dedup.dupClusters(
-        exactKept, graft.dedup.Dedup.minhashLsh(exactKept))
-      val nonCanon = clusters.filter(col("is_canonical") === 0)
+      val nonCanon = Dedup.dupClusters(exactKept, Dedup.minhashLsh(exactKept))
+        .filter(col("is_canonical") === 0)
         .select(col("doc_id"), lit(1).as("nc"))
       val withNk = flagged
         .join(nonCanon, Seq("doc_id"), "left")
         .withColumn("nk", col("e") && col("nc").isNull)
-      val nearIds = graft.dedup.Dedup
-        .nearHitIds(withNk.filter(col("nk")), benchmark, 3, 5)
+      val nearIds = Dedup.nearHitIds(withNk.filter(col("nk")), benchmark, 3, 5)
         .withColumn("nh", lit(1))
-      val rateCol = rates.foldLeft(lit(defaultRate): org.apache.spark.sql.Column) {
-        case (acc, (k, r)) => when(col("lang") === k, lit(r)).otherwise(acc)
-      }
       val curFlag =
         if (rates.isEmpty && defaultRate >= 1.0) col("dec")
-        else col("dec") &&
-          graft.sampling.Sampling.hashFraction(col("doc_id"), "graft") < rateCol
-      val splitF = graft.sampling.Sampling.hashFraction(col("doc_id"), "graft:split")
-      val full = withNk
-        .join(broadcast(graft.dedup.Dedup.benchHashSet(benchmark)),
+        else col("dec") && Sampling.stratifiedKeep("doc_id", "lang", rates, defaultRate)
+      val splitF = Sampling.hashFraction(col("doc_id"), "graft:split")
+      withNk
+        .join(broadcast(Dedup.benchHashSet(benchmark)),
           md5(lower(col("text"))) === col("bench_hash"), "left")
         .join(nearIds, Seq("doc_id"), "left")
         .withColumn("dec", col("nk") && col("bench_hash").isNull && col("nh").isNull)
@@ -386,22 +271,32 @@ object Pipeline {
         .withColumn("s_tr", col("cur") && splitF < 0.8)
         .withColumn("s_va", col("cur") && splitF >= 0.8 && splitF < 0.9)
         .withColumn("s_te", col("cur") && splitF >= 0.9)
-      def cnt(f: org.apache.spark.sql.Column) = coalesce(sum(when(f, 1L)), lit(0L))
-      def tok(f: org.apache.spark.sql.Column) = coalesce(sum(when(f, col("n_toks").cast("long"))), lit(0L))
-      val names = Seq("input", "quality_kept", "exact_kept", "near_kept",
-        "decontaminated", "curated", "split_train", "split_val", "split_test")
-      val flags = Seq(lit(true), col("q"), col("e"), col("nk"),
-        col("dec"), col("cur"), col("s_tr"), col("s_va"), col("s_te"))
-      val aggs = flags.zipWithIndex.flatMap { case (f, i) =>
-        Seq(cnt(f).as(s"d$i"), tok(f).as(s"t$i"))
-      }
-      val one = full.agg(aggs.head, aggs.tail: _*)
-      val rows = names.zipWithIndex.map { case (n, i) =>
-        struct(lit(i).as("stage_idx"), lit(n).as("stage"),
-          col(s"d$i").as("n_docs"), col(s"t$i").as("n_tokens"))
-      }
-      one.select(explode(array(rows: _*)).as("r"))
-        .select(col("r.stage_idx"), col("r.stage"), col("r.n_docs"), col("r.n_tokens"))
+        .select("doc_id", "n_toks", "q", "e", "nk", "dec", "cur", "s_tr", "s_va", "s_te")
+        .localCheckpoint(true)
+    } finally {
+      flagged.unpersist()
+      ()
     }
+  }
+
+  /** The lazy 9-row report over a [[curationFlags]] frame — separate so
+    * plan dumps can `explain` the aggregate without the report's own
+    * checkpoint hiding it. */
+  private[graft] def flagReport(flags: DataFrame): DataFrame = {
+    val stages = Seq("input" -> lit(true), "quality_kept" -> col("q"),
+      "exact_kept" -> col("e"), "near_kept" -> col("nk"), "decontaminated" -> col("dec"),
+      "curated" -> col("cur"), "split_train" -> col("s_tr"), "split_val" -> col("s_va"),
+      "split_test" -> col("s_te")).zipWithIndex
+    val aggs = stages.flatMap { case ((_, f), i) =>
+      Seq(coalesce(sum(when(f, 1L)), lit(0L)).as(s"d$i"),
+        coalesce(sum(when(f, col("n_toks").cast("long"))), lit(0L)).as(s"t$i"))
+    }
+    val rows = stages.map { case ((name, _), i) =>
+      struct(lit(i).as("stage_idx"), lit(name).as("stage"),
+        col(s"d$i").as("n_docs"), col(s"t$i").as("n_tokens"))
+    }
+    flags.agg(aggs.head, aggs.tail: _*)
+      .select(explode(array(rows: _*)).as("r"))
+      .select(col("r.stage_idx"), col("r.stage"), col("r.n_docs"), col("r.n_tokens"))
   }
 }

@@ -39,11 +39,17 @@ object Sampling {
     * are small (languages, sources), so no join, stays codegen'd. */
   def stratifiedHashSample(df: DataFrame, keyCol: String, stratumCol: String,
       rates: Map[String, Double], defaultRate: Double = 0.0,
-      salt: String = "graft"): DataFrame = {
+      salt: String = "graft"): DataFrame =
+    df.filter(stratifiedKeep(keyCol, stratumCol, rates, defaultRate, salt))
+
+  /** [[stratifiedHashSample]]'s keep predicate as a column, for callers
+    * that flag the sampled rows instead of filtering them. */
+  private[graft] def stratifiedKeep(keyCol: String, stratumCol: String,
+      rates: Map[String, Double], defaultRate: Double, salt: String = "graft"): Column = {
     val rateCol = rates.foldLeft(lit(defaultRate): Column) {
       case (acc, (k, r)) => when(col(stratumCol) === k, lit(r)).otherwise(acc)
     }
-    df.filter(hashFraction(col(keyCol), salt) < rateCol)
+    hashFraction(col(keyCol), salt) < rateCol
   }
 
   /** Deterministic train/eval style split: returns rows whose hash

@@ -538,42 +538,31 @@ object TextFunctions {
     * observations anyway. The ln-chain is mirrored shape-for-shape in
     * the oracle so the doubles stay bit-comparable.
     *
-    * The scalar totals are a one-row `sum` aggregate over the two count
-    * tables (exact long sums), broadcast and cross-joined back. The
-    * aggregate is partial per partition, so only one partial row per
-    * partition reaches the final single-row step: nothing vocab-sized
-    * ever goes through one task (an unpartitioned window over the count
-    * tables would). Without persisting, the totals reuse the unigram
-    * counts' exchange but re-derive the bigram counts from the
-    * repartitioned docs (the joins' inferred not-null filter on the
-    * bigram's words changes that branch's exchange); at corpus scale
-    * set `persistCounts = true`: the cached tables are
-    * vocab-sized, not corpus-sized, and the text then scans exactly
-    * twice (once per count build) — same remedy as
-    * [[graft.dedup.Dedup.ngramJaccard]]'s `persistShingles`. */
-  def pmiCollocations(docs: DataFrame, minCount: Int = 5,
-      persistCounts: Boolean = false): DataFrame = {
+    * The scalar totals are a one-row `sum` aggregate (exact long sums)
+    * taken straight from the token arrays, broadcast and cross-joined
+    * back: a doc with n tokens explodes to n words and max(n − 1, 0)
+    * bigrams, so the totals need neither count table, and the bigram
+    * table is built once, for the join. The aggregate is partial per
+    * partition, so nothing corpus- or vocab-sized ever goes through one
+    * task (an unpartitioned window over the count tables would). */
+  def pmiCollocations(docs: DataFrame, minCount: Int = 5): DataFrame = {
     val t = col("t")
     val bgRaw = transform(
       sequence(lit(1), greatest(size(t) - 1, lit(1))),
       i => concat_ws(" ", try_element_at(t, i), try_element_at(t, i + 1)))
     val toksDf = docs.select(filter(toks(col("text")), x => x =!= "").as("t"))
-    val bigramsRaw = toksDf
+    val bigrams = toksDf
       .select(explode(slice(bgRaw, lit(1), greatest(size(t) - 1, lit(0)))).as("bigram"))
       .groupBy("bigram").agg(count(lit(1)).as("pair_count"))
-    val uniRaw = toksDf
+    val uni = toksDf
       .select(explode(t).as("word"))
       .groupBy("word").agg(count(lit(1)).as("c_word"))
-    val (bigrams, uni) =
-      if (persistCounts) (bigramsRaw.persist(), uniRaw.persist())
-      else (bigramsRaw, uniRaw)
-    // n_bg sums ALL bigrams (the probability denominator), not just the
-    // ones surviving minCount. Both totals come from ONE aggregate over
-    // the union of the two count columns: one single-row stage and one
-    // broadcast instead of two of each.
-    val totals = bigrams.select(col("pair_count").as("n_bg"), lit(0L).as("n_uni"))
-      .unionByName(uni.select(lit(0L).as("n_bg"), col("c_word").as("n_uni")))
-      .agg(sum(col("n_bg")).as("n_bg"), sum(col("n_uni")).as("n_uni"))
+    // n_bg counts ALL bigrams (the probability denominator), not just the
+    // ones surviving minCount; a null text adds 0 (greatest maps size(null),
+    // -1 or null by config, to 0)
+    val totals = toksDf.agg(
+      sum(greatest(size(t) - 1, lit(0))).as("n_bg"),
+      sum(greatest(size(t), lit(0))).as("n_uni"))
     graft.functions.GraftFunctions.register(docs.sparkSession)
     bigrams
       .filter(col("pair_count") >= minCount)

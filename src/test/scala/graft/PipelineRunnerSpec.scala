@@ -1,8 +1,12 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.dedup.Dedup
 import graft.pipeline.Pipeline
+import graft.sampling.Sampling
+import graft.text.TextFunctions
 
 class PipelineRunnerSpec extends SparkSpec {
 
@@ -96,17 +100,72 @@ class PipelineRunnerSpec extends SparkSpec {
     assert(qa.getAs[Long]("tp") + qa.getAs[Long]("fn") > 0, "eval saw the planted near-dups")
   }
 
-  test("curationReport: pinStages produces the identical 9-row report") {
-    val docs = Tables.documents(spark, "/root/testdata/sf0.01")
+  /** The curation funnel composed stage by stage from the public
+    * operators, each stage over the previous stage's frame: the
+    * reference every runCuration output must reproduce. */
+  private def stagedCuration(docs: DataFrame, bench: DataFrame, minQuality: Double,
+      rates: Map[String, Double], defaultRate: Double): Map[String, DataFrame] = {
+    val qualityKept = docs.join(TextFunctions.quality(docs)
+      .filter(col("quality_score") >= minQuality).select("doc_id"), "doc_id")
+    val exactKept = Dedup.exactDedup(qualityKept)
+      .filter(col("is_duplicate") === 0).select("doc_id")
+      .join(qualityKept, "doc_id")
+    val nearKept = Dedup.dupClusters(exactKept, Dedup.minhashLsh(exactKept))
+      .filter(col("is_canonical") === 1).select("doc_id")
+      .join(exactKept, "doc_id")
+    val clean = Dedup.decontaminate(nearKept, bench)
+    val curated = Sampling.stratifiedHashSample(clean, "doc_id", "lang", rates, defaultRate)
+    Map("quality_kept" -> qualityKept, "exact_kept" -> exactKept, "near_kept" -> nearKept,
+      "decontaminated" -> clean, "curated" -> curated,
+      "split" -> Sampling.splitAssign(curated, "doc_id", salt = "graft:split"),
+      "shuffled" -> Sampling.shuffleShards(curated, "doc_id"))
+  }
+
+  private val curRates = Map("en" -> 0.5, "de" -> 0.25)
+
+  test("runCuration: outputs and curationReport equal the staged operator chain") {
+    val docs = Tables.documents(spark, sfDir)
     val bench = docs.filter(col("doc_id") % 20 === 0)
-    val lazyRep = Pipeline.curationReport(docs, bench,
-      minQuality = 0.2, rates = Map("en" -> 0.5), defaultRate = 1.0)
-    val pinnedRep = Pipeline.curationReport(docs, bench,
-      minQuality = 0.2, rates = Map("en" -> 0.5), defaultRate = 1.0,
-      pinStages = true)
-    assert(lazyRep.count() === 9)
-    assert(lazyRep.exceptAll(pinnedRep).count() === 0)
-    assert(pinnedRep.exceptAll(lazyRep).count() === 0)
+    val ref = stagedCuration(docs, bench, 0.2, curRates, 0.1)
+    val out = Pipeline.runCuration(docs, bench,
+      minQuality = 0.2, rates = curRates, defaultRate = 0.1)
+    assert(out.keySet === ref.keySet)
+    ref.foreach { case (k, want) =>
+      val got = out(k)
+      assert(got.schema === want.schema, s"$k schema")
+      assert(got.exceptAll(want).count() === 0, s"$k has rows the staged chain drops")
+      assert(want.exceptAll(got).count() === 0, s"$k misses rows the staged chain keeps")
+    }
+    // (docs, non-empty whitespace tokens) per stage of the staged chain
+    def docsAndTokens(df: DataFrame): (Long, Long) = {
+      val r = df.agg(count(lit(1)), coalesce(
+        sum(size(filter(split(lower(col("text")), " "), t => t =!= ""))), lit(0L))).head()
+      (r.getLong(0), r.getLong(1))
+    }
+    val want = (Seq("input" -> docs) ++
+      Seq("quality_kept", "exact_kept", "near_kept", "decontaminated", "curated").map(k => k -> ref(k)) ++
+      Seq("train", "val", "test").map(s => s"split_$s" -> ref("split").filter(col("split") === s)))
+      .map { case (k, df) => k -> docsAndTokens(df) }.toMap
+    assert(want.values.forall(_._1 > 0), s"every stage must keep docs: $want")
+    val report = Pipeline.curationReport(docs, bench,
+      minQuality = 0.2, rates = curRates, defaultRate = 0.1)
+      .collect().map(r => r.getString(1) -> (r.getLong(2), r.getLong(3))).toMap
+    assert(report === want)
+  }
+
+  test("runCuration: writing curated and split re-runs no dedup window or LSH join") {
+    val docs = Tables.documents(spark, sfDir)
+    val out = Pipeline.runCuration(docs, docs.filter(col("doc_id") % 20 === 0),
+      minQuality = 0.2, rates = curRates, defaultRate = 0.1)
+    val dir = java.nio.file.Files.createTempDirectory("graft_cur_write").toString
+    val (_, jobs) = JobLog.during(spark) {
+      out("curated").write.mode("overwrite").parquet(s"$dir/curated")
+      out("split").write.mode("overwrite").parquet(s"$dir/split")
+    }
+    assert(jobs.count(_.isWrite) >= 2, "both writes must run as jobs")
+    val rerun = jobs.filter(j => j.plan.contains("Window") || j.plan.contains("band_hash"))
+    assert(rerun.map(_.id) === Nil,
+      s"writes re-ran the funnel:\n${rerun.map(_.plan).distinct.mkString("\n")}")
   }
 
   test("cross-stage optimization: fact build reuses the silver lineage plan") {

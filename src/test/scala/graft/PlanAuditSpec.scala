@@ -127,6 +127,11 @@ class PlanAuditSpec extends SparkSpec {
     assert(!plan.contains("Window"), s"pmi totals must not plan a window:\n$plan")
     val exchanges = "Exchange".r.findAllIn(plan).length
     assert(exchanges <= 20, s"expected at most 20 exchanges, got $exchanges:\n$plan")
+    // the totals come from the token arrays, so the bigram count table
+    // is built once, for the scoring join
+    val bigramExchanges = "Exchange hashpartitioning\\(bigram".r.findAllIn(plan).length
+    assert(bigramExchanges === 1,
+      s"expected one bigram count exchange, got $bigramExchanges:\n$plan")
   }
 
   test("f_rm: quintiles plan no single-partition window sort") {
