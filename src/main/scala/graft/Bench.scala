@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Benchmark main: runs every SparkEntry query against
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON result line on stdout.
@@ -13,40 +14,19 @@ import org.apache.spark.sql.SparkSession
   *   - shared intermediates (silver) are persisted once via
   *     [[SparkEntry.warmCache]] so each query's time reflects the
   *     operator, not a recomputed upstream chain;
+  *   - every pass, the warm-up included, goes through [[force]], so a
+  *     query's time covers every output column, not just its row count;
   *   - failures are recorded per query (`"errors"`) and make the exit
   *     code nonzero — a broken query can never masquerade as a fast one.
   */
 object Bench {
-  /** Materialize EVERY output column: a bare count() lets Catalyst prune
-    * unused columns, so map-only queries would be timed as row-count scans
-    * instead of real work. Hashing the full row defeats pruning. MAP
-    * columns are not hashable (undefined entry order) — serialize through
-    * to_json any column whose type TRANSITIVELY contains a map (a bare
-    * `array<map<…>>` or `struct<…, map, …>` fails xxhash64 analysis just
-    * like a top-level map would); everything else hashes natively. */
-  private[graft] def containsMap(dt: org.apache.spark.sql.types.DataType): Boolean = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case _: MapType => true
-      case a: ArrayType => containsMap(a.elementType)
-      case s: StructType => s.fields.exists(f => containsMap(f.dataType))
-      case _ => false
-    }
-  }
-
-  private def force(df: org.apache.spark.sql.DataFrame): Unit = {
-    import org.apache.spark.sql.functions.{col, count, to_json, xxhash64}
-    val cols = df.schema.fields.map { f =>
-      if (containsMap(f.dataType)) to_json(col(f.name))
-      else col(f.name)
-    }
-    df.agg(count(xxhash64(cols.toIndexedSeq: _*))).head()
-    ()
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  /** The local session every measurement main (Bench, Verify, Probe,
+    * Stress, Sweep) runs in: `local[$SPARK_GRAFT_CPUS]` with as many
+    * shuffle partitions as cores, UTC, the graft SQL extensions, nanosecond
+    * parquet timestamps read as longs, and no UI. `defaultCpus` is the
+    * core count when `SPARK_GRAFT_CPUS` is unset. */
+  def session(defaultCpus: String, logLevel: String = "ERROR"): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -55,7 +35,27 @@ object Bench {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
+
+  /** Evaluate every column of every row of `df` in one pass through
+    * Spark's `noop` sink, and return the row count from an [[Observation]]
+    * on that same pass. A `count()` (or a count over any never-null
+    * expression of the row) lets Catalyst prune every column that does not
+    * change the row count, so projections, windows and UDF columns would
+    * never run; the sink consumes all of them, maps included. */
+  def force(df: DataFrame): Long = {
+    val rows = Observation()
+    df.observe(rows, count(lit(1)).as("rows"))
+      .write.format("noop").mode("overwrite").save()
+    rows.get("rows").asInstanceOf[Long]
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = session(defaultCpus = "32")
+    val cpus = spark.conf.get("spark.sql.shuffle.partitions")
 
     // Local-iteration filter (comma-separated keys): time just the queries
     // under work instead of the whole surface. The driver never sets it —
@@ -72,11 +72,11 @@ object Bench {
     // be cold-start. Warmup failures print to stderr — a silent warm hole
     // shows up as an inexplicably slow first timed pass otherwise.
     val warmDir = "/root/testdata/sf0.001"
-    val mlWarmDir = sys.env.getOrElse("SPARK_GRAFT_ML_WARM_DIR", "/root/testdata/sf0.01")
+    val mlWarmDir = "/root/testdata/sf0.01"
     SparkEntry.warmCache(spark, warmDir)
     ordered.foreach { case (name, fn) =>
       val dir = if (name.startsWith("ml_")) mlWarmDir else warmDir
-      try fn(spark, dir).count()
+      try force(fn(spark, dir))
       catch { case e: Throwable =>
         System.err.println(s"[bench] warmup failed for $name at $dir: ${e.getMessage}")
       }
@@ -113,7 +113,8 @@ object Bench {
         case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
       } + "\""
     // Two renderings of the same results:
-    //   - BENCH_FULL.json (repo file, no size limit): the per-query dict
+    //   - BENCH_FULL.json (in the working directory — the project root
+    //     under `run / fork` — no size limit): the per-query dict
     //     at 10 ms precision — THE archive contract, the copy every
     //     regression comparison reads.
     //   - STDOUT line (what the round archiver keeps — last 2 KB only):
@@ -155,7 +156,7 @@ object Bench {
     // one-line shape either way)
     if (only.isEmpty)
       try java.nio.file.Files.write(
-        java.nio.file.Paths.get("/root/repo/BENCH_FULL.json"),
+        java.nio.file.Paths.get("BENCH_FULL.json"),
         (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
       catch { case _: Throwable => () }
     else System.err.println(fullLine)

@@ -28,14 +28,9 @@ import graft.similarity.Similarity
   */
 object Stress {
 
-  /** Materialize every column (same rationale as Bench.force: a bare
-    * count() lets Catalyst prune the similarity math out of the timing). */
-  private def force(df: DataFrame): Long =
-    df.agg(count(xxhash64(df.columns.map(col): _*))).head().getLong(0)
-
   private def time(name: String)(df: => DataFrame): Unit = {
     val t0 = System.nanoTime()
-    val n = force(df)
+    val n = Bench.force(df)
     val s = (System.nanoTime() - t0) / 1e9
     println(f"STRESS $name%-26s $s%8.2f s  ($n rows)")
   }
@@ -75,16 +70,8 @@ object Stress {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.session(defaultCpus = "32")
+    val cpus = spark.conf.get("spark.sql.shuffle.partitions")
 
     // standalone re-measure of one expensive line without the full run:
     // SPARK_GRAFT_STRESS_ONLY=checkpoint

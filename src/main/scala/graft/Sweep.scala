@@ -34,9 +34,6 @@ import org.apache.spark.sql.functions._
 object Sweep {
   private val Off = 100000000L
 
-  private def force(df: DataFrame): Long =
-    df.agg(count(xxhash64(df.columns.map(col): _*))).head().getLong(0)
-
   /** Suffix every whitespace-delimited word with the copy index (clean
     * text growth — copies share no shingles). Copy 0 is verbatim. */
   private def cleanText(c: Column, i: Int): Column =
@@ -100,16 +97,7 @@ object Sweep {
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = if (args.length > 1) args(1) else "/tmp/graft_10x"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.session(defaultCpus = "32")
 
     if (!new java.io.File(s"$out/embeddings.parquet/_SUCCESS").exists()
         || sys.env.get("SPARK_GRAFT_SWEEP_REBUILD").contains("1"))
@@ -126,7 +114,7 @@ object Sweep {
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1).filter(q => keep(q._1))
     SparkEntry.warmCache(spark, src)
     ordered.foreach { case (name, fn) =>
-      try fn(spark, src).count()
+      try Bench.force(fn(spark, src))
       catch { case e: Throwable =>
         System.err.println(s"[sweep] warmup failed for $name: ${e.getMessage}")
       }
@@ -139,7 +127,7 @@ object Sweep {
       val t0 = System.nanoTime()
       val timing =
         try {
-          val n = force(fn(spark, out))
+          val n = Bench.force(fn(spark, out))
           val s = (System.nanoTime() - t0) / 1e9
           println(f"SWEEP $name%-12s $s%8.2f s  ($n rows)")
           Some(s)

@@ -311,10 +311,9 @@ object Dedup {
     * Plan note: the shingle explode feeds four branches (stop-list count,
     * both self-join sides, set sizes) and Catalyst evaluates each branch
     * independently — 4 passes over the input. At test SF the explode is
-    * ~0.1 s so this is irrelevant; at very large corpora set
-    * `persistShingles = true` (or build [[shingleTable]] yourself,
-    * persist/write it, and call [[ngramJaccardFromShingles]]) so the text
-    * is scanned exactly once.
+    * ~0.1 s so this is irrelevant; at very large corpora build
+    * [[shingleTable]] yourself, persist or write it, and call
+    * [[ngramJaccardFromShingles]], so the text is scanned exactly once.
     *
     * `dfMax` (ON by default — the deployed path must be the safe one):
     * shingles appearing in more than `dfMax` documents are dropped from
@@ -323,19 +322,14 @@ object Dedup {
     * DF-filtered shingle sets. `None` disables the cap for exact
     * whole-set Jaccard on corpora known to have no hot shingles. */
   def ngramJaccard(docs: DataFrame, n: Int = 3, threshold: Double = 0.5,
-      dfMax: Option[Int] = Some(DefaultStopShingleDf),
-      persistShingles: Boolean = false): DataFrame = {
-    val sh = shingleTable(docs, n)
-    ngramJaccardFromShingles(if (persistShingles) sh.persist() else sh, threshold, dfMax)
-  }
+      dfMax: Option[Int] = Some(DefaultStopShingleDf)): DataFrame =
+    ngramJaccardFromShingles(shingleTable(docs, n), threshold, dfMax)
 
   /** Distinct word-n-gram shingle table `(doc_id, shingle)` — the explode
     * as a standalone frame. At corpus scale compute this ONCE, persist it
     * (or write it out), and feed [[ngramJaccardFromShingles]]: the text
-    * then scans once no matter how many plan branches read shingles.
-    * `ngramJaccard(persistShingles = true)` is the one-call form (the
-    * persisted table stays cached for the result's lifetime; unpersist via
-    * the session catalog when done). */
+    * then scans once no matter how many plan branches read shingles; the
+    * caller owns the persisted table and unpersists it when done. */
   def shingleTable(docs: DataFrame, n: Int = 3): DataFrame =
     docs.select(col("doc_id"), explode(shingleCol(n)).as("shingle"))
 
@@ -400,8 +394,8 @@ object Dedup {
     * this amplification; Spark's shared-shingle equi-join + map-side
     * combine computes all intersections in one pass and IS the right
     * distributed algorithm here. Kept as the documented, spec-verified
-    * negative result; use [[ngramJaccard]] (with `dfMax`, and
-    * `persistShingles` at corpus scale). */
+    * negative result; use [[ngramJaccard]] (with `dfMax`, and a
+    * persisted [[shingleTable]] at corpus scale). */
   def ngramJaccardPrefix(docs: DataFrame, n: Int = 3, threshold: Double = 0.5,
       dfMax: Option[Int] = Some(DefaultStopShingleDf),
       shingles: Option[DataFrame] = None): DataFrame = {
@@ -502,8 +496,7 @@ object Dedup {
     * At very large corpora set `persistAnchors = true` so the
     * tokenize+hash runs once and both sides read the cached anchor
     * table (token-stream-sized; stays resident for the result's
-    * lifetime — unpersist via the session catalog when done, same
-    * contract as [[ngramJaccard]]'s `persistShingles`). */
+    * lifetime — unpersist via the session catalog when done). */
   def substringDups(docs: DataFrame, k: Int = 10, minTokens: Int = 20,
       dfMax: Int = DefaultStopShingleDf, persistAnchors: Boolean = false): DataFrame = {
     require(minTokens >= k, s"minTokens ($minTokens) must be >= k ($k)")

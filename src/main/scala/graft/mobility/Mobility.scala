@@ -199,8 +199,7 @@ object Mobility {
     * zone-asc tiebreak. The driver fold replicates Spark's `round` via
     * BigDecimal.valueOf + HALF_UP — the same decimal-string semantics. */
   def zonePageRank(silver: DataFrame, iters: Int = 10,
-      damping: Double = 0.85, checkpointEvery: Int = 1,
-      driverCutover: Int = 512): DataFrame = {
+      damping: Double = 0.85, driverCutover: Int = 512): DataFrame = {
     val spark = silver.sparkSession
     val edges = odMatrix(silver).select("origin", "dest", "p_dest")
       .persist()
@@ -239,7 +238,7 @@ object Mobility {
       return rows.toSeq.toDF("zone_id", "pr", "pos")
     }
     var ranks = zones.withColumn("rank", lit(1.0 / n))
-    for (i <- 1 to iters) {
+    for (_ <- 1 to iters) {
       val contrib = edges
         .join(ranks, edges("origin") === ranks("zone_id"))
         .groupBy(col("dest").as("zone_id"))
@@ -252,13 +251,12 @@ object Mobility {
           (coalesce(col("contrib"), lit(0.0)) / 1e15
             + (lit(1.0) - col("s") / 1e15) / n)
             .as("rank"))
-      // eager checkpoint every `checkpointEvery` rounds. MEASURED, not
-      // assumed (graft.Probe, round 7): the carried-mass scalar's double
-      // reference to contrib grows the uncheckpointed plan 2^interval-
-      // fold, and that analyzer+tiny-work growth costs MORE than the job
-      // launch it saves — cadence 1 beat 2 beat 3 (best-of-2: 6.1 / 8.1 /
-      // 10.6 s at sf0.1), so every round checkpoints by default.
-      if (i % checkpointEvery == 0 || i == iters) ranks = ranks.localCheckpoint()
+      // eager checkpoint every round. MEASURED, not assumed (round 7):
+      // the carried-mass scalar's double reference to contrib grows the
+      // uncheckpointed plan 2^interval-fold, and that analyzer+tiny-work
+      // growth costs MORE than the job launch it saves — cadence 1 beat
+      // 2 beat 3 (best-of-2: 6.1 / 8.1 / 10.6 s at sf0.1).
+      ranks = ranks.localCheckpoint()
     }
     edges.unpersist()
     zones.unpersist()
@@ -418,7 +416,7 @@ object Mobility {
     * EXACTLY byte-identical to the distributed loop, not just
     * spec-observed so. */
   def zoneCommunities(silver: DataFrame, iters: Int = 5,
-      checkpointEvery: Int = 1, driverCutover: Int = 512): DataFrame = {
+      driverCutover: Int = 512): DataFrame = {
     val spark = silver.sparkSession
     val dir = transitions(silver)
       .groupBy(col("origin"), col("dest"))
@@ -463,7 +461,7 @@ object Mobility {
     var labels = selfW.select(col("zone_id"), col("zone_id").as("label"))
     val byWeight = Window.partitionBy(col("dst"))
       .orderBy(col("w_sum").desc, col("label").asc)
-    for (i <- 1 to iters) {
+    for (_ <- 1 to iters) {
       val neighborVotes = edges
         .join(labels, edges("src") === labels("zone_id"))
         .select(col("dst"), col("label"), col("w"))
@@ -475,7 +473,7 @@ object Mobility {
         .withColumn("rn", row_number().over(byWeight))
         .filter(col("rn") === 1)
         .select(col("dst").as("zone_id"), col("label"))
-      if (i % checkpointEvery == 0 || i == iters) labels = labels.localCheckpoint()
+      labels = labels.localCheckpoint()
     }
     edges.unpersist()
     selfW.unpersist()

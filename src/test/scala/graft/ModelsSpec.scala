@@ -193,7 +193,13 @@ class ModelsSpec extends SparkSpec {
     // key-sorted JSON so the string is deterministic
     val view = graft.ml.Experiments.runsScalarView(runs)
     assert(view.count() === 2)
-    assert(view.schema.fields.forall(f => !Bench.containsMap(f.dataType)),
+    def containsMap(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
+      case _: org.apache.spark.sql.types.MapType => true
+      case a: org.apache.spark.sql.types.ArrayType => containsMap(a.elementType)
+      case s: org.apache.spark.sql.types.StructType => s.fields.exists(f => containsMap(f.dataType))
+      case _ => false
+    }
+    assert(view.schema.fields.forall(f => !containsMap(f.dataType)),
       "gate view must contain no map types")
     val pj = view.filter(col("model") === "random_forest")
       .select("params_json").head().getString(0)
