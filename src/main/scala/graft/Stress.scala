@@ -612,7 +612,7 @@ object Stress {
       VersionedTable.optimize(spark, zroot, targetFileBytes = target,
         ts = "2026-01-02T00:00:00Z") // v1: round-robin layout
       VersionedTable.optimize(spark, zroot, targetFileBytes = target,
-        zorderBy = Some(("zone_id", "user_id")), ts = "2026-01-03T00:00:00Z") // v2
+        zorderCols = Seq("zone_id", "user_id"), ts = "2026-01-03T00:00:00Z") // v2
       val zb = sv.agg(min("zone_id"), max("zone_id"), min("user_id"), max("user_id")).head()
       val (zLo, zHi) = (zb.getLong(0), zb.getLong(1))
       val (uLo, uHi) = (zb.getLong(2), zb.getLong(3))

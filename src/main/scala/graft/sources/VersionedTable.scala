@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{array, broadcast, coalesce, col, collect_set, concat, count, explode, expr, input_file_name, lit, monotonically_increasing_id, pmod, regexp_extract, struct, when, xxhash64}
-import org.apache.spark.sql.types.{ArrayType, BinaryType, ByteType, DataType, DateType, IntegerType, LongType, MapType, NumericType, ShortType, StringType, StructField, StructType, TimestampType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, BooleanType, ByteType, DataType, DateType, IntegerType, LongType, MapType, NumericType, ShortType, StringType, StructField, StructType, TimestampType}
 
 /** Snapshot-versioned parquet table: the Delta-lake surface the reference
   * actually relies on (delta_utils.py:14-50 uses read + overwrite only)
@@ -993,9 +993,13 @@ object VersionedTable {
 
   private def alignTo(df: DataFrame, schema: StructType): DataFrame =
     df.select(schema.fields.map { f =>
-      if (df.columns.contains(f.name)) col(f.name)
+      if (df.columns.contains(f.name)) col(quoted(f.name))
       else lit(null).cast(f.dataType).as(f.name)
     }.toIndexedSeq: _*)
+
+  /** `name` as one SQL identifier: a column name may hold a dot, a space
+    * or a backtick, and `col`/`expr` would otherwise parse it. */
+  private def quoted(name: String): String = "`" + name.replace("`", "``") + "`"
 
   /** The table's CHECK constraints (name → SQL expression) at head. */
   def constraintsOf(spark: SparkSession, path: String): Map[String, String] =
@@ -2006,8 +2010,9 @@ object VersionedTable {
       propsState = Some(m.props).filter(_.nonEmpty))
 
   /** Delta OPTIMIZE for a snapshot: rewrite the latest version's content
-    * as ⌈bytes / targetFileBytes⌉ files — optionally Z-ORDERed on two
-    * columns for 2-D row-group skipping ([[graft.analytics.ZOrder]]) —
+    * as ⌈bytes / targetFileBytes⌉ files — optionally Z-ORDERed on the
+    * 2 or 3 `zorderCols` for multi-dimensional row-group skipping
+    * ([[graft.analytics.ZOrder]]) —
     * and commit it as a new `optimize` version with identical logical
     * content (spec-asserted). Bytes come from the manifest's file list
     * (driver metadata); older versions keep the small files until
@@ -2017,7 +2022,6 @@ object VersionedTable {
     * only an orphaned data dir. */
   def optimize(spark: SparkSession, path: String,
       targetFileBytes: Long = 128L * 1024 * 1024,
-      zorderBy: Option[(String, String)] = None,
       ts: String = "1970-01-01T00:00:00Z",
       zorderCols: Seq[String] = Seq.empty): Long = {
     val h = openHead(spark, path, "optimize of")
@@ -2027,10 +2031,7 @@ object VersionedTable {
     // from the whole table — breaking the identical-content contract.
     // Deletion vectors apply here too, which makes optimize the DV
     // MATERIALIZATION path: the rewritten snapshot carries no entries.
-    // zorderCols (2 or 3 dims) takes precedence over the legacy pair.
-    val laid = h.compacted(m.files, h.bytes(m.files), targetFileBytes,
-      if (zorderCols.nonEmpty) zorderCols
-      else zorderBy.toSeq.flatMap { case (a, b) => Seq(a, b) })
+    val laid = h.compacted(m.files, h.bytes(m.files), targetFileBytes, zorderCols)
     // the persisted index config survives maintenance: the compacted
     // head is re-indexed, so optimize never silently degrades the point
     // lookups the user paid an indexing pass for
@@ -3500,38 +3501,24 @@ object VersionedTable {
     if (bounds.isEmpty) m.files
     else m.files.filter(f => boundsMayOverlap(logicalStatsOf(m, f), bounds))
 
-  /** Copy-on-write MERGE (Delta `MERGE INTO` / upsert): rows of `updates`
-    * replace snapshot rows sharing their `keyCols` values; non-matching
-    * update rows insert. Only files CONTAINING a matched key are
-    * rewritten — untouched files carry into the new snapshot by
-    * reference (their manifest paths are byte-identical, spec-asserted),
-    * so a merge touching one key rewrites one file, not the table.
-    * Whole-row replacement semantics: a snapshot column the updates
-    * frame doesn't carry (post-evolution merge with an old-schema batch)
-    * reads null on replaced/inserted rows; survivors keep their values.
-    * `updates` may not introduce NEW columns — that's schema drift,
-    * rejected like a drifted append.
-    *
-    * Phases, exactly Delta's: (1) find touched files — manifest stats
-    * prune the candidate list on EVERY numeric/temporal key column's
-    * range first ([[mergeCandidates]]), then one scan of the candidates
-    * semi-joined against the broadcast key set (parquet row-group stats
-    * prune within files; a key-range-partitioned layout — commit after
-    * `repartitionByRange(keyCols)` — keeps the touched set small);
-    * (2) rewrite = touched-file survivors (anti-join over a scan of ONLY
-    * the touched files — the untouched bulk of the table is opened by
-    * neither phase's writer) ∪ all updates; (3) commit a DELTA manifest:
-    * rm = touched, adds = rewrite's files. The touched-file list is a
-    * driver collect bounded by |files| — metadata-sized. Readers of
-    * older versions are unaffected (snapshot isolation); concurrent
-    * merges serialize on the commit claim. */
+  /** Upsert MERGE (Delta's `whenMatchedUpdateAll` + `whenNotMatchedInsertAll`,
+    * the publish step of the reference's `batch_scoring.py`): the preset of
+    * [[mergeClauses]] that replaces whole rows, committed as op `merge`.
+    * Every table row sharing a row of `updates`' `keyCols` values is
+    * replaced by that row, and a row matching none inserts. A table column
+    * `updates` lacks reads NULL on replaced and inserted rows (a
+    * post-evolution merge with an old-schema batch); untouched rows keep
+    * their values. `updates` may not introduce new columns (schema drift,
+    * rejected like a drifted append) nor carry a type wider than the
+    * table's (widen the table first with a mergeSchema append); narrower
+    * types upcast. Generated columns compute on `updates` first. An update
+    * key that appears twice and matches a table row is ambiguous: the merge
+    * fails with the "duplicate keys" error and commits nothing; duplicated
+    * keys that match nothing insert every copy. */
   def merge(updates0: DataFrame, path: String, keyCols: Seq[String],
       ts: String = "1970-01-01T00:00:00Z"): Long = {
     val h = openHead(updates0.sparkSession, path, "merge into")
-    val m = h.m
-    val updates = applyGens(updates0, m.gens)
-    requireNotAppendOnly(m.props, path, "merge") // unconditional matched UPDATE
-    requireNoIdentityConflict(m.props, path, "merge", inserts = true)
+    val updates = applyGens(updates0, h.m.gens)
     val snapSchema = h.schema
     val drift = updates0.schema.fieldNames.filterNot(snapSchema.fieldNames.contains)
     if (drift.nonEmpty) throw new SchemaMismatchException(
@@ -3540,7 +3527,7 @@ object VersionedTable {
     // a WIDER-typed update would smuggle widened files behind the
     // recorded schema (the explicit-schema read would then narrow-cast
     // and fail) — widen the table first with a mergeSchema append;
-    // narrower updates upcast to the table's types here
+    // narrower updates upcast to the table's types in the rewrite
     snapSchema.fields.foreach { f =>
       updates.schema.fields.find(_.name == f.name).foreach { uf =>
         if (!widen(f.dataType, uf.dataType).contains(f.dataType))
@@ -3549,43 +3536,10 @@ object VersionedTable {
               s"wider than or incompatible with table type ${f.dataType.simpleString} at $path")
       }
     }
-    // incoming rows gate on the table's CHECK constraints before any
-    // data lands (aligned: columns the batch omits read NULL, and NULL
-    // passes — SQL CHECK semantics)
-    if (m.constraints.nonEmpty)
-      enforceConstraints(alignTo(updates, snapSchema), m.constraints, path)
-    // Stats pruning BEFORE the discovery scan: a file whose recorded
-    // [min, max] ranges miss the updates' key ranges on ANY key column
-    // provably contains no matched key and is never opened — Delta's
-    // file-skipping, from the manifest's footer stats. Files without
-    // stats stay candidates (pruning is only ever an optimization).
-    val keyBounds = updateKeyBounds(updates, keyCols)
-    val candidates = candidateFiles(m, keyBounds)
-    // __file is relativized IN the scan (regexp over _metadata.file_path)
-    // so every comparison below is manifest-relative — immune to file:/
-    // vs file:/// qualification drift between Hadoop and Spark.
-    // DV-aware discovery: a vector-deleted row must NOT count as an
-    // existing match — treating it as one would rewrite its file and
-    // "update" (resurrect) a deleted row instead of inserting fresh
-    // INNER join against the DISTINCT key set, not left_semi — same
-    // semantics (a distinct build side matches each row at most once)
-    // and the same broadcast hash join, but semi/anti joins trip a
-    // Catalyst fixpoint loop over this scan's `__file` projection
-    // (PushDownLeftSemiAntiJoin pushes the join below the _metadata
-    // extraction project, ColumnPruning re-adds an alias shim,
-    // CollapseProject merges it back — "Max iterations (100) reached").
-    // Inner joins have no push-through-project rule, so the plan
-    // fixpoints immediately.
-    val touchedFiles = h.touched(candidates)(_.join(
-      broadcast(updates.select(keyCols.map(col): _*).distinct()), keyCols, "inner"))
-    val keys = updates.select(keyCols.map(col): _*).distinct()
-    val rewrite =
-      if (touchedFiles.isEmpty) updates
-      else h.scan(touchedFiles.toSeq.sorted)
-        .join(broadcast(keys), keyCols, "left_anti")
-        .unionByName(updates, allowMissingColumns = true)
-    h.commitDml(ts, "merge", h.rewrite(rewrite), touchedFiles, candidates,
-      boundsMayOverlap(_, keyBounds))
+    val wholeRow = snapSchema.fieldNames.map(c => c ->
+      (if (updates.columns.contains(c)) s"s.${quoted(c)}" else "NULL")).toMap
+    mergeInto(h, updates, path, keyCols, Seq(MergeAction.Update(set = wholeRow)),
+      Seq(MergeAction.Insert()), Seq.empty, ts, None, "merge")
   }
 
   /** One WHEN clause of a full MERGE ([[mergeClauses]]). Conditions and
@@ -3614,50 +3568,72 @@ object VersionedTable {
     }
   }
 
-  /** Full MERGE (Delta's `whenMatched`/`whenNotMatched`/
-    * `whenNotMatchedBySource` builder, re-derived) — the CDC-APPLY
-    * primitive: one atomic commit folds a change batch carrying
-    * updates, deletes and inserts (e.g. a `changes`/`changesStream`
-    * feed, or an upstream CDC topic) into the table. Clauses within a
-    * group evaluate in order, first-true wins, rows matching no clause
-    * keep Delta's defaults (matched/bySource rows survive unchanged,
-    * unmatched source rows drop).
+  /** Copy-on-write MERGE (Delta's `MERGE INTO` with its
+    * `whenMatched` / `whenNotMatched` / `whenNotMatchedBySource` builder),
+    * the one MERGE of this table: SQL `MERGE INTO`, [[GraftTable]]'s
+    * builder, CDC apply ([[graft.streaming.Streams]]) and the [[merge]]
+    * upsert all run it. One atomic commit folds a change batch of
+    * updates, deletes and inserts into the table. Clauses within a group
+    * evaluate in order and the first true one wins; rows matching no
+    * clause keep Delta's defaults (matched and by-source rows survive
+    * unchanged, unmatched source rows drop). A source row matches a target
+    * row when their `keyCols` are equal and `extraOn` (the non-key rest of
+    * the ON condition, SQL over `t`/`s`, e.g. `"s.ts > t.ts"`) holds. A
+    * pair that key-matches but fails `extraOn` is NOT MATCHED on both
+    * sides, so a `notMatched` INSERT fires for its source row (possibly a
+    * second row per key — Delta's documented gotcha) and the
+    * `notMatchedBySource` clauses see its target row.
     *
-    * Discovery finds the files that actually hold key matches (plus,
-    * when `notMatchedBySource` clauses exist, files whose stats may
-    * match those clauses' conditions — a t-only
-    * condition prunes there; an s-referencing or absent condition
-    * keeps every file, which is inherent: NOT MATCHED BY SOURCE is a
-    * full-table predicate) → only those files rewrite; everything else
-    * carries by reference. Matched rows process through ONE broadcast
-    * inner join + a chained CASE over the clause conditions — no
-    * per-clause scans. A source with duplicate keys that actually
-    * match a target row is rejected (Delta's multi-match ambiguity
-    * error). Inserted rows compute generated columns and every output
-    * row gates on the table's CHECK constraints.
-    *
-    * `extraOn` is the non-key remainder of the ON condition (SQL over
-    * the `t`/`s` aliases, e.g. `"s.ts > t.ts"`), ANDed with the key
-    * equality to form the FULL join condition — Delta's classification:
-    * a pair that key-matches but fails `extraOn` is NOT MATCHED on both
-    * sides, so `notMatched` INSERT fires for its source row (possibly
-    * creating a second row per key — Delta's documented gotcha, not a
-    * bug) and `notMatchedBySource` clauses see its target row. */
+    * Phases, Delta's:
+    *  1. Discovery. Manifest stats prune the candidate files on EVERY
+    *     bounded key column's range ([[mergeCandidates]]); with
+    *     `notMatchedBySource` clauses, files whose stats may satisfy those
+    *     clauses' t-only conditions stay candidates too (an s-referencing
+    *     or absent condition keeps every file: NOT MATCHED BY SOURCE is a
+    *     full-table predicate). One scan of the candidates' live rows
+    *     (deletion vectors applied: a deleted row never matches) joined to
+    *     the source yields, per file, the most source rows matching one of
+    *     its rows: the touched files, and the multi-match verdict. A source
+    *     with two rows matching one target row fails when MATCHED clauses
+    *     exist (Delta's ambiguity error), before anything is written. An
+    *     INSERT-only merge skips discovery and rewrites nothing (Delta's
+    *     insert-only optimization): its commit is append-shaped.
+    *  2. Rewrite, from two joins over the touched files only (untouched
+    *     files carry by reference): touched rows matching no source row
+    *     take the NOT MATCHED BY SOURCE clauses in place, and every source
+    *     row joined to its matching touched rows takes the MATCHED clauses
+    *     (one output row per matched target row) or, unmatched, the INSERT
+    *     clauses. Inserted rows compute generated columns; the changed rows
+    *     gate on the table's CHECK constraints. No broadcast hints: AQE
+    *     broadcasts a small side from its actual size, and a source that is
+    *     half the table (a backfill) must not go through the driver.
+    *  3. Commit a delta manifest removing the touched files. A concurrently
+    *     added file conflicts when its stats may hold a source key, or
+    *     always when `notMatchedBySource` clauses exist. */
   def mergeClauses(source: DataFrame, path: String, keyCols: Seq[String],
       matched: Seq[MergeAction] = Seq(MergeAction.Update()),
       notMatched: Seq[MergeAction] = Seq(MergeAction.Insert()),
       notMatchedBySource: Seq[MergeAction] = Seq.empty,
       ts: String = "1970-01-01T00:00:00Z",
-      extraOn: Option[String] = None): Long = {
+      extraOn: Option[String] = None): Long =
+    mergeInto(openHead(source.sparkSession, path, "merge into"), source, path, keyCols,
+      matched, notMatched, notMatchedBySource, ts, extraOn, "merge_clauses")
+
+  /** The MERGE core behind [[merge]] and [[mergeClauses]], committing op `op`. */
+  private def mergeInto(h: Head, source: DataFrame, path: String, keyCols: Seq[String],
+      matched: Seq[MergeAction], notMatched: Seq[MergeAction],
+      notMatchedBySource: Seq[MergeAction], ts: String, extraOn: Option[String],
+      op: String): Long = {
     import MergeAction._
     val spark = source.sparkSession
-    val h = openHead(spark, path, "merge into")
     val m = h.m
+    if (matched.isEmpty && notMatched.isEmpty && notMatchedBySource.isEmpty)
+      throw new IllegalArgumentException("mergeClauses with no actions")
     // insert-only merges stay allowed on an append-only table (Delta's
     // rule: only existing rows are protected)
     if (matched.nonEmpty || notMatchedBySource.nonEmpty)
-      requireNotAppendOnly(m.props, path, "mergeClauses (matched/bySource clauses)")
-    requireNoIdentityConflict(m.props, path, "mergeClauses",
+      requireNotAppendOnly(m.props, path, "merge (matched/bySource clauses)")
+    requireNoIdentityConflict(m.props, path, "merge",
       inserts = notMatched.nonEmpty,
       assignedCols = (matched ++ notMatchedBySource).flatMap {
         case Update(_, set) => set.keys
@@ -3708,53 +3684,75 @@ object VersionedTable {
           s"${bad.mkString(", ")} (table columns: " +
           s"${snapSchema.fieldNames.mkString(", ")})")
     }
-    val tType = snapSchema
     val sType = source.schema
-    val tStruct = struct(snapSchema.fieldNames.map(c => col(s"t.$c")).toIndexedSeq: _*)
+    // every clause yields the output row plus `__ins`, the index of the
+    // INSERT clause that made it (-1 otherwise); a NULL row is dropped
+    val outType = StructType(snapSchema.fields.map(f => StructField(f.name, f.dataType)) :+
+      StructField("__ins", IntegerType))
+    val drop = lit(null).cast(outType)
+    def out(row: Seq[Column], ins: Int): Column =
+      struct((row :+ lit(ins).as("__ins")).toIndexedSeq: _*)
+    val keepT = out(snapSchema.fields.toIndexedSeq.map(f =>
+      col(s"t.${quoted(f.name)}").cast(f.dataType).as(f.name)), -1)
     // UPDATE SET * never assigns identity columns (Delta's rule: the
     // engine owns the counter; an explicit SET on a BY DEFAULT column
     // stays allowed, an explicit SET on ALWAYS is refused above)
     val idCols = identitySpecs(m.props).keySet
     def updateAllSet: Map[String, String] = snapSchema.fieldNames
       .filter(source.columns.contains).filterNot(idCols.contains)
-      .map(c => c -> s"s.$c").toMap
-    def newRow(set: Map[String, String]): Column =
-      struct(snapSchema.fields.map(f =>
-        expr(set.getOrElse(f.name, s"t.${f.name}"))
-          .cast(f.dataType).as(f.name)).toIndexedSeq: _*)
-    // chained CASE: {__del, row}; default = keep the target row
-    def foldTarget(clauses: Seq[MergeAction]): Column =
-      clauses.foldRight(struct(lit(false).as("__del"), tStruct.as("row"))) {
-        (c, els) =>
-          val res = c match {
-            case Update(_, set) => struct(lit(false).as("__del"),
-              newRow(if (set.isEmpty) updateAllSet else set).as("row"))
-            case Delete(_) => struct(lit(true).as("__del"), tStruct.as("row"))
-            case _: Insert => els // unreachable (validated above)
-          }
-          condOf(c).fold(res)(cond =>
-            when(coalesce(expr(cond), lit(false)), res).otherwise(els))
+      .map(c => c -> s"s.${quoted(c)}").toMap
+    def newRow(set: Map[String, String]): Seq[Column] =
+      snapSchema.fields.toIndexedSeq.map(f =>
+        expr(set.getOrElse(f.name, s"t.${quoted(f.name)}")).cast(f.dataType).as(f.name))
+    // INSERT values: explicit, or INSERT ALL (every column the source carries)
+    def insertVals(values: Map[String, String]): Map[String, String] =
+      if (values.nonEmpty) values
+      else snapSchema.fieldNames.filter(source.columns.contains)
+        .map(c => c -> s"s.${quoted(c)}").toMap
+    def insertRow(values: Map[String, String]): Seq[Column] = {
+      val vals = insertVals(values)
+      snapSchema.fields.toIndexedSeq.map(f =>
+        expr(vals.getOrElse(f.name, "NULL")).cast(f.dataType).as(f.name))
+    }
+    // a clause group as one chained CASE: the first clause whose condition
+    // holds decides the row; `none` when no clause fires
+    def fold(clauses: Seq[MergeAction], none: Column)(res: (MergeAction, Int) => Column)
+        : Column =
+      clauses.zipWithIndex.foldRight(none) { case ((c, i), els) =>
+        condOf(c).fold(res(c, i))(x =>
+          when(coalesce(expr(x), lit(false)), res(c, i)).otherwise(els))
       }
-    // ---- discovery: which files must rewrite. An INSERT-ONLY merge
-    // (no matched / bySource clauses — insert-if-absent, the dedup
-    // ingest shape) rewrites NOTHING: matched rows change nothing, so
-    // the commit is append-shaped (Delta's insert-only merge
-    // optimization); existing keys are still excluded via the
-    // candidate scan below.
+    // MATCHED and NOT MATCHED BY SOURCE groups: UPDATE, DELETE, or keep
+    def targetFold(clauses: Seq[MergeAction]): Column = fold(clauses, keepT) {
+      case (Update(_, set), _) => out(newRow(if (set.isEmpty) updateAllSet else set), -1)
+      case _ => drop // DELETE (an INSERT was refused above)
+    }
+    def rows(df: DataFrame, r: Column): DataFrame =
+      df.select(r.as("r")).filter(col("r").isNotNull).select("r.*")
     val insertOnly = matched.isEmpty && notMatchedBySource.isEmpty
-    // source rows carried as keys + the `s` struct (hoisted: the
-    // full-ON paths below need it during discovery too)
-    val sStructAll = struct(source.columns.map(col).toIndexedSeq: _*)
-    val srcS = source
-      .select((keyCols.map(col) :+ sStructAll.as("s")).toIndexedSeq: _*)
+    // source rows carried as keys + the `s` struct
+    val srcS = source.select((keyCols.map(col) :+
+      struct(source.columns.map(c => col(quoted(c))).toIndexedSeq: _*).as("s"))
+      .toIndexedSeq: _*)
+    val srcKeys = source.select(keyCols.map(col): _*)
     // FULL join condition (key equality AND `extraOn`) between a plan
     // carrying top-level key columns + a `t` struct and [[srcS]]; the
     // extra conjunct resolves against the two struct aliases
     def fullCond(left: DataFrame): Column =
-      (keyCols.map(k => left(k) === srcS(k)) ++ extraOn.map(expr))
-        .reduce(_ && _)
-    def withT(df: DataFrame): DataFrame = df.select((df.columns.map(col) :+
-      struct(snapSchema.fieldNames.map(col).toIndexedSeq: _*).as("t")).toIndexedSeq: _*)
+      (keyCols.map(k => left(k) === srcS(k)) ++ extraOn.map(expr)).reduce(_ && _)
+    def withT(df: DataFrame): DataFrame = df.select((df.columns.map(c => col(quoted(c))) :+
+      struct(snapSchema.fieldNames.map(c => col(quoted(c))).toIndexedSeq: _*).as("t"))
+      .toIndexedSeq: _*)
+    // target rows (table columns on top) joined to the source under the ON
+    // condition, carrying `t`. Key-only semi/anti joins run BEFORE the `t`
+    // projection: pushed below it, they trip a Catalyst fixpoint loop over
+    // the discovery scan's `__file` projection (PushDownLeftSemiAntiJoin /
+    // ColumnPruning / CollapseProject, "Max iterations (100) reached").
+    def onSource(tgt: DataFrame, how: String): DataFrame = extraOn match {
+      case None => withT(tgt.join(srcKeys, keyCols, how))
+      case Some(_) => val tt = withT(tgt); tt.join(srcS, fullCond(tt), how)
+    }
+    // ---- discovery: which files must rewrite
     val keyBounds = updateKeyBounds(source, keyCols)
     val keyCand = candidateFiles(m, keyBounds)
     val bySrcCand =
@@ -3792,179 +3790,96 @@ object VersionedTable {
         }
       }.getOrElse(m.files)
     val candidates = (keyCand ++ bySrcCand).distinct
-    val srcKeys = source.select(keyCols.map(col): _*).distinct()
-    // not-matched classification fires on every bySource clause whose
-    // condition passes with s = NULL
-    val bySrcFire = notMatchedBySource.map(c =>
-      condOf(c).fold(lit(true))(x => coalesce(expr(x), lit(false))))
-      .foldLeft(lit(false))((a, b) => a || b)
-    val touchedFiles = h.touched(if (insertOnly) Seq.empty else candidates) { live =>
-      // no broadcast hints anywhere in this operator: a CDC batch is
-      // tiny (AQE converts these joins to broadcast at runtime from
-      // ACTUAL sizes), but a source that is half the table — the
-      // backfill-merge shape — must not be forced through the driver
-      // inner-vs-distinct, not left_semi: srcKeys is distinct, so the
-      // semantics are identical, and semi joins over this scan's
-      // __file projection trip the PushDownLeftSemiAntiJoin /
-      // ColumnPruning / CollapseProject fixpoint loop (see [[merge]])
-      val (matchFiles, bySrcFiles) = extraOn match {
-        case None =>
-          val mf = live
-            .join(srcKeys, keyCols, "inner")
-            .select("__file").distinct()
-          val bf =
-            if (notMatchedBySource.isEmpty) mf.limit(0)
-            else {
-              // rows NO source key matches, where some bySource
-              // clause fires (its condition sees s as NULL)
-              live.join(srcKeys, keyCols, "left_anti")
-                .select(col("__file"),
-                  struct(snapSchema.fieldNames
-                    .map(col).toIndexedSeq: _*).as("t"))
-                .withColumn("s", lit(null).cast(sType))
-                .filter(bySrcFire)
-                .select("__file").distinct()
-            }
-          (mf, bf)
-        case Some(_) =>
-          // full-ON classification (Delta's): a file rewrites when it
-          // holds a FULL (keys AND extra) match, or when a bySource
-          // clause may fire on a row with no full match — which now
-          // includes key-matching pairs that fail the extra conjunct
-          val liveT = withT(live)
-          val mf = liveT.join(srcS, fullCond(liveT), "inner")
-            .select("__file").distinct()
-          val bf =
-            if (notMatchedBySource.isEmpty) mf.limit(0)
-            else liveT.join(srcS, fullCond(liveT), "left_anti")
-              .withColumn("s", lit(null).cast(sType))
-              .filter(bySrcFire)
-              .select("__file").distinct()
-          (mf, bf)
-      }
-      matchFiles.unionByName(bySrcFiles)
-    }
-    // ---- multi-match ambiguity (Delta's error): duplicate source keys
-    // are fatal only when they MATCH a target row
-    if (matched.nonEmpty && touchedFiles.nonEmpty) {
-      extraOn match {
-        case None =>
-          val dupKeys = source.groupBy(keyCols.map(col): _*).count()
-            .filter(col("count") > 1).drop("count")
-          val ambiguous = h.scan(touchedFiles.toSeq.sorted)
-            .join(dupKeys, keyCols, "left_semi").limit(1).count()
-          require(ambiguous == 0L,
-            s"merge source has duplicate keys matching target rows at $path " +
-              "(ambiguous MATCHED action; de-duplicate the source)")
-        case Some(_) =>
-          // under the full ON condition, duplicate source KEYS are fine
-          // as long as at most one source row FULL-matches each target
-          // row (Delta's rule): count full matches per target row
-          val tS = withT(h.scan(touchedFiles.toSeq.sorted))
-            .withColumn("__tid", monotonically_increasing_id())
-          val ambiguous = tS.join(srcS, fullCond(tS), "inner")
-            .groupBy("__tid").count().filter(col("count") > 1)
-            .limit(1).count()
-          require(ambiguous == 0L,
-            s"merge source has multiple rows matching one target row under " +
-              s"the ON condition at $path (ambiguous MATCHED action; " +
-              "de-duplicate the source)")
-      }
-    }
-    // ---- the three row classes
-    val tgt =
-      if (touchedFiles.isEmpty) None
-      else Some(h.scan(touchedFiles.toSeq.sorted))
-    val matchedOut = tgt.map { t =>
-      val tS = t.select((keyCols.map(col) :+
-        struct(snapSchema.fieldNames.map(col).toIndexedSeq: _*).as("t")).toIndexedSeq: _*)
-      val res = foldTarget(matched)
-      val pairs = extraOn match {
-        case None => tS.join(srcS, keyCols, "inner")
-        case Some(_) => tS.join(srcS, fullCond(tS), "inner")
-      }
-      pairs.select(res.as("r")).filter(!col("r.__del")).select("r.row.*")
-    }
-    val bySourceOut = tgt.map { t =>
-      val tS0 = t.select((keyCols.map(col) :+
-        struct(snapSchema.fieldNames.map(col).toIndexedSeq: _*).as("t")).toIndexedSeq: _*)
-      val tS = (extraOn match {
-        case None => tS0.join(srcKeys, keyCols, "left_anti")
-        case Some(_) => tS0.join(srcS, fullCond(tS0), "left_anti")
-      }).withColumn("s", lit(null).cast(sType))
-      val res = foldTarget(notMatchedBySource)
-      tS.select(res.as("r")).filter(!col("r.__del")).select("r.row.*")
-    }
-    val insertsOut: Option[DataFrame] =
-      if (notMatched.isEmpty) None
+    // per file, the most source rows matching one of its live rows (0 for
+    // a file touched only because a bySource clause fires on a row no
+    // source row matches, its condition seeing s as NULL)
+    val fileMatches: Map[String, Long] =
+      if (insertOnly || candidates.isEmpty) Map.empty
       else {
-        // the existing-key set to exclude: the touched files' rows —
-        // or, for the no-rewrite insert-only path, the candidate scan
-        // (stats-pruned; a file that can't hold a source key is never
-        // opened)
-        val unmatchedSrc0 = extraOn match {
-          case None =>
-            val tgtKeys =
-              if (insertOnly)
-                (if (candidates.isEmpty) None
-                 else Some(h.live(candidates).select(keyCols.map(col): _*).distinct()))
-              else tgt.map(_.select(keyCols.map(col): _*).distinct())
-            tgtKeys.fold(srcS)(k => srcS.join(k, keyCols, "left_anti"))
-          case Some(_) =>
-            // exclusion by FULL match: a source row inserts unless some
-            // target row satisfies keys AND extra (touched files hold
-            // every key match, hence every full match; the insert-only
-            // path scans the stats-pruned candidates)
-            val tRows =
-              if (insertOnly)
-                (if (candidates.isEmpty) None else Some(h.live(candidates)))
-              else tgt
-            tRows.map(r => withT(r.select(snapSchema.fieldNames.map(col)
-                .toIndexedSeq: _*)))
-              .fold(srcS)(tr => srcS.join(tr, fullCond(tr), "left_anti"))
-        }
-        val unmatchedSrc = unmatchedSrc0
-          .withColumn("t", lit(null).cast(tType))
-        // first-true insert clause; rows matching none drop. Generated
-        // columns compute on inserted rows whose values omit them —
-        // Delta computes generated columns on merge inserts too.
-        val genCols = m.gens.keySet
-        def insertRow(values: Map[String, String]): Column = {
-          val vals =
-            if (values.nonEmpty) values
-            else snapSchema.fieldNames.filter(source.columns.contains)
-              .map(c => c -> s"s.$c").toMap
-          struct(snapSchema.fields
-            .filterNot(f => genCols.contains(f.name) && !vals.contains(f.name))
-            .map(f => expr(vals.getOrElse(f.name, "NULL"))
-              .cast(f.dataType).as(f.name)).toIndexedSeq: _*)
-        }
-        val folded = notMatched.foldRight(
-          struct(lit(true).as("__del"), insertRow(Map.empty).as("row"))) {
-          (c, els) =>
-            val res = c match {
-              case Insert(_, values) =>
-                struct(lit(false).as("__del"), insertRow(values).as("row"))
-              case _ => els
-            }
-            condOf(c).fold(res)(cond =>
-              when(coalesce(expr(cond), lit(false)), res).otherwise(els))
-        }
-        Some(applyGens(
-          unmatchedSrc.select(folded.as("r"))
-            .filter(!col("r.__del")).select("r.row.*"), m.gens))
+        import org.apache.spark.sql.functions.{max => fmax}
+        val live = h.live(candidates)
+        // one shuffle on the file: the (file, row) groups nest in it
+        val hits = onSource(live, "inner").repartition(col("__file"))
+          .groupBy("__file", "__pos").count()
+          .groupBy("__file").agg(fmax("count").as("n"))
+        val bySrcFire = notMatchedBySource.map(c =>
+          condOf(c).fold(lit(true))(x => coalesce(expr(x), lit(false))))
+          .foldLeft(lit(false))(_ || _)
+        val perFile =
+          if (notMatchedBySource.isEmpty) hits
+          else hits.unionByName(onSource(live, "left_anti")
+            .withColumn("s", lit(null).cast(sType)).filter(bySrcFire)
+            .select(col("__file"), lit(0L).as("n")).distinct())
+        perFile.collect().toSeq.groupMapReduce(_.getString(0))(_.getLong(1))(math.max)
       }
-    val pieces = (matchedOut.toSeq ++ bySourceOut.toSeq ++ insertsOut.toSeq)
-      .map(d => alignTo(d, snapSchema))
-    if (pieces.isEmpty)
-      throw new IllegalArgumentException("mergeClauses with no actions")
-    val rewrite = pieces.reduce(_ unionByName _)
-    if (m.constraints.nonEmpty) enforceConstraints(rewrite, m.constraints, path)
+    if (matched.nonEmpty && fileMatches.values.exists(_ > 1))
+      throw new IllegalArgumentException(extraOn match {
+        case None => s"merge source has duplicate keys matching target rows at $path " +
+          "(ambiguous MATCHED action; de-duplicate the source)"
+        case Some(_) => "merge source has multiple rows matching one target row under " +
+          s"the ON condition at $path (ambiguous MATCHED action; de-duplicate the source)"
+      })
+    val touchedFiles = resolveTouched(m.files, fileMatches.keySet)
+    // ---- rewrite. The target rows read: the touched files, or for an
+    // insert-only merge the candidates (read only to exclude their keys)
+    val tgtFiles = if (insertOnly) candidates else touchedFiles.toSeq.sorted
+    val tgt = if (tgtFiles.isEmpty) None else Some(h.scan(tgtFiles))
+    // touched rows no source row matches take the bySource clauses in
+    // place; with no MATCHED clause a matched row stays as it is, once
+    val targetSide = if (insertOnly) None else tgt.map { t =>
+      val bySource = rows(onSource(t, "left_anti").withColumn("s", lit(null).cast(sType)),
+        targetFold(notMatchedBySource))
+      if (matched.nonEmpty) bySource
+      else bySource.unionByName(rows(onSource(t, "left_semi"), keepT))
+    }
+    // every source row joined to its matching target rows (one output row
+    // per matched target row, the ambiguity check above keeps it one per
+    // target row) takes the MATCHED clauses, or unmatched the INSERTs
+    val sourceSide =
+      if (matched.isEmpty && notMatched.isEmpty) None
+      else Some {
+        // `__hit` marks a matched pair, so a plan whose clauses never read
+        // `t` (the upsert preset) prunes the target side to its keys
+        val unpaired = srcS.withColumn("t", lit(null).cast(snapSchema))
+          .withColumn("__hit", lit(null).cast(BooleanType))
+        val paired = tgt.fold(unpaired) { t =>
+          val tt = withT(t).select((keyCols.map(col) :+ col("t") :+ lit(true).as("__hit"))
+            .toIndexedSeq: _*)
+          val how = if (matched.isEmpty) "left_anti" else "left_outer"
+          val j = extraOn.fold(srcS.join(tt, keyCols, how))(_ => srcS.join(tt, fullCond(tt), how))
+          if (matched.isEmpty) j.withColumn("t", lit(null).cast(snapSchema)) else j
+        }
+        val inserts = fold(notMatched, drop) {
+          case (Insert(_, values), i) => out(insertRow(values), i)
+          case _ => drop
+        }
+        val out0 = rows(paired,
+          if (matched.isEmpty) inserts
+          else when(col("__hit").isNotNull, targetFold(matched)).otherwise(inserts))
+        // generated columns an INSERT's values omit compute on its rows
+        // (name order, so one may reference an earlier one) — Delta
+        // computes generated columns on merge inserts too
+        m.gens.toSeq.sortBy(_._1).foldLeft(out0) { case (d, (g, e)) =>
+          val omit = notMatched.zipWithIndex.collect {
+            case (Insert(_, values), i) if !insertVals(values).contains(g) => i
+          }
+          if (omit.isEmpty) d
+          else d.withColumn(g, when(col("__ins").isin(omit: _*), expr(e))
+            .otherwise(col(quoted(g))).cast(snapSchema(g).dataType))
+        }
+      }
+    def aligned(pieces: Seq[DataFrame]): Option[DataFrame] =
+      pieces.map(alignTo(_, snapSchema)).reduceOption(_ unionByName _)
+    // the changed rows gate on CHECK (untouched survivors already passed)
+    if (m.constraints.nonEmpty)
+      aligned(sourceSide.toSeq ++ targetSide.filter(_ => notMatchedBySource.nonEmpty))
+        .foreach(enforceConstraints(_, m.constraints, path))
+    val written = aligned(targetSide.toSeq ++ sourceSide.toSeq).fold(NothingWritten)(h.rewrite)
     // a winner-added file conflicts when its stats may hold a source
     // key — or unconditionally when bySource clauses exist (its rows
     // could be owed NOT MATCHED BY SOURCE actions this commit computed
     // without them)
-    h.commitDml(ts, "merge_clauses", h.rewrite(rewrite), touchedFiles, candidates,
+    h.commitDml(ts, op, written, touchedFiles, candidates,
       st => notMatchedBySource.nonEmpty || boundsMayOverlap(st, keyBounds))
   }
 
@@ -4061,7 +3976,7 @@ object VersionedTable {
     * typed literals: `ts >= TIMESTAMP '2026-01-01 00:00:00'` — the #1
     * pruning predicate on a date-organized fact; string comparisons are
     * unsigned-byte, Spark's own default-collation order). On a Z-ORDERed table
-    * ([[optimize]] with `zorderBy`) a 2-D range predicate prunes to the
+    * ([[optimize]] with `zorderCols`) a 2-D range predicate prunes to the
     * files whose rectangle intersects the query box — file-level
     * skipping on top of the row-group skipping parquet already does
     * (both measured in the Stress harness). The predicate is

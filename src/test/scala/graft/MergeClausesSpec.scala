@@ -138,17 +138,49 @@ class MergeClausesSpec extends SparkSpec {
   }
 
   test("duplicate source keys error only when they match a target row") {
-    val t = freshTable()
-    VersionedTable.commit(base((1, "a", 10)), t, mode = "overwrite")
-    val dupNoMatch = Seq((7L, "x", 1L), (7L, "y", 2L)).toDF("id", "state", "amount")
-    // both insert — Delta inserts unmatched duplicates too
-    VersionedTable.mergeClauses(dupNoMatch, t, Seq("id"))
-    assert(contents(t).count(_._1 == 7L) === 2)
-    val dupMatch = Seq((1L, "x", 1L), (1L, "y", 2L)).toDF("id", "state", "amount")
-    val e = intercept[IllegalArgumentException] {
-      VersionedTable.mergeClauses(dupMatch, t, Seq("id"))
+    // the clause face with its default upsert clauses, and the merge preset
+    val faces = Seq[(String, (DataFrame, String) => Long)](
+      "mergeClauses" -> ((src, t) => VersionedTable.mergeClauses(src, t, Seq("id"))),
+      "merge" -> ((src, t) => VersionedTable.merge(src, t, Seq("id"))))
+    faces.foreach { case (face, run) =>
+      val t = freshTable()
+      VersionedTable.commit(base((1, "a", 10)), t, mode = "overwrite")
+      val dupNoMatch = Seq((7L, "x", 1L), (7L, "y", 2L)).toDF("id", "state", "amount")
+      // both insert — Delta inserts unmatched duplicates too
+      run(dupNoMatch, t)
+      assert(contents(t).count(_._1 == 7L) === 2, face)
+      val dupMatch = Seq((1L, "x", 1L), (1L, "y", 2L)).toDF("id", "state", "amount")
+      val head = VersionedTable.latestVersion(spark, t)
+      val e = intercept[IllegalArgumentException](run(dupMatch, t))
+      assert(e.getMessage.contains("duplicate keys"), face)
+      assert(VersionedTable.latestVersion(spark, t) === head, s"$face committed")
     }
-    assert(e.getMessage.contains("duplicate keys"))
+  }
+
+  test("NOT MATCHED BY SOURCE only: a duplicated source key keeps its matched row once") {
+    val t = freshTable()
+    VersionedTable.commit(Seq((1L, 10L), (2L, 1L)).toDF("id", "v"), t, mode = "overwrite")
+    VersionedTable.mergeClauses(Seq((1L, "a"), (1L, "b")).toDF("id", "x"), t, Seq("id"),
+      matched = Seq.empty, notMatched = Seq.empty,
+      notMatchedBySource = Seq(Delete(Some("t.v < 5"))))
+    val rows = VersionedTable.readVersion(spark, t).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(rows === Seq((1L, 10L)))
+  }
+
+  test("column names holding a space, a dot or a backtick merge through both faces") {
+    Seq("my col", "a.b", "x`y").foreach { name =>
+      Seq[(DataFrame, String) => Long](
+        (src, t) => VersionedTable.merge(src, t, Seq("id")),
+        (src, t) => VersionedTable.mergeClauses(src, t, Seq("id"))).foreach { run =>
+        val t = freshTable()
+        VersionedTable.commit(Seq((1L, 10L), (2L, 20L)).toDF("id", name), t, mode = "overwrite")
+        run(Seq((2L, 22L), (3L, 30L)).toDF("id", name), t)
+        val rows = VersionedTable.readVersion(spark, t).collect()
+          .map(r => (r.getLong(0), r.getLong(1))).toSet
+        assert(rows === Set((1L, 10L), (2L, 22L), (3L, 30L)), name)
+      }
+    }
   }
 
   test("scoped rewrite: files without matches carry by reference") {

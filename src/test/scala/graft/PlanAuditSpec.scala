@@ -167,6 +167,39 @@ class PlanAuditSpec extends SparkSpec {
     assert(plan.contains("hashpartitioning(user_id"), s"missing user_id shuffle:\n$plan")
   }
 
+  test("merge and default-clause mergeClauses of a 10-file table run no more jobs than merge did") {
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    import graft.sources.VersionedTable
+    // Jobs of one `merge` on this fixture at local[4] before merge and
+    // mergeClauses shared one core: 9 (mergeClauses with its default
+    // clauses ran 15). With the shared core both run 8.
+    val mergeJobsBefore = 9
+    val dir = java.nio.file.Files.createTempDirectory("plan_merge").toString
+    // 300 source rows: 240 match a table row (spread over every file), 60 insert
+    spark.range(0, 240).select((col("id") * 4 + 1).as("id"), lit(-1L).as("v"),
+      lit("u").as("name"))
+      .unionByName(spark.range(5000, 5060).select(col("id"), lit(-2L).as("v"),
+        lit("i").as("name")))
+      .coalesce(1).write.parquet(s"$dir/src")
+    val src = spark.read.parquet(s"$dir/src")
+    val faces = Seq[(String, String => Long)](
+      "merge" -> (t => VersionedTable.merge(src, t, Seq("id"), ts = "2026-01-02T00:00:00Z")),
+      "mergeClauses" -> (t => VersionedTable.mergeClauses(src, t, Seq("id"),
+        ts = "2026-01-02T00:00:00Z")))
+    faces.foreach { case (face, run) =>
+      val t = s"$dir/$face"
+      VersionedTable.commit(spark.range(0, 1000).select(col("id"), (col("id") * 10).as("v"),
+        concat(lit("n"), col("id").cast("string")).as("name"))
+        .repartitionByRange(10, col("id")), t, mode = "overwrite", ts = "2026-01-01T00:00:00Z")
+      assert(VersionedTable.snapshotFiles(spark, t).size === 10)
+      val (_, jobs) = JobLog.during(spark)(run(t))
+      info(s"$face: ${jobs.size} jobs")
+      assert(jobs.size <= mergeJobsBefore, s"$face ran ${jobs.size} jobs")
+      assert(VersionedTable.rowCount(spark, t) === 1060L)
+      assert(VersionedTable.readVersion(spark, t).filter(col("v") < 0).count() === 300L)
+    }
+  }
+
   test("deletion-vector reads keep parquet pushdown under the anti-join") {
     import org.apache.spark.sql.functions.{col, lit}
     import graft.sources.VersionedTable

@@ -190,7 +190,7 @@ class VersionedTableSpec extends SparkSpec {
     assert(VersionedTable.readVersion(spark, t, 9L).collect().toSet === before)
     // z-ordered variant: same content, no helper column
     VersionedTable.optimize(spark, t, targetFileBytes = Long.MaxValue,
-      zorderBy = Some(("id", "v")), ts = "2026-02-02T00:00:00Z")
+      zorderCols = Seq("id", "v"), ts = "2026-02-02T00:00:00Z")
     val after = VersionedTable.readVersion(spark, t)
     assert(after.columns.toSeq === Seq("id", "v"))
     assert(after.collect().toSet === before)
