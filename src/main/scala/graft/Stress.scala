@@ -759,10 +759,10 @@ object Stress {
       val vAuto = VersionedTable.deleteMergeOnRead(spark, taxed,
         "event_id % 2 = 1", ts = "2026-01-05T00:00:00Z")
       val tAuto = readS()
-      val headManifest = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(taxed, "_manifests", f"v$vAuto%08d.manifest")), "UTF-8")
-      require(!headManifest.contains("dv="),
-        "a 50%-vectored delete must auto-fold, carrying no dv= entry")
+      val vectoredFiles = VersionedTable.describeDetail(spark, taxed)
+        .select("num_vectored_files").head().getLong(0)
+      require(vectoredFiles == 0L,
+        s"a 50%-vectored delete (v$vAuto) must auto-fold, leaving no deletion vector")
       println(f"STRESS dv_auto_fold           50%%-delete auto-folded in-commit; post-fold read $tAuto%.2f s (no vector left)")
 
       // CONSTRAINT overhead per commit: each CHECK is one short-circuit

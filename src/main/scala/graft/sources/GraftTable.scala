@@ -47,56 +47,25 @@ final class GraftTable private (spark: SparkSession, path: String) {
     VersionedTable.rollback(spark, path, v, ts)
 
   /** RESTORE to the latest version at or before `asOf` (Delta's
-    * `RESTORE ... TO TIMESTAMP AS OF`): resolved from the history's
-    * commit timestamps, then a zero-copy [[restoreToVersion]].
-    * Timestamps compare as parsed instants (lexicographic ordering
-    * mis-orders mixed formats, e.g. the '1970-01-01T00:00:00Z' default
-    * vs sub-second ISO strings); an entry that doesn't parse falls
-    * back to string comparison for that entry only. An `asOf` earlier
-    * than every commit is a descriptive error, not an NPE. */
+    * `RESTORE ... TO TIMESTAMP AS OF`): resolved from the commit
+    * timestamps ([[VersionedTable.versionAt]]: parsed instants), then a
+    * zero-copy [[restoreToVersion]]. An `asOf` earlier than every commit
+    * is a descriptive error. */
   def restoreToTimestamp(asOf: String, ts: String = VersionedTable.TsNow): Long =
     VersionedTable.rollback(spark, path, versionAtOrBefore(asOf), ts)
 
   /** Latest version committed at or before `asOf` — the timestamp →
     * version resolution RESTORE and SHALLOW CLONE share. */
-  def versionAtOrBefore(asOf: String): Long = {
-    // history is O(versions) rows — driver-side resolve is the shape
-    // Delta itself uses for timestamp → version
-    val hist = history().select("version", "ts").collect()
-      .map(r => (r.getLong(0), r.getString(1)))
-    val asOfI = GraftTable.parseTs(asOf)
-    val atOrBefore = hist.filter { case (_, cts) =>
-      (asOfI, GraftTable.parseTs(cts)) match {
-        case (Some(a), Some(c)) => !c.isAfter(a)
-        case _ => cts <= asOf
-      }
-    }
-    if (atOrBefore.isEmpty) throw new IllegalArgumentException(
-      s"no version at or before '$asOf' at $path (earliest commit ts: " +
-        s"${hist.map(_._2).minOption.getOrElse("none")})")
-    atOrBefore.maxBy(_._1)._1
-  }
+  def versionAtOrBefore(asOf: String): Long =
+    VersionedTable.versionAt(spark, path, asOf, atOrBefore = true)
 
   /** Earliest version committed at or after `asOf` — the timestamp →
     * version resolution the CDF/stream `startingTimestamp` option uses
     * (Delta's semantics: the first commit the timestamp does not
     * postdate; an `asOf` later than every commit is a descriptive
     * error). */
-  def versionAtOrAfter(asOf: String): Long = {
-    val hist = history().select("version", "ts").collect()
-      .map(r => (r.getLong(0), r.getString(1)))
-    val asOfI = GraftTable.parseTs(asOf)
-    val atOrAfter = hist.filter { case (_, cts) =>
-      (asOfI, GraftTable.parseTs(cts)) match {
-        case (Some(a), Some(c)) => !c.isBefore(a)
-        case _ => cts >= asOf
-      }
-    }
-    if (atOrAfter.isEmpty) throw new IllegalArgumentException(
-      s"no version at or after '$asOf' at $path (latest commit ts: " +
-        s"${hist.map(_._2).maxOption.getOrElse("none")})")
-    atOrAfter.minBy(_._1)._1
-  }
+  def versionAtOrAfter(asOf: String): Long =
+    VersionedTable.versionAt(spark, path, asOf, atOrBefore = false)
 
   /** Reclaimable-file count WITHOUT deleting anything (Delta's
     * `VACUUM ... DRY RUN`): exactly the files a real vacuum with the
@@ -215,18 +184,4 @@ object GraftTable {
     * create-or-merge branch (batch_scoring.py:169) ports directly. */
   def isGraftTable(spark: SparkSession, path: String): Boolean =
     VersionedTable.latestVersion(spark, path) >= 0
-
-  /** Tolerant instant parse for caller-supplied commit timestamps:
-    * ISO instant, offset datetime, or local datetime (space- or
-    * T-separated, read as UTC). None for anything else — callers fall
-    * back to string comparison for that entry. */
-  private[sources] def parseTs(s: String): Option[java.time.Instant] = {
-    import java.time._
-    scala.util.Try(Instant.parse(s)).toOption
-      .orElse(scala.util.Try(OffsetDateTime.parse(s).toInstant).toOption)
-      .orElse(scala.util.Try(LocalDateTime.parse(s.replace(' ', 'T'))
-        .toInstant(ZoneOffset.UTC)).toOption)
-      .orElse(scala.util.Try(LocalDate.parse(s).atStartOfDay
-        .toInstant(ZoneOffset.UTC)).toOption)
-  }
 }

@@ -622,11 +622,9 @@ object Streams {
     rdr.text(VersionedTable.manifestLogDir(tablePath))
       .writeStream
       .foreachBatch { (b: DataFrame, _: Long) =>
-        // one `version=N` header line per manifest in the batch —
+        // the versions of the manifests in the batch —
         // manifest-count-bounded driver collect (metadata, not data)
-        val vs = b.filter(col("value").rlike("^version=[0-9]+$"))
-          .collect().map(_.getString(0).stripPrefix("version=").toLong)
-          .filter(_ > fromVersion).sorted
+        val vs = VersionedTable.manifestVersions(b).filter(_ > fromVersion).sorted
         vs.foreach { v =>
           val feed =
             if (v == 0L || !VersionedTable.hasVersion(spark, tablePath, v - 1))

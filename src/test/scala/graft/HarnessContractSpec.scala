@@ -56,4 +56,25 @@ class HarnessContractSpec extends AnyFunSuite {
       finally walk.close()
     assert(offenders.isEmpty, s"control bytes in ${offenders.mkString(", ")}")
   }
+
+  test("only the log module spells a manifest header line") {
+    // the header-line format belongs to sources/TableLog.scala alone: a
+    // header-prefix literal ("fstat=", "^version=", ...) anywhere else
+    // under src/main is a second reader or writer of that format
+    val keys = graft.sources.VersionedTable.HeaderLineRe.pattern
+      .stripPrefix("^(?:").stripSuffix(")=")
+    val literal = ("\"\\^?(?:" + keys + ")=").r
+    val log = Paths.get("src/main/scala/graft/sources/TableLog.scala")
+    assert(Files.isRegularFile(log), s"$log not found under ${Paths.get("").toAbsolutePath}")
+    val walk = Files.walk(Paths.get("src/main"))
+    val offenders =
+      try walk.iterator.asScala
+        .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala") && p != log)
+        .flatMap(p => Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (l, i) if literal.findFirstIn(l).isDefined => s"$p:${i + 1}"
+        }).toSeq.sorted
+      finally walk.close()
+    assert(offenders.isEmpty, s"manifest header literals outside the log module: " +
+      offenders.mkString(", "))
+  }
 }

@@ -67,6 +67,18 @@ class VersionedTableSpec extends SparkSpec {
     }
   }
 
+  test("readAsOf and TIMESTAMP AS OF compare commit timestamps as instants") {
+    val t = freshTable()
+    VersionedTable.commit(df(1), t, mode = "overwrite", ts = "2026-01-01T00:00:00Z")
+    VersionedTable.commit(df(2), t, mode = "append", ts = "2026-01-01T00:00:01.000Z")
+    // as strings, 'Z' sorts after '.' and 'T' after ' ': v0 would read
+    // as later than both spellings of half a second past it
+    assert(idSet(VersionedTable.readAsOf(spark, t, "2026-01-01T00:00:00.500Z")) === Set(1L))
+    assert(idSet(spark.sql(
+      s"SELECT * FROM graft.`$t` TIMESTAMP AS OF '2026-01-01 00:00:00.5'")) === Set(1L))
+    assert(idSet(VersionedTable.readAsOf(spark, t, "2026-01-01T00:00:01Z")) === Set(1L, 2L))
+  }
+
   test("vacuum deletes only unreferenced files; retained snapshots still read") {
     val t = freshTable()
     VersionedTable.commit(df(1, 2), t, mode = "overwrite", ts = "2026-01-01T00:00:00Z")
@@ -361,13 +373,11 @@ class VersionedTableSpec extends SparkSpec {
     assert(files.size === 4)
     // updates keyed in the lowest quartile: only ONE file's [min,max]
     // intersects — the other three are pruned before any file opens
-    val cands = VersionedTable.discoveryCandidates(spark, t, "id",
-      BigDecimal(1), BigDecimal(20))
+    val cands = VersionedTable.prunedFiles(spark, t, "id BETWEEN 1 AND 20")
     assert(cands.size === 1, s"expected 1 candidate, got $cands")
     // a fully out-of-range key prunes EVERYTHING — the merge becomes a
     // pure insert that scans zero snapshot files and carries all four
-    assert(VersionedTable.discoveryCandidates(spark, t, "id",
-      BigDecimal(5000), BigDecimal(5000)).isEmpty)
+    assert(VersionedTable.prunedFiles(spark, t, "id BETWEEN 5000 AND 5000").isEmpty)
     VersionedTable.merge(Seq((5000L, -1L)).toDF("id", "v"), t,
       keyCols = Seq("id"), ts = "2026-01-02T00:00:00Z")
     assert(files.toSet.subsetOf(VersionedTable.snapshotFiles(spark, t).toSet))
@@ -380,8 +390,7 @@ class VersionedTableSpec extends SparkSpec {
     assert(out(5L) === -5L && out(99L) === 990L && out.size === 101)
     // stats carried forward through the merge: pruning still works on
     // the new head (files rewritten by the merge get fresh footer stats)
-    val cands2 = VersionedTable.discoveryCandidates(spark, t, "id",
-      BigDecimal(90), BigDecimal(99))
+    val cands2 = VersionedTable.prunedFiles(spark, t, "id BETWEEN 90 AND 99")
     assert(cands2.size === 1, s"post-merge pruning lost stats: $cands2")
   }
 
@@ -833,6 +842,44 @@ class VersionedTableSpec extends SparkSpec {
       .filter(col("cc") === "c007").select("id").collect().map(_.getLong(0)).toSeq
     assert(at007 === Seq(-1L))
     assert(VersionedTable.readVersion(spark, t).count() === 100L)
+  }
+
+  test("merge discovery prunes exactly like readWhere over the source's key range") {
+    val t = freshTable()
+    // INT96 (the default) records no timestamp stats
+    val prevTs = spark.conf.get("spark.sql.parquet.outputTimestampType")
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    val base = spark.range(0, 40).select(col("id").cast("int").as("i"),
+      timestamp_seconds(lit(1767225600L) + col("id") * 3600).as("ts"),
+      date_add(lit("2026-01-01").cast("date"), col("id").cast("int")).as("d"),
+      (col("id") / 4).cast("decimal(10,2)").as("dec"),
+      format_string("k%03d", col("id")).as("s"),
+      (col("id") % 2).as("tenant"), col("id").cast("double").as("x"),
+      lit(null).cast("long").as("n"))
+      .repartitionByRange(4, col("id"))
+    try VersionedTable.commit(base, t, mode = "overwrite", ts = "2026-01-01T00:00:00Z")
+    finally spark.conf.set("spark.sql.parquet.outputTimestampType", prevTs)
+    val src = base.filter(col("i").between(12, 15))
+    val cases = Seq(
+      Seq("i") -> "i BETWEEN 12 AND 15",
+      Seq("ts") ->
+        "ts BETWEEN TIMESTAMP '2026-01-01 12:00:00' AND TIMESTAMP '2026-01-01 15:00:00'",
+      Seq("d") -> "d BETWEEN DATE '2026-01-13' AND DATE '2026-01-16'",
+      Seq("dec") -> "dec BETWEEN 3.00 AND 3.75",
+      Seq("s") -> "s BETWEEN 'k012' AND 'k015'",
+      Seq("tenant", "i") -> "tenant BETWEEN 0 AND 1 AND i BETWEEN 12 AND 15",
+      Seq("n") -> "true")
+    cases.foreach { case (keys, pred) =>
+      val got = VersionedTable.mergeCandidates(src, t, keys)
+      assert(got === VersionedTable.prunedFiles(spark, t, pred), s"keys $keys")
+      assert(got.size < 4 || keys == Seq("n"), s"keys $keys must prune")
+    }
+    // a NaN key bound proves nothing: every file stays a candidate
+    val nan = src.withColumn("x", when(col("i") === 15, lit(Double.NaN)).otherwise(col("x")))
+    assert(VersionedTable.mergeCandidates(nan, t, Seq("x")) ===
+      VersionedTable.snapshotFiles(spark, t))
+    assert(VersionedTable.mergeCandidates(src, t, Seq("x")) ===
+      VersionedTable.prunedFiles(spark, t, "x BETWEEN 12.0 AND 15.0"))
   }
 
   test("composite-key merge prunes on every key column, not just the head") {
