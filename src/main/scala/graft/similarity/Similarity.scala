@@ -7,16 +7,29 @@ import org.apache.spark.sql.functions._
 /** Approximate-nearest-neighbor search over an embedding column
   * (SURVEY.md §2.8).
   *
-  * Two paths:
+  * Five top-k search faces:
   *   - [[bruteForceTopK]] — exact cosine top-k via a broadcast cross join
   *     + rank window. Quadratic in corpus size: the CORRECTNESS BASELINE,
   *     never the scale path. The queries (small) broadcast; the corpus
-  *     only streams.
+  *     only streams. [[radiusSearch]] is its threshold counterpart.
   *   - [[lshTopK]] — random-hyperplane LSH: each vector hashes to a
   *     bucket by the sign pattern of its dot products with `nPlanes`
   *     fixed pseudo-random hyperplanes; search touches only the query's
   *     bucket. Cost drops from |Q|×|C| to |Q|×|bucket| (expected
   *     |C|/2^nPlanes). Buckets are the only shuffle key.
+  *   - [[ivfTopK]] — k-means cells; each query scores its `nprobe`
+  *     nearest cells.
+  *   - [[pqTopK]] — product-quantization codes scored by asymmetric
+  *     distance (ADC) against every corpus row.
+  *   - [[ivfPqTopK]] — both: ADC over the probed cells only.
+  *     [[buildAnnIndex]] persists that index and [[queryAnnIndex]]
+  *     queries it without refitting.
+  *
+  * One core under them: every exact ranking is [[rankTopK]]; the three
+  * PQ faces run one ADC search ([[adcSearch]]: per-query lookup tables,
+  * a k×refine shortlist, exact re-rank), which probes cells when the
+  * index frame has a `cell` column; every fit is one Lloyd loop
+  * ([[lloydFit]]); the persisted model has one codec ([[AnnModel]]).
   *
   * Determinism: hyperplane coefficients come from an integer LCG
   * (coef = ((1103515245·(p·dim+d) + 12345) mod 2048) − 1024) — exact
@@ -31,18 +44,24 @@ object Similarity {
   private def cosine(a: Column, b: Column): Column =
     graft.functions.GraftFunctions.cosineSim(a, b)
 
+  /** The exact ranking every search ends in: the top `k` of `scored`'s
+    * (query_id, neighbor_id, cosine) pairs per query, cosine descending,
+    * ties broken on neighbor_id. */
+  private def rankTopK(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
+    scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select("query_id", "neighbor_id", "cosine", "rank")
+  }
+
   /** Exact top-k neighbors per query vector (correctness baseline). */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int = 5): DataFrame = {
     graft.functions.GraftFunctions.register(corpus.sparkSession)
     val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
     val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("c_emb"))
-    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
-    c.crossJoin(broadcast(q))
+    rankTopK(c.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", cosine(col("q_emb"), col("c_emb")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine", "rank")
+      .withColumn("cosine", cosine(col("q_emb"), col("c_emb"))), k)
   }
 
   /** Exact radius search: every corpus vector within cosine ≥ `minCosine`
@@ -91,35 +110,23 @@ object Similarity {
     math.min(30, math.max(4,
       math.ceil(math.log(math.max(corpusSize, 1L).toDouble / targetBucket) / math.log(2)).toInt))
 
-  /** Deterministic IVF (inverted-file) ANN — the coarse-quantizer
-    * counterpart of [[lshTopK]]: partition the corpus into `nlist` cells
-    * around k-means centroids, search only the `nprobe` cells nearest to
-    * each query.
-    *
-    *   - centroids are DETERMINISTIC: seeds = the `nlist` lowest-vec_id
-    *     vectors, refined by `iters` Lloyd rounds (assignment is a
-    *     codegen'd argmax over centroid-literal cosines; the per-round
-    *     collect is nlist×dim means — KB-sized at any corpus scale);
-    *   - the cell id is the ONLY shuffle key; per-query candidate cost is
-    *     nprobe/nlist of the corpus, tunable at query time;
-    *   - recall comes from probing multiple cells (a neighbor is missed
-    *     only when it quantizes outside all probed cells).
-    *
-    * IVF vs LSH trade-off: IVF adapts its partition to the data
-    * distribution (tighter candidate sets on clustered embeddings; the
-    * centroid fit is a light training pass), LSH is data-oblivious (no
-    * fit, stable under distribution drift). Both are O(|C|) build +
-    * sub-linear probe. */
+  /** Cosine of the embedding column to one centroid literal. */
   private def cosTo(cent: Array[Double]): Column =
     cosine(col("embedding"), typedLit(cent.toSeq))
 
+  /** One (cosine, cell) struct per centroid literal. */
+  private def centroidScores(cents: Array[Array[Double]]): Seq[Column] =
+    cents.toSeq.zipWithIndex.map { case (c, i) => struct(cosTo(c).as("cos"), lit(i).as("cell")) }
+
   /** Winning (cosine, cell) struct over centroid literals — struct
     * comparison is lexicographic, so `greatest` is argmax by cosine with
-    * the cell index as the deterministic tie-break. */
+    * the cell index as the deterministic tie-break. `greatest` takes at
+    * least two arguments, so a single centroid is its own winner. */
   private def bestCentroid(cents: Array[Array[Double]]): Column =
-    greatest(cents.zipWithIndex.map { case (c, i) =>
-      struct(cosTo(c).as("cos"), lit(i).as("cell"))
-    }: _*)
+    centroidScores(cents) match {
+      case Seq(only) => only
+      case scores => greatest(scores: _*)
+    }
 
   /** Codegen'd argmax-by-cosine cell assignment over centroid literals. */
   private[graft] def cellOf(cents: Array[Array[Double]]): Column =
@@ -131,10 +138,7 @@ object Similarity {
     * Ties resolve toward the higher cell index (struct comparison), which
     * is deterministic either way. */
   private[graft] def nearestCells(cents: Array[Array[Double]], m: Int): Column =
-    transform(
-      slice(sort_array(array(cents.zipWithIndex.map { case (c, i) =>
-        struct(cosTo(c).as("cos"), lit(i).as("cell"))
-      }: _*), asc = false), 1, m),
+    transform(slice(sort_array(array(centroidScores(cents): _*), asc = false), 1, m),
       p => p.getField("cell"))
 
   /** Per-label centroid outliers — embedding QA: the k vectors farthest
@@ -162,19 +166,12 @@ object Similarity {
       .select("label", "vec_id", "centroid_cosine", "rank")
   }
 
-  /** Deterministic Lloyd k-means over an embedding column: seeds = the
-    * `nlist` lowest-vec_id vectors, `iters` refinement rounds. Each round
-    * is one distributed pass; the only driver traffic is the nlist×dim
-    * centroid means (KB-sized at any corpus scale). `iters` is therefore
-    * a sequential JOB-COUNT multiplier — the driver coordinates one Spark
-    * job per round, so at cluster scale the knob trades centroid quality
-    * against scheduler round-trips, never against shuffle volume. */
   /** The `n` lowest-vec_id embeddings as driver arrays — ONE bounded
     * collect (n×dim doubles, KB-sized) shared by the k-means seed set
     * and, unit-normalized driver-side, the PQ subspace seed sets, so
     * composed fits ([[ivfPqTopK]], [[buildAnnIndex]]) pay one seed job
     * instead of one per fit. */
-  private[graft] def seedRows(corpus: DataFrame, n: Int): Array[Array[Double]] =
+  private def seedRows(corpus: DataFrame, n: Int): Array[Array[Double]] =
     corpus.orderBy("vec_id").limit(n).select("embedding").collect()
       .map(_.getSeq[Number](0).map(_.doubleValue()).toArray)
 
@@ -201,23 +198,48 @@ object Similarity {
       case _ => false
     }
 
-  def kmeansFit(corpus: DataFrame, nlist: Int = 16, iters: Int = 2,
-      seeds: Option[Array[Array[Double]]] = None): Array[Array[Double]] = {
+  /** Deterministic Lloyd k-means over an embedding column: seeds = the
+    * `nlist` lowest-vec_id vectors, `iters` refinement rounds. Each round
+    * is one distributed pass; the only driver traffic is the nlist×dim
+    * centroid means (KB-sized at any corpus scale). `iters` is therefore
+    * a sequential JOB-COUNT multiplier — the driver coordinates one Spark
+    * job per round, so at cluster scale the knob trades centroid quality
+    * against scheduler round-trips, never against shuffle volume. */
+  def kmeansFit(corpus: DataFrame, nlist: Int = 16, iters: Int = 2): Array[Array[Double]] =
+    lloydFit(corpus, Some(nlist), None, iters)._1.get
+
+  /** The one Lloyd fit behind [[kmeansFit]] (`nlist` given), [[pqFit]]
+    * (`pq` = (m, kCent) given) and the composed IVF-PQ fit (both): ONE
+    * seed collect of the max(nlist, kCent) lowest-vec_id vectors, then
+    * `iters` rounds of ONE [[roundAcc]] job each — k-means round r and
+    * PQ round r share that job, since neither depends on the other's
+    * state. The PQ seeds are the kCent seed rows unit-normalized
+    * driver-side (bit-identical to unitCol — see [[unitize]]) and sliced
+    * into every subspace's seed set; the vector dimension reads off the
+    * seed rows. Fit job count: 1 + iters, whichever halves are fitted. */
+  private def lloydFit(corpus: DataFrame, nlist: Option[Int], pq: Option[(Int, Int)],
+      iters: Int): (Option[Array[Array[Double]]], Option[Array[Array[Array[Double]]]]) = {
     // self-register the native cosine (idempotent): cellOf's assignment
     // column resolves graft_cosine_sim at analysis time, and relying on a
     // PREVIOUS query having registered it makes the call order-dependent
     // (bit us when a key rename shuffled the Verify iteration order)
     graft.functions.GraftFunctions.register(corpus.sparkSession)
-    // accept array<float|double> like every other embedding consumer
-    // (CosineSimilarity/HyperplaneBuckets); the dimension comes from the
-    // vectors themselves, not a parameter that could disagree with them
-    var cents: Array[Array[Double]] =
-      seeds.map(_.take(nlist)).getOrElse(seedRows(corpus, nlist))
-    for (_ <- 0 until iters) {
-      val acc = roundAcc(corpus, Some(cents), None)
-      cents = kmRebuild(acc.kmCnt, acc.kmSum, cents)
+    val seeds = seedRows(corpus, (nlist.toSeq ++ pq.map(_._2)).max)
+    var cents = nlist.map(seeds.take)
+    var books = pq.map { case (m, kCent) =>
+      val rows = seeds.take(kCent).map(unitize(_, floatEmbedding(corpus)))
+      require(rows.nonEmpty, "the PQ fit needs a non-empty corpus")
+      val dim = rows.head.length
+      require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
+      val dsub = dim / m
+      Array.tabulate(m)(s => rows.map(_.slice(s * dsub, (s + 1) * dsub)))
     }
-    cents
+    for (_ <- 0 until iters) {
+      val acc = roundAcc(corpus, cents, books)
+      cents = cents.map(kmRebuild(acc.kmCnt, acc.kmSum, _))
+      books = books.map(pqRebuild(acc.pqCnt, acc.pqSum, _))
+    }
+    (cents, books)
   }
 
   // ------------------------------------------------------- Lloyd engine
@@ -249,7 +271,7 @@ object Similarity {
 
   /** ONE job computing the round's sums for the k-means fit
     * (`cents` given), the PQ fit (`books` given), or BOTH fused
-    * ([[fitIvfPq]] — the rounds are independent: cents_r depends only on
+    * ([[lloydFit]] — the rounds are independent: cents_r depends only on
     * cents_{r-1}, books_r only on books_{r-1}, so composed fits pay one
     * job per round instead of one per fit per round). */
   private def roundAcc(corpus: DataFrame,
@@ -357,6 +379,19 @@ object Similarity {
         if (cnt(c)(d) == 0L) 0.0 else sum(c)(d) / cnt(c)(d))
     }.toArray
 
+  /** New codebooks from a round's sums — the [[kmRebuild]] contract per
+    * subspace. */
+  private def pqRebuild(cnt: Array[Array[Array[Long]]],
+      sum: Array[Array[Array[Double]]],
+      prev: Array[Array[Array[Double]]]): Array[Array[Array[Double]]] =
+    Array.tabulate(prev.length) { s =>
+      Array.tabulate(prev(s).length) { c =>
+        if (cnt(s)(c).forall(_ == 0L)) prev(s)(c)
+        else Array.tabulate(prev(s)(c).length)(d =>
+          if (cnt(s)(c)(d) == 0L) 0.0 else sum(s)(c)(d) / cnt(s)(c)(d))
+      }
+    }
+
   /** Cluster assignment for a fitted [[kmeansFit]] model: every vector's
     * cell plus its cosine to the winning centroid — shuffle-free (the
     * centroids ride along as literals in a codegen'd projection). */
@@ -371,27 +406,35 @@ object Similarity {
       best.getField("cos").as("centroid_cosine"))
   }
 
+  /** Deterministic IVF (inverted-file) ANN — the coarse-quantizer
+    * counterpart of [[lshTopK]]: partition the corpus into `nlist` cells
+    * around k-means centroids, search only the `nprobe` cells nearest to
+    * each query.
+    *
+    *   - centroids are DETERMINISTIC: seeds = the `nlist` lowest-vec_id
+    *     vectors, refined by `iters` Lloyd rounds (assignment is a
+    *     codegen'd argmax over centroid-literal cosines; the per-round
+    *     collect is nlist×dim means — KB-sized at any corpus scale);
+    *   - the cell id is the ONLY shuffle key; per-query candidate cost is
+    *     nprobe/nlist of the corpus, tunable at query time;
+    *   - recall comes from probing multiple cells (a neighbor is missed
+    *     only when it quantizes outside all probed cells).
+    *
+    * IVF vs LSH trade-off: IVF adapts its partition to the data
+    * distribution (tighter candidate sets on clustered embeddings; the
+    * centroid fit is a light training pass), LSH is data-oblivious (no
+    * fit, stable under distribution drift). Both are O(|C|) build +
+    * sub-linear probe. */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int = 5,
       nlist: Int = 16, nprobe: Int = 4, iters: Int = 2): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
-
     val cents = kmeansFit(corpus, nlist, iters)
-
     val c = corpus.select(col("vec_id").as("neighbor_id"),
       col("embedding").as("c_emb"), cellOf(cents).as("cell"))
     val probed = queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("q_emb"),
-      explode(slice(sort_array(array(cents.zipWithIndex.map { case (ct, i) =>
-        struct(cosTo(ct).as("cos"), lit(i).as("cell"))
-      }: _*), asc = false), 1, nprobe)).as("probe"))
-      .select(col("query_id"), col("q_emb"), col("probe.cell").as("cell"))
-    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
-    c.join(broadcast(probed), Seq("cell"))
+      col("embedding").as("q_emb"), explode(nearestCells(cents, nprobe)).as("cell"))
+    rankTopK(c.join(broadcast(probed), Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", cosine(col("q_emb"), col("c_emb")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine", "rank")
+      .withColumn("cosine", cosine(col("q_emb"), col("c_emb"))), k)
   }
 
   /** Bucketed ANN: top-k per query among candidates that share a bucket
@@ -455,12 +498,7 @@ object Similarity {
       .drop("t", "bucket")
       .filter(col("query_id") =!= col("neighbor_id"))
       .dropDuplicates("query_id", "neighbor_id")
-    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
-    candidates
-      .withColumn("cosine", cosine(col("q_emb"), col("c_emb")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine", "rank")
+    rankTopK(candidates.withColumn("cosine", cosine(col("q_emb"), col("c_emb"))), k)
   }
 
   /** ANN QA row — recall@k of [[lshTopK]] against [[bruteForceTopK]] on
@@ -562,78 +600,12 @@ object Similarity {
     * Lloyd k-means (`k` centroids, seeds = lowest-vec_id slices, same
     * protocol as [[kmeansFit]]). Returns m × k × (D/m) centroids.
     *
-    * Scale: m×iters bounded driver rounds, each ONE distributed pass
-    * collecting k×(D/m) means — KB-sized at any corpus size. */
+    * Scale: `iters` bounded driver rounds, each ONE distributed pass
+    * that fits all m subspaces together and collects m×k×(D/m) means —
+    * KB-sized at any corpus size. */
   def pqFit(corpus: DataFrame, m: Int = 4, k: Int = 16,
-      iters: Int = 2, seeds: Option[Array[Array[Double]]] = None): Array[Array[Array[Double]]] = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
-    // seeds: ONE collect of the k lowest-vec_id RAW vectors (shareable
-    // with the k-means seed collect in composed fits), unit-normalized
-    // driver-side (bit-identical to unitCol — see [[unitize]]) and
-    // sliced into every subspace's seed set. The vector dimension reads
-    // off the seed rows — the old separate `select(size(...)).head()`
-    // job carried no information the seeds don't.
-    val seedRaw = seeds.map(_.take(k)).getOrElse(seedRows(corpus, k))
-    require(seedRaw.nonEmpty, "pqFit needs a non-empty corpus")
-    val dim = seedRaw.head.length
-    require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
-    val dsub = dim / m
-    var books: Array[Array[Array[Double]]] = {
-      val rows = seedRaw.map(unitize(_, floatEmbedding(corpus)))
-      Array.tabulate(m)(s => rows.map(_.slice(s * dsub, (s + 1) * dsub)))
-    }
-    // ONE Spark job per iteration fits ALL m subspaces together (the
-    // first cut ran m separate jobs per round — 12 sequential job
-    // launches dominated the measured 17 s; per-job overhead, not data,
-    // is the cost at index-build time): every row computes its m cell
-    // assignments in one projection and the (subspace, cell, dim) sums
-    // accumulate in the round's single narrow job (see [[roundAcc]]).
-    for (_ <- 0 until iters) {
-      val acc = roundAcc(corpus, None, Some(books))
-      books = pqRebuild(acc.pqCnt, acc.pqSum, books)
-    }
-    books
-  }
-
-  /** New codebooks from a round's sums — the [[kmRebuild]] contract per
-    * subspace. */
-  private def pqRebuild(cnt: Array[Array[Array[Long]]],
-      sum: Array[Array[Array[Double]]],
-      prev: Array[Array[Array[Double]]]): Array[Array[Array[Double]]] =
-    Array.tabulate(prev.length) { s =>
-      Array.tabulate(prev(s).length) { c =>
-        if (cnt(s)(c).forall(_ == 0L)) prev(s)(c)
-        else Array.tabulate(prev(s)(c).length)(d =>
-          if (cnt(s)(c)(d) == 0L) 0.0 else sum(s)(c)(d) / cnt(s)(c)(d))
-      }
-    }
-
-  /** The composed IVF-PQ fit: one shared seed collect, then `iters`
-    * FUSED rounds — k-means round r and PQ round r share one job, since
-    * neither depends on the other's state ([[roundAcc]]'s contract).
-    * Fit job count: 1 + iters, vs 1 + 2×iters(×2 with AQE's Exchange
-    * materialization) for the sequential pair it replaces. */
-  private[graft] def fitIvfPq(corpus: DataFrame, nlist: Int, m: Int,
-      kCent: Int, iters: Int): (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
-    val seeds = seedRows(corpus, math.max(nlist, kCent))
-    var cents = seeds.take(nlist)
-    val seedRaw = seeds.take(kCent)
-    require(seedRaw.nonEmpty, "fitIvfPq needs a non-empty corpus")
-    val dim = seedRaw.head.length
-    require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
-    val dsub = dim / m
-    var books: Array[Array[Array[Double]]] = {
-      val rows = seedRaw.map(unitize(_, floatEmbedding(corpus)))
-      Array.tabulate(m)(s => rows.map(_.slice(s * dsub, (s + 1) * dsub)))
-    }
-    for (_ <- 0 until iters) {
-      val acc = roundAcc(corpus, Some(cents), Some(books))
-      cents = kmRebuild(acc.kmCnt, acc.kmSum, cents)
-      books = pqRebuild(acc.pqCnt, acc.pqSum, books)
-    }
-    (cents, books)
-  }
+      iters: Int = 2): Array[Array[Array[Double]]] =
+    lloydFit(corpus, None, Some((m, k)), iters)._2.get
 
   /** Encode every vector as `m` small codes — the 100 TB memory story:
     * the searchable index is m bytes/vector (m=4, k=16 → 2 BYTES packed)
@@ -653,8 +625,9 @@ object Similarity {
     * ride as literals, the query slices broadcast. Like
     * [[bruteForceTopK]] this scores every (query, corpus) pair — PQ's
     * win is scan/shuffle WIDTH, not candidate count; compose with the
-    * IVF cell filter for candidate pruning when both are wanted. */
-  /** `refine`: ADC keeps a k×refine shortlist per query, then ONLY those
+    * IVF cell filter ([[ivfPqTopK]]) for candidate pruning.
+    *
+    * `refine`: ADC keeps a k×refine shortlist per query, then ONLY those
     * rows join back to the corpus for an exact-cosine re-rank — the
     * standard PQ pipeline (coarse scores prune, exact scores decide).
     * The exact kernel touches queries×k×refine embeddings instead of the
@@ -663,30 +636,7 @@ object Similarity {
   def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int = 5,
       m: Int = 4, kCent: Int = 16, iters: Int = 2, refine: Int = 4): DataFrame = {
     val books = pqFit(corpus, m, kCent, iters)
-    val enc = pqEncode(corpus, books)
-      .withColumnRenamed("vec_id", "neighbor_id")
-    val q = queries.select(col("vec_id").as("query_id"),
-      unitCol(col("embedding")).as("q_unit"))
-      .select(Seq(col("query_id"), col("q_unit")) ++
-        adcLutCols(books, col("q_unit")): _*)
-    val score = adcLutScore(m)
-    val wAdc = Window.partitionBy("query_id").orderBy(col("approx_cosine").desc, col("neighbor_id"))
-    val shortlist = enc.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("approx_cosine", score)
-      .withColumn("adc_rank", row_number().over(wAdc))
-      .filter(col("adc_rank") <= k * refine)
-      .select("query_id", "neighbor_id", "q_unit")
-    // exact re-rank of the shortlist only: broadcast (queries × k·refine
-    // rows) against the corpus embeddings — cosine is scale-invariant,
-    // so the unit query against the raw corpus vector is the true cosine
-    val wX = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
-    corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("c_emb"))
-      .join(broadcast(shortlist), "neighbor_id")
-      .withColumn("cosine", cosine(col("q_unit"), col("c_emb")))
-      .withColumn("rank", row_number().over(wX))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine", "rank")
+    adcSearch(pqEncode(corpus, books), None, books, corpus, queries, k, 0, refine)
   }
 
   /** zip_with dot of two array columns (non-literal sides). */
@@ -717,6 +667,54 @@ object Similarity {
   private def adcLutScore(m: Int): Column =
     (0 until m).map(s => element_at(col(s"lut$s"), col(s"c$s") + 1)).reduce(_ + _)
 
+  /** The one ADC search under [[pqTopK]], [[ivfPqTopK]] and
+    * [[queryAnnIndex]]. `index` holds `(vec_id, c0..c{m-1})` codes under
+    * `books`. With a `cell` column each query joins only the rows of its
+    * `nprobe` nearest `cents` (the IVF probe); without one every query
+    * scores every row (a broadcast cross join). Query side: the unit
+    * vector, the probed cells and the per-query ADC tables (query rows
+    * are broadcast-small by contract, so rebuilding the KB-sized tables
+    * per probe row is noise next to the per-candidate fold they
+    * eliminate). The ADC scores keep a k×`refine` shortlist per query,
+    * which joins back to the corpus (broadcast — queries×k×refine rows)
+    * for the exact re-rank: cosine is scale-invariant, so the unit query
+    * against the raw corpus vector is the true cosine. */
+  private def adcSearch(index: DataFrame, cents: Option[Array[Array[Double]]],
+      books: Array[Array[Array[Double]]], corpus: DataFrame, queries: DataFrame,
+      k: Int, nprobe: Int, refine: Int): DataFrame = {
+    graft.functions.GraftFunctions.register(corpus.sparkSession)
+    val cell = Seq("cell").filter(index.columns.contains)
+    val q = queries.select(Seq(col("vec_id").as("query_id"),
+      unitCol(col("embedding")).as("q_unit")) ++
+      cell.map(explode(nearestCells(cents.get, nprobe)).as(_)): _*)
+      .select(Seq(col("query_id"), col("q_unit")) ++ cell.map(col) ++
+        adcLutCols(books, col("q_unit")): _*)
+    val idx = index.withColumnRenamed("vec_id", "neighbor_id")
+    val pairs = if (cell.isEmpty) idx.crossJoin(broadcast(q))
+      else idx.join(broadcast(q), cell)
+    val wAdc = Window.partitionBy("query_id")
+      .orderBy(col("approx_cosine").desc, col("neighbor_id"))
+    val shortlist = pairs
+      .filter(col("query_id") =!= col("neighbor_id"))
+      .withColumn("approx_cosine", adcLutScore(books.length))
+      .withColumn("adc_rank", row_number().over(wAdc))
+      .filter(col("adc_rank") <= k * refine)
+      .select("query_id", "neighbor_id", "q_unit")
+    rankTopK(corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("c_emb"))
+      .join(broadcast(shortlist), "neighbor_id")
+      .withColumn("cosine", cosine(col("q_unit"), col("c_emb"))), k)
+  }
+
+  /** The fitted IVF-PQ index: centroids, codebooks and the per-vector
+    * `(vec_id, cell, c0..c{m-1})` rows, built in ONE corpus projection
+    * after the composed fit (one seed collect + one fused job per
+    * round, [[lloydFit]]). */
+  private def ivfPqIndex(corpus: DataFrame, nlist: Int, m: Int, kCent: Int, iters: Int)
+      : (Array[Array[Double]], Array[Array[Array[Double]]], DataFrame) = {
+    val (cents, books) = lloydFit(corpus, Some(nlist), Some((m, kCent)), iters)
+    (cents.get, books.get, pqCodeCols(corpus, books.get, keep = Seq(cellOf(cents.get) -> "cell")))
+  }
+
   /** IVF-PQ (Jégou 2011 §IV / the FAISS `IVFx,PQy` index — the actual
     * 100 TB ANN architecture), composed from this file's two halves,
     * which prune ORTHOGONAL costs:
@@ -744,37 +742,8 @@ object Similarity {
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, k: Int = 5,
       nlist: Int = 16, nprobe: Int = 4, m: Int = 4, kCent: Int = 16,
       iters: Int = 2, refine: Int = 4): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
-    // one seed collect + one fused job per round fits both halves
-    val (cents, books) = fitIvfPq(corpus, nlist, m, kCent, iters)
-    // the standing index: (id, cell, m codes) via the CSE'd projections
-    val index = pqCodeCols(corpus, books, keep = Seq(cellOf(cents) -> "cell"))
-      .withColumnRenamed("vec_id", "neighbor_id")
-    // query side: unit vector, the nprobe nearest cells, and the
-    // per-query ADC tables (query rows are broadcast-small by contract,
-    // so rebuilding the KB-sized tables per probe row is noise next to
-    // the per-candidate fold they eliminate)
-    val q = queries.select(col("vec_id").as("query_id"),
-      unitCol(col("embedding")).as("q_unit"),
-      explode(nearestCells(cents, nprobe)).as("cell"))
-      .select(Seq(col("query_id"), col("q_unit"), col("cell")) ++
-        adcLutCols(books, col("q_unit")): _*)
-    val score = adcLutScore(m)
-    val wAdc = Window.partitionBy("query_id")
-      .orderBy(col("approx_cosine").desc, col("neighbor_id"))
-    val shortlist = index.join(broadcast(q), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("approx_cosine", score)
-      .withColumn("adc_rank", row_number().over(wAdc))
-      .filter(col("adc_rank") <= k * refine)
-      .select("query_id", "neighbor_id", "q_unit")
-    val wX = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
-    corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("c_emb"))
-      .join(broadcast(shortlist), "neighbor_id")
-      .withColumn("cosine", cosine(col("q_unit"), col("c_emb")))
-      .withColumn("rank", row_number().over(wX))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine", "rank")
+    val (cents, books, index) = ivfPqIndex(corpus, nlist, m, kCent, iters)
+    adcSearch(index, Some(cents), books, corpus, queries, k, nprobe, refine)
   }
 
   // ------------------------------------------------ persisted ANN index
@@ -794,61 +763,61 @@ object Similarity {
   // needs real embeddings, so it joins the k×refine shortlist back to
   // the corpus (broadcast — queries×k×refine rows).
 
-  /** One line per centroid/codebook vector — deterministic, greppable,
-    * the manifest-file discipline applied to a model artifact. */
-  private def fmtVec(v: Array[Double]): String = v.mkString(",")
-  private def parseVec(s: String): Array[Double] =
-    s.split(',').map(_.toDouble)
+  /** The `_model/model.txt` codec: a `key=value` header, then one line
+    * per centroid (`cent=i|v`) and per codebook vector (`book=s|j|v`) —
+    * deterministic, greppable, the manifest-file discipline applied to a
+    * model artifact. The only code that writes or parses the file. */
+  private object AnnModel {
+    private def file(path: String) = new org.apache.hadoop.fs.Path(s"$path/_model/model.txt")
+    private def fmtVec(v: Array[Double]): String = v.mkString(",")
+    private def parseVec(s: String): Array[Double] = s.split(',').map(_.toDouble)
+
+    def write(spark: org.apache.spark.sql.SparkSession, path: String, nlist: Int,
+        kCent: Int, cents: Array[Array[Double]], books: Array[Array[Array[Double]]]): Unit = {
+      val lines: Seq[String] =
+        Seq(s"nlist=$nlist", s"m=${books.length}", s"kcent=$kCent",
+          s"dsub=${books.head.head.length}") ++
+          cents.zipWithIndex.map { case (c, i) => s"cent=$i|${fmtVec(c)}" }.toSeq ++
+          books.zipWithIndex.flatMap { case (b, s) =>
+            b.zipWithIndex.map { case (c, j) => s"book=$s|$j|${fmtVec(c)}" }.toSeq
+          }.toSeq
+      val mp = file(path)
+      val out = mp.getFileSystem(spark.sparkContext.hadoopConfiguration).create(mp, true)
+      try out.write(lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+      finally out.close()
+    }
+
+    /** The persisted model: (centroids, codebooks). */
+    def read(spark: org.apache.spark.sql.SparkSession, path: String)
+        : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
+      val mp = file(path)
+      val in = mp.getFileSystem(spark.sparkContext.hadoopConfiguration).open(mp)
+      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+      val lines = text.split("\n").filter(_.nonEmpty)
+      val hdr = lines.filter(l => !l.startsWith("cent=") && !l.startsWith("book="))
+        .map { l => val i = l.indexOf('='); l.substring(0, i) -> l.substring(i + 1).toInt }
+        .toMap
+      val cents = lines.filter(_.startsWith("cent=")).map { l =>
+        val Array(i, v) = l.stripPrefix("cent=").split('|')
+        i.toInt -> parseVec(v)
+      }.sortBy(_._1).map(_._2)
+      val bookRows = lines.filter(_.startsWith("book=")).map { l =>
+        val parts = l.stripPrefix("book=").split('|')
+        (parts(0).toInt, parts(1).toInt, parseVec(parts(2)))
+      }
+      val books = Array.tabulate(hdr("m")) { s =>
+        bookRows.filter(_._1 == s).sortBy(_._2).map(_._3)
+      }
+      (cents, books)
+    }
+  }
 
   /** Fit + persist the IVF-PQ index for `corpus` under `path`. */
   def buildAnnIndex(corpus: DataFrame, path: String, nlist: Int = 16,
       m: Int = 4, kCent: Int = 16, iters: Int = 2): Unit = {
-    val spark = corpus.sparkSession
-    graft.functions.GraftFunctions.register(spark)
-    // one seed collect + one fused job per round fits both halves
-    val (cents, books) = fitIvfPq(corpus, nlist, m, kCent, iters)
-    val dsub = books.head.head.length
-    pqCodeCols(corpus, books, keep = Seq(cellOf(cents) -> "cell"))
-      .select(Seq(col("vec_id"), col("cell")) ++
-        (0 until m).map(s => col(s"c$s")): _*)
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/index")
-    val lines: Seq[String] =
-      Seq(s"nlist=$nlist", s"m=$m", s"kcent=$kCent", s"dsub=$dsub") ++
-        cents.zipWithIndex.map { case (c, i) => s"cent=$i|${fmtVec(c)}" }.toSeq ++
-        books.zipWithIndex.flatMap { case (b, s) =>
-          b.zipWithIndex.map { case (c, j) => s"book=$s|$j|${fmtVec(c)}" }.toSeq
-        }.toSeq
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val mp = new org.apache.hadoop.fs.Path(s"$path/_model/model.txt")
-    val fs = mp.getFileSystem(hconf)
-    val out = fs.create(mp, true)
-    try out.write(lines.mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  /** The persisted model: (centroids, codebooks). */
-  private def loadModel(spark: org.apache.spark.sql.SparkSession, path: String)
-      : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    val mp = new org.apache.hadoop.fs.Path(s"$path/_model/model.txt")
-    val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(mp)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val lines = text.split("\n").filter(_.nonEmpty)
-    val hdr = lines.filter(l => !l.startsWith("cent=") && !l.startsWith("book="))
-      .map { l => val i = l.indexOf('='); l.substring(0, i) -> l.substring(i + 1).toInt }
-      .toMap
-    val cents = lines.filter(_.startsWith("cent=")).map { l =>
-      val Array(i, v) = l.stripPrefix("cent=").split('|')
-      i.toInt -> parseVec(v)
-    }.sortBy(_._1).map(_._2)
-    val bookRows = lines.filter(_.startsWith("book=")).map { l =>
-      val parts = l.stripPrefix("book=").split('|')
-      (parts(0).toInt, parts(1).toInt, parseVec(parts(2)))
-    }
-    val books = Array.tabulate(hdr("m")) { s =>
-      bookRows.filter(_._1 == s).sortBy(_._2).map(_._3)
-    }
-    (cents, books)
+    val (cents, books, index) = ivfPqIndex(corpus, nlist, m, kCent, iters)
+    index.write.mode("overwrite").partitionBy("cell").parquet(s"$path/index")
+    AnnModel.write(corpus.sparkSession, path, nlist, kCent, cents, books)
   }
 
   /** Top-k against a [[buildAnnIndex]] index without refitting anything:
@@ -858,30 +827,8 @@ object Similarity {
       corpus: DataFrame, queries: DataFrame, k: Int = 5, nprobe: Int = 4,
       refine: Int = 4): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    val (cents, books) = loadModel(spark, path)
-    val m = books.length
-    val index = spark.read.parquet(s"$path/index")
-      .withColumnRenamed("vec_id", "neighbor_id")
-    val q = queries.select(col("vec_id").as("query_id"),
-      unitCol(col("embedding")).as("q_unit"),
-      explode(nearestCells(cents, nprobe)).as("cell"))
-      .select(Seq(col("query_id"), col("q_unit"), col("cell")) ++
-        adcLutCols(books, col("q_unit")): _*)
-    val score = adcLutScore(m)
-    val wAdc = Window.partitionBy("query_id")
-      .orderBy(col("approx_cosine").desc, col("neighbor_id"))
-    val shortlist = index.join(broadcast(q), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("approx_cosine", score)
-      .withColumn("adc_rank", row_number().over(wAdc))
-      .filter(col("adc_rank") <= k * refine)
-      .select("query_id", "neighbor_id", "q_unit")
-    val wX = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
-    corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("c_emb"))
-      .join(broadcast(shortlist), "neighbor_id")
-      .withColumn("cosine", cosine(col("q_unit"), col("c_emb")))
-      .withColumn("rank", row_number().over(wX))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine", "rank")
+    val (cents, books) = AnnModel.read(spark, path)
+    adcSearch(spark.read.parquet(s"$path/index"), Some(cents), books, corpus, queries,
+      k, nprobe, refine)
   }
 }

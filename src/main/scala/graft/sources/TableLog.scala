@@ -320,9 +320,12 @@ private[sources] trait TableLog { self: VersionedTable.type =>
   private def checkpointChunk(snap: Manifest, files: Seq[String]): Seq[String] =
     statLines(files, snap.stats) ++ rowLines(files, snap.rowCounts) ++ files
 
-  /** The pointer lines a multi-part checkpoint's main file adds. */
-  private def checkpointPointer(nFiles: Int, nParts: Int): Seq[String] =
-    Seq(s"reader=$SupportedReaderVersion", s"nfiles=$nFiles", s"parts=$nParts")
+  /** The pointer lines a multi-part checkpoint's main file adds to its
+    * header `hdr`: the `reader=` marker unless [[propsLines]] already put
+    * it there, then the file and part counts. */
+  private def checkpointPointer(hdr: Seq[String], nFiles: Int, nParts: Int): Seq[String] =
+    Seq(s"reader=$SupportedReaderVersion").filterNot(hdr.contains) ++
+      Seq(s"nfiles=$nFiles", s"parts=$nParts")
 
   /** The one parser: a manifest's or checkpoint's header lines and body
     * (the data-file paths), read from `p`. */
@@ -880,7 +883,7 @@ private[sources] trait TableLog { self: VersionedTable.type =>
       // unfixable retroactively; keep pre-feature readers off tables
       // whose snapshots exceed the part limit.)
       writeClaimed(hfs, new Path(root, CheckpointDir), target,
-        (globalHdr ++ checkpointPointer(snap.files.size, chunks.size))
+        (globalHdr ++ checkpointPointer(globalHdr, snap.files.size, chunks.size))
           .mkString("", "\n", "\n"),
         onLost = () => ())
     }

@@ -46,6 +46,21 @@ class LogFormatSpec extends SparkSpec {
       Map("graft.checkpointInterval" -> "4", "owner" -> "golden|team"))
   }
 
+  test("a multi-part checkpoint with a second reader= line reads back the same") {
+    // the shape earlier writers left: the pointer repeated the `reader=2`
+    // marker that the property lines already carry
+    val t = goldenCopy()
+    Seq("v00000004.checkpoint", "v00000008.checkpoint").foreach { f =>
+      val p = Paths.get(t, "_checkpoints", f)
+      val lines = Files.readAllLines(p).asScala.toSeq
+      val at = lines.indexWhere(_.startsWith("nfiles="))
+      assert(at > 0 && lines.count(_ == "reader=2") === 1)
+      Files.write(p, (lines.patch(at, Seq("reader=2"), 0) :+ "").mkString("\n").getBytes("UTF-8"))
+    }
+    val want = Files.readAllLines(golden.resolve("reads.txt")).asScala.toSeq
+    assert(describe(spark, t) === want)
+  }
+
   test("the golden sequence writes the golden log again, line for line") {
     val t = Files.createTempDirectory("golden_rewrite").toString
     writeSequence(spark, t)

@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.similarity.Similarity
@@ -318,4 +321,46 @@ class SimilaritySpec extends SparkSpec {
     assert(plan.toLowerCase.contains("dynamicpruning"),
       s"expected dynamic partition pruning on cell in:\n${plan.take(3000)}")
   }
+
+  /** A search result's rows in rank order, for exact comparison. */
+  private def ranked(df: DataFrame) = df.orderBy("query_id", "rank").collect().toSeq
+
+  test("ivfTopK probing every cell returns exactly bruteForceTopK's rows") {
+    assert(ranked(Similarity.ivfTopK(emb, queries, k = 5, nprobe = 16)) ===
+      ranked(Similarity.bruteForceTopK(emb, queries, 5)))
+  }
+
+  test("ivfPqTopK with one cell returns exactly pqTopK's rows") {
+    // one cell: the cell join and the cross join score the same pairs
+    // against the same codebooks
+    assert(ranked(Similarity.ivfPqTopK(emb, queries, nlist = 1, nprobe = 1)) ===
+      ranked(Similarity.pqTopK(emb, queries)))
+  }
+
+  test("ANN model format: buildAnnIndex writes the golden model.txt, queryAnnIndex answers like ivfPqTopK") {
+    val fx = SimilaritySpec.annFixture(spark)
+    val path = Files.createTempDirectory("graft_annfmt").toString
+    Similarity.buildAnnIndex(fx, path, nlist = 4, m = 2, kCent = 4)
+    val got = new String(Files.readAllBytes(Paths.get(path, "_model", "model.txt")), "UTF-8")
+    val want = new String(Files.readAllBytes(SimilaritySpec.GoldenModel), "UTF-8")
+    assert(got === want)
+    val q = fx.filter(col("vec_id") < 6)
+    assert(ranked(Similarity.queryAnnIndex(spark, path, fx, q, k = 3, nprobe = 2)) ===
+      ranked(Similarity.ivfPqTopK(fx, q, k = 3, nlist = 4, nprobe = 2, m = 2, kCent = 4)))
+  }
+}
+
+object SimilaritySpec {
+  /** The model file [[annFixture]]'s index was written with. */
+  val GoldenModel = Paths.get("src/test/resources/golden_ann/model.txt")
+
+  /** 48 vectors of 8 dims from a closed form, exact in double: four
+    * clusters (a 4.0 offset on the dims congruent to the id mod 4) plus a
+    * deterministic wobble in [-1, 1]. One partition, so every Lloyd round
+    * sums its rows in one order. */
+  def annFixture(spark: SparkSession): DataFrame =
+    spark.range(0, 48, 1, 1).select(col("id").as("vec_id"),
+      array((0 until 8).map(d =>
+        when(col("id") % 4 === d % 4, lit(4.0)).otherwise(lit(0.0)) +
+          ((col("id") * (d + 3)) % 17 - 8) / 8.0): _*).as("embedding"))
 }
