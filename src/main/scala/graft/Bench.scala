@@ -20,9 +20,9 @@ import org.apache.spark.sql.functions.{count, lit}
   *     code nonzero — a broken query can never masquerade as a fast one.
   */
 object Bench {
-  /** The local session every measurement main (Bench, Verify, Probe,
-    * Stress, Sweep) runs in: `local[$SPARK_GRAFT_CPUS]` with as many
-    * shuffle partitions as cores, UTC, the graft SQL extensions, nanosecond
+  /** The local session every main (Bench, Verify, Probe, Sweep) runs
+    * in: `local[$SPARK_GRAFT_CPUS]` with as many shuffle
+    * partitions as cores, UTC, the graft SQL extensions, nanosecond
     * parquet timestamps read as longs, and no UI. `defaultCpus` is the
     * core count when `SPARK_GRAFT_CPUS` is unset. */
   def session(defaultCpus: String, logLevel: String = "ERROR"): SparkSession = {

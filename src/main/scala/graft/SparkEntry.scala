@@ -153,7 +153,8 @@ object SparkEntry {
     * data file owns a value band and the manifest's footer stats give
     * `readWhere` real files to skip (numeric range + string IN pruning
     * both fire; the driver compare pins CONTENT — `readWhere ≡ filter` —
-    * while the skipping itself is spec/Stress-measured). */
+    * while the skipping itself is spec-asserted and measured in
+    * BASELINE.md "10× scale stress", Corpus 10 and 11). */
   private def buildSkipTable(s: SparkSession, dir: String): String =
     vtFixtures.getOrElseUpdate(("skip", dir), {
       val tbl = java.nio.file.Files.createTempDirectory("graft_vtw").toString
@@ -1459,7 +1460,8 @@ object SparkEntry {
     "q_se" -> ((s, dir) => Analytics.orderActivityByNation(
       Tables.customer(s, dir), Tables.orders(s, dir), Tables.nation(s, dir))),
     // salted join: result must equal the plain join (the oracle IS the
-    // plain join); the salt's value shows on skewed corpora (see Stress)
+    // plain join); the salt's value shows on skewed corpora (BASELINE.md
+    // "10× scale stress", Corpus 4)
     "q_sk" -> ((s, dir) => {
       val sv = silver(s, dir).filter(col("zone_id").isNotNull)
       val zoneDim = sv.groupBy("zone_id").agg(count(lit(1)).as("zone_events"))

@@ -3,13 +3,12 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Full-surface 10× scale sweep: materializes a key-consistent 10× copy
-  * of every input table (sf0.1 × 10 ≈ sf1) and times EVERY
-  * `SparkEntry.queries` entry against it — the whole-surface complement
-  * to [[Stress]]'s per-operator corpora. The SimHash 482 s cliff was
-  * found by exactly this kind of sweep; per-query growth factors vs the
-  * sf0.1 bench are the "would this survive 100×" evidence BASELINE.md
-  * records for all 126 lines.
+/** Key-consistent 10× copy of every input table (sf0.1 × 10 ≈ sf1):
+  *
+  *   sbt "runMain graft.Sweep <src> <out>"
+  *
+  * writes the copy to `out`; `Probe <out> <keys>` then times any keys
+  * against it (cold, then warm).
   *
   * Scaling model ("corpus grows, density doesn't"):
   *   - facts (`lineitem orders customer supplier part events documents
@@ -26,10 +25,7 @@ import org.apache.spark.sql.functions._
   *   - embeddings get deterministic per-component hash noise (±0.1):
   *     identical replicas would pile into the same LSH/IVF buckets and
   *     measure the dup-heavy regime instead of corpus growth.
-  *
-  * Prints one `SWEEP <name> <sec> s (<rows> rows)` line per query plus a
-  * final full-precision JSON dict (its own format — NOT under Bench's
-  * 2 KB archive contract).
+  * Copy 0 of every table is the source itself.
   */
 object Sweep {
   private val Off = 100000000L
@@ -95,52 +91,9 @@ object Sweep {
   }
 
   def main(args: Array[String]): Unit = {
-    val src = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val out = if (args.length > 1) args(1) else "/tmp/graft_10x"
+    require(args.length == 2, "usage: Sweep <src> <out>")
     val spark = Bench.session(defaultCpus = "32")
-
-    if (!new java.io.File(s"$out/embeddings.parquet/_SUCCESS").exists()
-        || sys.env.get("SPARK_GRAFT_SWEEP_REBUILD").contains("1"))
-      materialize(spark, src, out)
-
-    // Optional third arg: comma-separated query keys — sweep only those
-    // (pricing newly added lines against an already-materialized corpus
-    // without re-timing the whole surface).
-    val keep: String => Boolean =
-      if (args.length > 2) args(2).split(",").toSet else (_: String) => true
-
-    // Warm every code path at the 1× source (JIT + codegen caches) so the
-    // timed 10× pass measures scaling, not cold-start.
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1).filter(q => keep(q._1))
-    SparkEntry.warmCache(spark, src)
-    ordered.foreach { case (name, fn) =>
-      try Bench.force(fn(spark, src))
-      catch { case e: Throwable =>
-        System.err.println(s"[sweep] warmup failed for $name: ${e.getMessage}")
-      }
-    }
-    SparkEntry.clearCache()
-
-    SparkEntry.warmCache(spark, out)
-    var errors = Map.empty[String, String]
-    val results = ordered.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      val timing =
-        try {
-          val n = Bench.force(fn(spark, out))
-          val s = (System.nanoTime() - t0) / 1e9
-          println(f"SWEEP $name%-12s $s%8.2f s  ($n rows)")
-          Some(s)
-        } catch { case e: Throwable =>
-          errors += (name -> Option(e.getMessage).getOrElse(e.getClass.getName).take(120))
-          println(s"SWEEP $name FAILED: ${errors(name)}")
-          None
-        }
-      name -> timing
-    }
-    val dict = results.map { case (k, v) =>
-      s""""$k":${v.fold("null")(d => f"$d%.2f")}""" }.mkString("{", ",", "}")
-    println(s"""SWEEP_JSON {"total":${results.flatMap(_._2).sum.round},"queries":$dict,"errors":${errors.size}}""")
-    if (errors.nonEmpty) sys.exit(1)
+    materialize(spark, args(0), args(1))
+    spark.stop()
   }
 }

@@ -320,7 +320,14 @@ object Dedup {
     * BOTH the candidate join and the per-doc set sizes (standard
     * stop-shingle removal). Similarity is then exact Jaccard over the
     * DF-filtered shingle sets. `None` disables the cap for exact
-    * whole-set Jaccard on corpora known to have no hot shingles. */
+    * whole-set Jaccard on corpora known to have no hot shingles.
+    *
+    * PPJoin prefix filtering (candidates from rarity-ordered prefixes,
+    * exact verify against the full sets) gives byte-identical output but
+    * measured slower on both 10× corpora — 51.4 vs 26.5 s dup-light,
+    * 279.8 vs 66.5 s dup-dense — because verification replicates each
+    * doc's full shingle set once per candidate pair (BASELINE.md "10×
+    * scale stress", Corpus 1 and 2). */
   def ngramJaccard(docs: DataFrame, n: Int = 3, threshold: Double = 0.5,
       dfMax: Option[Int] = Some(DefaultStopShingleDf)): DataFrame =
     ngramJaccardFromShingles(shingleTable(docs, n), threshold, dfMax)
@@ -356,95 +363,13 @@ object Dedup {
       .select("doc_a", "doc_b", "both_cnt", "jaccard")
   }
 
-  /** Prefix-filtered exact n-gram Jaccard — same output as
-    * [[ngramJaccard]], candidate generation cost cut by the PPJoin prefix
-    * principle (Xiao et al. 2008, "Efficient Similarity Joins for Near
-    * Duplicate Detection"; also Chaudhuri et al.'s SSJoin):
-    *
-    * For Jaccard ≥ t, the overlap obeys I ≥ t·max(|A|,|B|) (from
-    * I ≥ t/(1+t)·(|A|+|B|) and |B| ≥ I). Order every doc's shingles by a
-    * GLOBAL rarity order (df asc, shingle asc); if a qualifying pair
-    * shared nothing in A's first |A| − ⌈t·|A|⌉ + 1 shingles, all shared
-    * shingles would sit in the suffix of size ⌈t·|A|⌉ − 1 < t·|A| ≤ I —
-    * contradiction. So pairs need only be GENERATED from prefix rows
-    * (both sides), shrinking the self-join volume from Σ df² to
-    * Σ df_prefix² — and rarity ordering makes prefixes land on the
-    * LOW-df shingles, the cheapest join keys. Each candidate is then
-    * verified exactly against the full shingle sets (one sorted array
-    * per doc, `array_intersect` in a codegen'd projection), so the
-    * result is byte-identical to the unfiltered path (spec-asserted).
-    * The prefix is ~(1−t)·|A|+1 shingles → join fan-out scales by
-    * (1−t)²: 25% at t = 0.5, 4% at t = 0.8. Composes with the `dfMax`
-    * stop-shingle cap, which bounds the worst single key either way.
-    *
-    * MEASURED VERDICT (Stress `ngram_*` lines, 50k docs): the plain
-    * capped join WINS IN BOTH REGIMES — dup-light stop-shingle corpus
-    * 26.5 s plain vs 51.4 s prefix (~2× slower: candidate join already
-    * cheap, prefix machinery pure overhead; a second, contended epoch
-    * measured 47.9 vs 46.3 s — parity at best, never faster),
-    * dup-DENSE 10-variant corpus 66.5 s plain vs 280 s prefix
-    * (~4× slower, same epoch). The dup-dense loss is
-    * structural, not tuning: verification joins every candidate pair
-    * against the FULL per-doc shingle arrays, so each doc's set is
-    * replicated once per surviving pair — on dup-dense data the pair
-    * count is what exploded, so the verify stage amplifies exactly when
-    * the prefix was supposed to save. The single-machine PPJoin wins
-    * come from memory-resident inverted indexes with positional
-    * early-termination, which a shuffle dataflow cannot express without
-    * this amplification; Spark's shared-shingle equi-join + map-side
-    * combine computes all intersections in one pass and IS the right
-    * distributed algorithm here. Kept as the documented, spec-verified
-    * negative result; use [[ngramJaccard]] (with `dfMax`, and a
-    * persisted [[shingleTable]] at corpus scale). */
-  def ngramJaccardPrefix(docs: DataFrame, n: Int = 3, threshold: Double = 0.5,
-      dfMax: Option[Int] = Some(DefaultStopShingleDf),
-      shingles: Option[DataFrame] = None): DataFrame = {
-    // The caller owns the persist lifecycle (pass a persisted shingle
-    // table via `shingles`, as Stress does): an internal persist() here
-    // could never be unpersisted before the lazy result executes, leaking
-    // cached storage for the session. Without `shingles` the explode is
-    // recomputed per plan branch — fine for specs, wrong for timing.
-    val ex = dfFiltered(shingles.getOrElse(shingleTable(docs, n)), dfMax)
-    // global rarity order: df asc, shingle asc (total, deterministic)
-    val df = ex.groupBy("shingle").agg(count(lit(1)).as("df"))
-    val pos = Window.partitionBy("doc_id").orderBy(col("df"), col("shingle"))
-    val ranked = ex.join(df, "shingle")
-      .withColumn("pos", row_number().over(pos))
-      .withColumn("sz", count(lit(1)).over(Window.partitionBy("doc_id")))
-    val prefix = ranked
-      .filter(col("pos") <= col("sz") - ceil(lit(threshold) * col("sz")) + 1)
-      .select("doc_id", "shingle")
-    val cands = prefix.alias("a")
-      .join(prefix.alias("b"),
-        col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-    // verification: exact intersection against the FULL sets
-    val sets = ex.groupBy("doc_id")
-      .agg(sort_array(collect_list(col("shingle"))).as("set"), count(lit(1)).as("n_shingles"))
-    // NO broadcast hint on the set tables: unlike the scalar sizes lookup
-    // in [[ngramJaccardFromShingles]], these rows carry full shingle
-    // arrays (corpus-text-sized in aggregate) — at scale this must stay
-    // a shuffle join on the doc keys; AQE may still broadcast at test SF
-    cands
-      .join(sets.alias("sa"), col("doc_a") === col("sa.doc_id"))
-      .join(sets.alias("sb"), col("doc_b") === col("sb.doc_id"))
-      .withColumn("both_cnt", size(array_intersect(col("sa.set"), col("sb.set"))).cast("long"))
-      .withColumn("jaccard",
-        col("both_cnt").cast("double") /
-          (col("sa.n_shingles") + col("sb.n_shingles") - col("both_cnt")))
-      .filter(col("jaccard") >= threshold)
-      .select("doc_a", "doc_b", "both_cnt", "jaccard")
-  }
-
-  /** The `dfMax` stop-shingle cap as a standalone stage (shared by the
-    * plain and prefix-filtered Jaccard paths). Anti-join against the STOP
-    * list (df > cap), not a join against the keep list: the stop set is
-    * only the heavy hitters (bounded by total_shingle_instances / cap),
-    * so AQE broadcasts it, while a keep-list join would shuffle the full
-    * vocabulary. The filter stays on the EXPLODED rows — no array
-    * re-group shuffle; sizes and the candidate join both read the
-    * filtered explode. */
+  /** The `dfMax` stop-shingle cap as a standalone stage. Anti-join
+    * against the STOP list (df > cap), not a join against the keep list:
+    * the stop set is only the heavy hitters (bounded by
+    * total_shingle_instances / cap), so AQE broadcasts it, while a
+    * keep-list join would shuffle the full vocabulary. The filter stays
+    * on the EXPLODED rows — no array re-group shuffle; sizes and the
+    * candidate join both read the filtered explode. */
   private def dfFiltered(exploded: DataFrame, dfMax: Option[Int]): DataFrame =
     dfMax match {
       case None => exploded
@@ -492,13 +417,9 @@ object Dedup {
     * per-branch column pruning defeats exchange reuse), 4 tokenize+hash
     * corpus scans at runtime where the window form pays 2 (one per
     * self-join side — the floor without persisting anchors), and the
-    * window rides the same per-fp exchange the anti-join needed anyway.
-    * At very large corpora set `persistAnchors = true` so the
-    * tokenize+hash runs once and both sides read the cached anchor
-    * table (token-stream-sized; stays resident for the result's
-    * lifetime — unpersist via the session catalog when done). */
+    * window rides the same per-fp exchange the anti-join needed anyway. */
   def substringDups(docs: DataFrame, k: Int = 10, minTokens: Int = 20,
-      dfMax: Int = DefaultStopShingleDf, persistAnchors: Boolean = false): DataFrame = {
+      dfMax: Int = DefaultStopShingleDf): DataFrame = {
     require(minTokens >= k, s"minTokens ($minTokens) must be >= k ($k)")
     val t = col("t")
     // overshoot-and-slice (see ngram shingles): windows past n-k+1 hash a
@@ -506,13 +427,12 @@ object Dedup {
     val fpRaw = transform(
       sequence(lit(1), greatest(size(t) - (k - 1), lit(1))),
       i => md5(concat_ws(" ", slice(t, i, lit(k)))))
-    val anchorsRaw = docs
+    val anchors = docs
       .select(col("doc_id"),
         filter(split(lower(col("text")), " "), x => x =!= "").as("t"))
       .select(col("doc_id"),
         posexplode(slice(fpRaw, lit(1), greatest(size(t) - (k - 1), lit(0)))))
       .select(col("doc_id"), (col("pos") + 1).as("pos"), col("col").as("fp"))
-    val anchors = if (persistAnchors) anchorsRaw.persist() else anchorsRaw
     val wFp = org.apache.spark.sql.expressions.Window.partitionBy("fp")
     val kept = anchors
       .withColumn("occurrences", count(lit(1)).over(wFp))
@@ -919,8 +839,9 @@ object Dedup {
     * (tiny by the same argument that lets it broadcast); the corpus is
     * still scanned exactly once, never shuffled.
     *
-    * Measured honestly (Stress, 50k docs / 5k-doc benchmark): ~2.4 s
-    * SLOWER than [[decontaminate]] at test scale — both are dominated by
+    * Measured at 50k docs with a 5k-doc benchmark (BASELINE.md "10×
+    * scale stress", Corpus 1): ~2.4 s SLOWER than [[decontaminate]] in
+    * one epoch, parity in another — both are dominated by
     * the shared shingle stage, and the bloom adds sketch-build jobs plus
     * a second corpus filter branch. Use this variant when the benchmark
     * key set is large enough (tens of millions of rows) that the exact

@@ -251,16 +251,18 @@ object Similarity {
   // result job — at bench scale the fits were pure sequential scheduler
   // latency (guide §1.2), and at cluster scale the explode shuffles
   // corpus×dim pre-aggregated rows it never needed to. roundAcc replaces
-  // the chain with ONE narrow treeAggregate job per round (guide §2.4
-  // shuffle removal): assignments stay the SAME codegen'd projection
+  // the chain with ONE narrow job per round (guide §2.4 shuffle
+  // removal): assignments stay the SAME codegen'd projection
   // (cellOf / PqCodes-over-unitCol), each (cell, dim) sum adds the same
   // double values in the same within-partition row order the hash
   // aggregate's partial buffers did, and mean = sum / count in one double
-  // division, exactly Average's final divide. On a single-split corpus
-  // the result is bit-identical; at multi-partition scale the partials
-  // merge in treeAggregate's combine order where the exchange merged
-  // them in fetch-arrival order — the same (allowlisted) accumulation-
-  // order class, with KB-sized driver traffic either way.
+  // division, exactly Average's final divide. Each partition folds its
+  // rows into one partial; the driver collects the partials and merges
+  // them in partition-index order, never in task-completion order. So a
+  // fit is a function of the corpus's partitioning alone: the same
+  // partitions give bit-identical centroids and codebooks on every run,
+  // and a single-split corpus gives the result the hash aggregate did.
+  // Driver traffic is one KB-sized partial per partition.
 
   /** Partial sums for one Lloyd round: k-means per (cell, dim) and/or PQ
     * per (subspace, cell, dim) counts and value sums. Null arrays when
@@ -365,7 +367,9 @@ object Similarity {
       }
       a
     }
-    corpus.select(kmCols ++ pqCols: _*).rdd.treeAggregate(zero)(seqOp, combOp)
+    corpus.select(kmCols ++ pqCols: _*).rdd
+      .mapPartitions(rows => Iterator(rows.foldLeft(zero)(seqOp)))
+      .collect().foldLeft(zero)(combOp)
   }
 
   /** New centroids from a round's sums: mean = sum / count per dim (the

@@ -341,7 +341,7 @@ object GraftDataSource {
     * its resolved snapshot as a pure insert feed, exactly like the
     * streaming face's bootstrap. Cost: one manifest-diff scan per
     * version in the range, never a table scan. */
-  private[sources] def changeFeed(spark: SparkSession, path: String,
+  private[graft] def changeFeed(spark: SparkSession, path: String,
       keys: Seq[String], start: Long, endOpt: Option[Long]): DataFrame = {
     val end = endOpt.getOrElse(VT.latestVersion(spark, path))
     require(start >= 0 && end >= start,

@@ -370,7 +370,8 @@ private[sources] trait Snapshots { self: VersionedTable.type =>
     * ([[optimize]] with `zorderCols`) a 2-D range predicate prunes to the
     * files whose rectangle intersects the query box — file-level
     * skipping on top of the row-group skipping parquet already does
-    * (both measured in the Stress harness). The predicate is
+    * (both measured in BASELINE.md "10× scale stress", Corpus 10 and
+    * 11). The predicate is
     * additionally applied as a normal filter, so pruning is pure
     * optimization — unsupported predicate shapes just read the full
     * list. Returns the pruned DataFrame; [[prunedFiles]] exposes the

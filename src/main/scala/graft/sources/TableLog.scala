@@ -798,31 +798,6 @@ private[sources] trait TableLog { self: VersionedTable.type =>
     writeCheckpointAt(hfs, root, version)
   }
 
-  /** Stress seam: checkpoint the HEAD version unconditionally (cadence
-    * ignored, an existing checkpoint file deleted first) and time the
-    * write and a cold read — the checkpoint cost-curve measurement
-    * behind BASELINE's file-count scaling entry. Returns
-    * (writeSec, readSec, fileCount). */
-  private[graft] def checkpointCost(spark: SparkSession, path: String)
-      : (Double, Double, Int) = {
-    val (hfs, root) = fs(spark, path)
-    val v = versions(hfs, root).last
-    val target = checkpointPath(root, v)
-    if (hfs.exists(target)) hfs.delete(target, false)
-    val ckDir = new Path(root, CheckpointDir)
-    if (hfs.exists(ckDir))
-      hfs.listStatus(ckDir).map(_.getPath)
-        .filter(_.getName.startsWith(target.getName + ".p"))
-        .foreach(hfs.delete(_, false)) // stale parts from a prior measure
-    val w0 = System.nanoTime()
-    writeCheckpointAt(hfs, root, v)
-    val wSec = (System.nanoTime() - w0) / 1e9
-    val r0 = System.nanoTime()
-    val files = readCheckpoint(hfs, root, v).map(_._1.files.size).getOrElse(0)
-    val rSec = (System.nanoTime() - r0) / 1e9
-    (wSec, rSec, files)
-  }
-
   private[sources] def writeCheckpointAt(hfs: FileSystem, root: Path, version: Long): Unit = {
     val target = checkpointPath(root, version)
     if (hfs.exists(target)) return

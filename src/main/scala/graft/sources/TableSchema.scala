@@ -70,7 +70,8 @@ private[sources] trait TableSchema { self: VersionedTable.type =>
     * evaluates EVERY constraint (each becomes a when(violated, name)
     * branch coalesced left-to-right in name order, so the reported
     * violation is deterministic), short-circuited by a limit-1 plan —
-    * N constraints cost one batch scan, not N (Stress-measured). `df`
+    * N constraints cost one batch scan, not N (BASELINE.md "10× scale
+    * stress", Corpus 11, `constraint_commit`). `df`
     * must already be aligned to the snapshot schema so constraints on
     * columns the batch omits see NULL, not an analysis error. */
   private[sources] def enforceConstraints(df: DataFrame, cks: Map[String, String],

@@ -77,4 +77,19 @@ class HarnessContractSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"manifest header literals outside the log module: " +
       offenders.mkString(", "))
   }
+
+  test("the library reads exactly three SPARK_GRAFT_* environment knobs") {
+    // core count, bench input dir and the bench key filter. Any other
+    // name under src/main is a mode switch no spec, bench or Verify run
+    // exercises
+    val knob = "SPARK_GRAFT_[A-Z0-9_]+".r
+    val walk = Files.walk(Paths.get("src/main"))
+    val names =
+      try walk.iterator.asScala
+        .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
+        .flatMap(p => knob.findAllIn(Files.readString(p)))
+        .toSet
+      finally walk.close()
+    assert(names === Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_BENCH_ONLY"))
+  }
 }

@@ -337,6 +337,21 @@ class SimilaritySpec extends SparkSpec {
       ranked(Similarity.pqTopK(emb, queries)))
   }
 
+  test("Lloyd fits are bit-identical run to run on a multi-partition corpus") {
+    // the per-round partials merge in partition order, not in the order
+    // the tasks happen to finish
+    val corpus = emb.repartition(8).cache()
+    assert(corpus.rdd.getNumPartitions === 8)
+    def bits(a: Array[Array[Double]]) =
+      a.map(_.map(java.lang.Double.doubleToRawLongBits).toSeq).toSeq
+    val fits = (1 to 5).map { _ =>
+      (bits(Similarity.kmeansFit(corpus, nlist = 8, iters = 2)),
+        Similarity.pqFit(corpus, m = 4, k = 16).map(bits).toSeq)
+    }
+    assert(fits.distinct.size === 1, "five fits of one corpus differ")
+    corpus.unpersist()
+  }
+
   test("ANN model format: buildAnnIndex writes the golden model.txt, queryAnnIndex answers like ivfPqTopK") {
     val fx = SimilaritySpec.annFixture(spark)
     val path = Files.createTempDirectory("graft_annfmt").toString

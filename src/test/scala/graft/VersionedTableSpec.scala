@@ -406,8 +406,9 @@ class VersionedTableSpec extends SparkSpec {
     assert(VersionedTable.prunedFiles(spark, t, c1).size === 1)
     assert(idSet(VersionedTable.readWhere(spark, t, c1)) === expected(c1))
     // the BETWEEN spelling must prune identically — the parser keeps it
-    // as a Between node (caught pruning nothing in the round-11 zorder
-    // Stress line), not the And the rewrite produces at analysis
+    // as a Between node (caught pruning nothing by the round-11
+    // `zorder_file_prune` measurement, BASELINE.md "10× scale stress",
+    // Corpus 11), not the And the rewrite produces at analysis
     val cb = "id BETWEEN 10 AND 20"
     assert(VersionedTable.prunedFiles(spark, t, cb).size === 1)
     assert(idSet(VersionedTable.readWhere(spark, t, cb)) === expected(c1))
@@ -2143,6 +2144,61 @@ class VersionedTableSpec extends SparkSpec {
     assert(idSet(VersionedTable.readVersion(spark, t)) === before)
     assert(idSet(VersionedTable.readWhere(spark, t, cond)) ===
       idSet(VersionedTable.readVersion(spark, t).filter(expr(cond))))
+  }
+
+  test("OPTIMIZE round-robin vs ZORDER layouts: identical hits through readVersion and readWhere") {
+    val t = freshTable()
+    val pts = (for (a <- 0L until 64L; b <- 0L until 64L) yield (a * 64 + b, a, b))
+      .toDF("id", "zone_id", "user_id")
+    VersionedTable.commit(pts.repartition(8), t, mode = "overwrite",
+      ts = "2026-01-01T00:00:00Z")
+    // v1 round-robin, v2 Z-ORDERed on (zone_id, user_id), same target size
+    VersionedTable.optimize(spark, t, targetFileBytes = 2L * 1024,
+      ts = "2026-01-02T00:00:00Z")
+    VersionedTable.optimize(spark, t, targetFileBytes = 2L * 1024,
+      zorderCols = Seq("zone_id", "user_id"), ts = "2026-01-03T00:00:00Z")
+    val cond = "zone_id BETWEEN 3 AND 9 AND user_id BETWEEN 40 AND 46"
+    val want = (for (a <- 3L to 9L; b <- 40L to 46L) yield a * 64 + b).toSet
+    Seq(1L, 2L).foreach { v =>
+      assert(idSet(VersionedTable.readVersion(spark, t, v).filter(expr(cond))) === want,
+        s"v$v readVersion")
+      assert(idSet(VersionedTable.readWhere(spark, t, cond, v)) === want, s"v$v readWhere")
+    }
+    // the z layout must actually skip files, or readWhere proves nothing
+    val total = VersionedTable.snapshotFiles(spark, t, 2L).size
+    val kept = VersionedTable.prunedFiles(spark, t, cond, 2L).size
+    assert(total >= 4 && kept < total, s"z layout kept $kept of $total files")
+  }
+
+  test("log lifecycle: 120 commitIfNew batches, maintain every 20 — opens flat, log bounded, rows and txn exact") {
+    val t = freshTable()
+    var opensEarly = 0L
+    var opensLate = 0L
+    (0 until 120).foreach { i =>
+      val o0 = VersionedTable.metadataOpens.get()
+      // a second stream that stops early: its txn manifests all expire
+      val app = if (i < 10) "early" else "life"
+      VersionedTable.commitIfNew(df(i.toLong), t, app, i.toLong,
+        ts = java.time.Instant.EPOCH.plusSeconds(i.toLong).toString)
+      val opens = VersionedTable.metadataOpens.get() - o0
+      if (i < 20) opensEarly = math.max(opensEarly, opens)
+      if (i >= 100) opensLate = math.max(opensLate, opens)
+      if (i % 20 == 19)
+        VersionedTable.maintain(spark, t, retainVersions = 10, graceMs = 0L,
+          ts = java.time.Instant.EPOCH.plusSeconds(100000L + i).toString)
+    }
+    // per-batch metadata reads stay O(1 + K) as the log ages
+    assert(opensLate <= opensEarly + VersionedTable.checkpointInterval,
+      s"per-batch metadata opens crept: early max $opensEarly, late max $opensLate")
+    // each maintain() expires the log below its anchor checkpoint
+    val nManifests = new java.io.File(s"$t/_manifests").list().length
+    val nCheckpoints = new java.io.File(s"$t/_checkpoints").list().length
+    assert(nManifests <= 30 && nCheckpoints <= 4,
+      s"log unbounded: $nManifests manifests, $nCheckpoints checkpoints")
+    assert(idSet(VersionedTable.readVersion(spark, t)) === (0L until 120L).toSet)
+    // txn watermarks survive every expireLog through the checkpoints
+    assert(VersionedTable.lastTxn(spark, t, "life") === Some(119L))
+    assert(VersionedTable.lastTxn(spark, t, "early") === Some(9L))
   }
 
   test("vacuum keeps clone-referenced files until the clone ref is released") {
